@@ -64,23 +64,12 @@ object AnnFlagship {
     val nVecs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_ann1m"
     val nClusters = if (args.length > 2) args(2).toInt else 1000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ann-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.build("graft-ann-flagship",
       // GRAFT_INDEX_DIR: durable index mode — a SECOND flagship run in a
       // fresh JVM then serves every ANN path from the parquet indexes
       // (assignment, codes, centroids, codebook) without rebuilding,
       // measuring pure serve cost the way a deployed cluster would see it
-      .config(graft.operators.Materialize.DirConf,
-        sys.env.getOrElse("GRAFT_INDEX_DIR", ""))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      graft.operators.Materialize.DirConf -> sys.env.getOrElse("GRAFT_INDEX_DIR", ""))
 
     // corpus geometry is part of the directory name: a run with a
     // different nVecs/nClusters against an existing workDir must never
@@ -179,7 +168,7 @@ object AnnFlagship {
       s""""$nm":{"recall":${r4(rec)},"sec":${r4(dt)}}""" }.mkString(",")
     val buildJson = builds.toSeq.sortBy(-_._2)
       .map { case (k, v) => s""""$k":${r4(v)}""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"ann_1m","n_vectors":$nVecs,"dim":${Similarity.Dim},"k":$K,"n_queries":$NQueries,"truth_pairs":$nTruth,"brute_sec":${r4(tBrute)},$methodJson,"index_build":$buildJson,"cpus":$cpus}""")
+    println(s"""{"metric":"ann_1m","n_vectors":$nVecs,"dim":${Similarity.Dim},"k":$K,"n_queries":$NQueries,"truth_pairs":$nTruth,"brute_sec":${r4(tBrute)},$methodJson,"index_build":$buildJson,"cpus":${Session.cpus}}""")
     spark.stop()
   }
 }

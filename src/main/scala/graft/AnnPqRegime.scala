@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import graft.operators.{Materialize, Similarity}
 
 /** PQ's memory-regime adjudication at 10M vectors (r9 verdict item 4):
@@ -33,25 +32,15 @@ object AnnPqRegime {
     val nVecs = args.headOption.map(_.toLong).getOrElse(10000000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_ann10m"
     val nClusters = if (args.length > 2) args(2).toInt else 1000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ann-pq-regime")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.build("graft-ann-pq-regime",
       // struct-buffer aggregates (the assignment argmax) run through
       // ObjectHashAggregate, whose sort-based fallback triggers at 128
       // in-memory keys by default — absurdly conservative for ~50 B
       // buffers: at 10M vectors the fallback sorted (and spilled) the
       // whole N×K scored stream. ~300k keys/task × 50 B ≈ 16 MB —
       // keep it hashed.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .config(Materialize.DirConf, sys.env.getOrElse("GRAFT_INDEX_DIR", ""))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4000000",
+      Materialize.DirConf -> sys.env.getOrElse("GRAFT_INDEX_DIR", ""))
 
     // the AnnFlagship corpus recipe — THE SAME generator, not a copy:
     // the cross-scale recall comparison in ANN_1M.md is only valid while
@@ -142,7 +131,7 @@ object AnnPqRegime {
       s""""k":$K,"n_queries":$NQueries,"truth_pairs":$nTruth,""" +
       s""""brute_sec":${r4(tBrute)},$methodJson,""" +
       s""""index_bytes":$sizeJson,"raw_corpus_bytes":$rawBytes,""" +
-      s""""index_build":$buildJson,"cpus":$cpus}""")
+      s""""index_build":$buildJson,"cpus":${Session.cpus}}""")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.util.concurrent.{FutureTask, TimeUnit, TimeoutException}
+import java.util.concurrent.TimeoutException
 
 /** Headline benchmark: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -176,145 +176,71 @@ object Bench {
   private val CalibIters = 25000000
 
   private def calibrate(spark: SparkSession, tag: String,
-      cpuOf: String => Long, drain: () => Unit): Double = {
-    val sc = spark.sparkContext
+      metrics: Metrics, timeoutSec: Long): Double = {
     import spark.implicits._
     val iters = CalibIters
     (1 to 3).map { _ =>
-      val before = { drain(); cpuOf(tag) }
-      sc.setJobGroup(tag, tag, interruptOnCancel = true)
-      try {
+      val before = metrics.group(tag).cpuNs
+      QueryRunner.run(spark, tag, timeoutSec) {
         spark.range(0, CalibTasks, 1, CalibTasks).as[Long].map { i =>
           var x = i + 0x9e3779b97f4a7c15L
           var j = 0
           while (j < iters) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; j += 1 }
           x
         }.filter(_ != 0L).count()
-      } finally sc.clearJobGroup()
-      drain()
-      (cpuOf(tag) - before) / 1e9
+      }.toTry.get
+      (metrics.group(tag).cpuNs - before) / 1e9
     }.min
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // covers the query's warm run (cold codegen, worst observed ~130s)
     // plus its timed run
     val queryTimeoutSec =
       sys.env.getOrElse("GRAFT_QUERY_TIMEOUT", "240").toLong
-    if (sys.env.getOrElse("GRAFT_KILL_STALE", "true") == "true")
-      try killStaleJvms() catch { case e: Throwable =>
-        System.err.println(s"[bench] stale-JVM sweep failed: $e") }
+    // GRAFT_ONLY=a,b,c restricts the run to named queries — an iteration
+    // aid for tuning a single operator; the full suite is the default.
+    val selected = QueryRunner.selected(SparkEntry.queries)
+    val fullRun = selected.size == SparkEntry.queries.size
+    try killStaleJvms() catch { case e: Throwable =>
+      System.err.println(s"[bench] stale-JVM sweep failed: $e") }
     // half the cores: an idle host sits near 0; a leftover competing JVM
     // or steal burst shows as ~cores. The 1-min average decays with ~1 min
     // time constant, so 60 s of budget rides out a just-killed JVM.
-    waitForQuietHost(cores = math.max(4, cpus.toInt / 2), maxWaitSec = 60)
-    // GRAFT_MASTER=local-cluster[...] measures across forked executor
-    // JVMs (evidence mode, not the graded configuration — see Cluster)
-    val spark = Cluster.configure(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE on by default since round 5: the round-4 twin artifacts
-      // measured AQE-on faster in aggregate (60.5 s vs 68.6 s) and 2.2×
-      // faster on the most expensive query (ensemble dedup's CC loop —
-      // coalescing + join re-planning on its small intermediate edge
-      // sets). The AQE-off twin remains the secondary artifact.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      // The generated-class cache defaults to 100 entries; this suite's 52
-      // queries compile several codegen units each, so two sequential
-      // passes over a 100-entry LRU evict-and-recompile in BOTH passes —
-      // measured as the r2 sessionize "outlier" (15.6 s in both passes vs
-      // 0.97 s warm; the plan itself was innocent). Static conf: must be
-      // set before the first session is created.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // a wedged broadcast must fail ONE query (and be recorded), not
-      // hang the run until the driver's wall-clock cap kills everything
-      .config("spark.sql.broadcastTimeout", "600")
-      // heartbeat headroom: local-mode heartbeats share the JVM with the
-      // executor threads; host CPU-steal bursts + GC must not accumulate
-      // 60 consecutive misses (the round-1 failure mode)
-      .config("spark.executor.heartbeatInterval", "20s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeat.maxFailures", "180")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val sc = spark.sparkContext
-    sc.setLogLevel(sys.env.getOrElse("GRAFT_LOG", "WARN"))
+    waitForQuietHost(cores = math.max(4, Session.cpus / 2), maxWaitSec = 60)
+    val spark = Session.build("graft-bench")
+    spark.sparkContext.setLogLevel(sys.env.getOrElse("GRAFT_LOG", "WARN"))
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Executor task CPU time per job group (= per query): the drift-
     // immune companion to wall-clock. Host CPU-steal bursts inflate
     // wall time but not task CPU; the regression detector prefers CPU
     // when both rounds carry it, so a contaminated host can no longer
     // burn a round of judging on phantom regressions.
-    val stageToGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val cpuNs =
-      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g != null) js.stageIds.foreach(sid => stageToGroup.put(sid, g))
-      }
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val g = stageToGroup.get(te.stageId)
-        if (g != null && te.taskMetrics != null)
-          cpuNs.computeIfAbsent(g,
-            _ => new java.util.concurrent.atomic.AtomicLong())
-            .addAndGet(te.taskMetrics.executorCpuTime)
-      }
-    })
-    def cpuSnap(name: String): Long =
-      Option(cpuNs.get(name)).map(_.get()).getOrElse(0L)
-    // listener events are async: drain the bus before reading a delta
-    // (LiveListenerBus.waitUntilEmpty is bytecode-public; fall back to a
-    // short sleep if the reflective call ever breaks)
-    def drainListeners(): Unit = try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      try bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      catch { case _: NoSuchMethodException =>
-        bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-          .invoke(bus, java.lang.Long.valueOf(10000L))
-      }
-    } catch { case _: Throwable => Thread.sleep(100) }
+    val metrics = Metrics.install(spark)
     val cpuSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // One watchdogged execution of a query: a worker thread (job group is
-    // thread-local) that a timeout can cancel without wedging the bench.
+    // One watchdogged execution of a query: a timeout cancels its job
+    // group without wedging the bench.
     def runOnce(name: String, fn: (SparkSession, String) => DataFrame,
         timed: Boolean): Double = {
-      val cpu0 = { drainListeners(); cpuSnap(name) }
-      val task = new FutureTask[Double](() => {
-        sc.setJobGroup(name, name, interruptOnCancel = true)
-        try {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        } finally sc.clearJobGroup()
-      })
-      val th = new Thread(task, s"bench-$name")
-      th.setDaemon(true)
-      th.start()
-      val dt = try task.get(queryTimeoutSec, TimeUnit.SECONDS) catch {
-        case _: TimeoutException =>
-          sc.cancelJobGroup(name)
-          if (timed) errors(name) = "Timeout"
-          -1.0
-        case e: Throwable =>
-          val c = if (e.getCause != null) e.getCause else e
-          if (timed) errors(name) = c.getClass.getSimpleName
+      val cpu0 = metrics.group(name).cpuNs
+      val dt = QueryRunner.run(spark, name, queryTimeoutSec) {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      } match {
+        case Right(t) => t
+        case Left(e) =>
+          if (timed) errors(name) = e match {
+            case _: TimeoutException => "Timeout"
+            case c => c.getClass.getSimpleName
+          }
           -1.0
       }
-      // queries that persist intermediates (LSH signature tables) must not
-      // bleed cache/memory pressure into the next query's measurement
-      spark.catalog.clearCache()
       // timed-pass CPU: the steady-state number (the warm pass burns
       // extra CPU on interpreted pre-JIT execution by design)
-      if (timed && dt >= 0) {
-        drainListeners()
-        cpuSecs(name) = (cpuSnap(name) - cpu0) / 1e9
-      }
+      if (timed && dt >= 0)
+        cpuSecs(name) = (metrics.group(name).cpuNs - cpu0) / 1e9
       val tag = if (timed) "" else " (warm)"
       System.err.println(f"[bench] $name%-28s ${if (dt < 0) "FAIL" else f"$dt%.2fs"}$tag")
       dt
@@ -325,42 +251,11 @@ object Bench {
     // interpreted 10-100x slower (measured: 1s queries spiking to
     // 30-60s, nondeterministically per run). By the time pass 2 reaches a
     // query, its methods compiled long ago — pass 2 measures steady-state
-    // execution, which is the thing being graded. Disable via
-    // GRAFT_WARM_PASS=false.
-    // GRAFT_ONLY=a,b,c restricts the run to named queries — an iteration
-    // aid for tuning a single operator; the full suite is the default.
-    // A selection that matches NOTHING (typo'd names) fails fast: the
-    // old fallback-to-full-suite silently escalated a one-query
-    // iteration loop into an hours-scale run nobody asked for. A blank
-    // GRAFT_ONLY (explicitly "all") still means the full suite.
-    val selected: Map[String, (SparkSession, String) => DataFrame] =
-      sys.env.get("GRAFT_ONLY") match {
-        case Some(names) =>
-          val keep = names.split(',').map(_.trim).filter(_.nonEmpty).toSet
-          if (keep.isEmpty) SparkEntry.queries
-          else {
-            val unknown = keep.diff(SparkEntry.queries.keySet)
-            if (unknown.nonEmpty)
-              System.err.println(s"[bench] GRAFT_ONLY names not in registry: " +
-                unknown.mkString(","))
-            val picked = SparkEntry.queries.filter { case (n, _) => keep(n) }
-            if (picked.isEmpty) {
-              System.err.println("[bench] FATAL: GRAFT_ONLY selected zero " +
-                "queries — check the names above")
-              spark.stop()
-              sys.exit(2)
-            }
-            picked
-          }
-        case None => SparkEntry.queries
-      }
-    val fullRun = selected.size == SparkEntry.queries.size
-    val calibStart = calibrate(spark, "calib_start", cpuSnap, drainListeners)
+    // execution, which is the thing being graded.
+    val calibStart = calibrate(spark, "calib_start", metrics, queryTimeoutSec)
     System.err.println(f"[bench] calib_start ${calibStart}%.2fs CPU (fixed work)")
     val warmTimes: Map[String, Double] =
-      if (sys.env.getOrElse("GRAFT_WARM_PASS", "true") == "true")
-        selected.map { case (n, fn) => n -> runOnce(n, fn, timed = false) }
-      else Map.empty
+      selected.map { case (n, fn) => n -> runOnce(n, fn, timed = false) }
     // both passes are complete executions of the query, so min(warm,
     // timed) is best-observed — it also shields a timed run that caught
     // a host CPU-steal burst (documented on this VM)
@@ -373,7 +268,7 @@ object Bench {
         else t // warm run was still a complete, clean execution — report it
       name -> dt
     }
-    val calibEnd = calibrate(spark, "calib_end", cpuSnap, drainListeners)
+    val calibEnd = calibrate(spark, "calib_end", metrics, queryTimeoutSec)
     System.err.println(f"[bench] calib_end ${calibEnd}%.2fs CPU (fixed work)")
     def r3(v: Double): Double = math.round(v * 1000.0) / 1000.0
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + r3(v) }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
 
@@ -22,16 +21,7 @@ object BloomFlagship {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_substr1g"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bloom-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build("graft-bloom-flagship")
 
     val corpusDir = s"$work/corpus"
     require(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$corpusDir/_SUCCESS")),
@@ -44,37 +34,17 @@ object BloomFlagship {
     // in the sf0.01 oracle where hits are plentiful
     val evalMax = nDocs / 100 + 10
 
-    val sc = spark.sparkContext
-    val shuf = new java.util.concurrent.atomic.AtomicLong()
-    val cpu = new java.util.concurrent.atomic.AtomicLong()
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          shuf.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          cpu.addAndGet(te.taskMetrics.executorCpuTime)
-        }
-    })
-    def drainListeners(): Unit = try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      try bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      catch { case _: NoSuchMethodException =>
-        bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-          .invoke(bus, java.lang.Long.valueOf(10000L))
-      }
-    } catch { case _: Throwable => Thread.sleep(100) }
-
+    val metrics = Metrics.install(spark)
     def run(label: String)(mk: => org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame = {
-      drainListeners()
-      val shuf0 = shuf.get(); val cpu0 = cpu.get()
-      val t0 = System.nanoTime()
-      val out = mk.localCheckpoint()
-      val n = out.count()
-      val flagged = out.filter(col("contaminated")).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      drainListeners()
-      println(f"""{"metric":"decontam_1gb_$label","docs":$nDocs,"bytes":$bytes,"eval_docs":$evalMax,"rows":$n,"flagged":$flagged,"sec":${f"$dt%.1f"},"shuffle_gb":${(shuf.get() - shuf0) / 1e9}%.2f,"cpu_sec":${f"${(cpu.get() - cpu0) / 1e9}%.1f"},"cpus":$cpus}""")
+      val ((out, n, flagged, dt), m) = metrics.measure {
+        val t0 = System.nanoTime()
+        val out = mk.localCheckpoint()
+        val n = out.count()
+        val flagged = out.filter(col("contaminated")).count()
+        (out, n, flagged, (System.nanoTime() - t0) / 1e9)
+      }
+      println(f"""{"metric":"decontam_1gb_$label","docs":$nDocs,"bytes":$bytes,"eval_docs":$evalMax,"rows":$n,"flagged":$flagged,"sec":${f"$dt%.1f"},"shuffle_gb":${m.shuffleWriteBytes / 1e9}%.2f,"cpu_sec":${f"${m.cpuSec}%.1f"},"cpus":${Session.cpus}}""")
       out
     }
 

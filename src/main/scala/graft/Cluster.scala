@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-process execution support: `GRAFT_MASTER=local-cluster[2,8,4096]`
-  * turns any of this repo's mains (Verify, Bench, ClusterCheck) into a
-  * REAL multi-executor run — a standalone master + workers in the driver
-  * JVM, executors as SEPARATE FORKED JVMs, shuffle and broadcast over
-  * the block-transfer service instead of in-process references. This is
-  * the execution model the reference ships as its headline (1
-  * coordinator + N worker containers — reference
+  * turns every main in this repo (each builds its session through
+  * [[Session]]) into a REAL multi-executor run — a standalone master +
+  * workers in the driver JVM, executors as SEPARATE FORKED JVMs, shuffle
+  * and broadcast over the block-transfer service instead of in-process
+  * references. This is the execution model the reference ships as its
+  * headline (1 coordinator + N worker containers — reference
   * `coordinator/coordinator.py:92-101`, `docker-compose.yml`), and the
   * mode every scale claim in this repo is ultimately about: closure
   * serialization, cross-process shuffle, and durable-index reuse are
@@ -42,24 +40,23 @@ object Cluster {
 
   def isCluster(master: String): Boolean = master.startsWith("local-cluster")
 
-  /** Apply `master` (default: GRAFT_MASTER env, else `local[cpus]`) plus
-    * the executor-side wiring a multi-process master needs. */
-  def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder = {
-    val master = sys.env.getOrElse(MasterEnv, s"local[$cpus]")
-    val withMaster = b.master(master)
-    if (!isCluster(master)) withMaster
+  /** The master every main runs on: GRAFT_MASTER, else `local[cpus]`. */
+  def master(cpus: Int): String = sys.env.getOrElse(MasterEnv, s"local[$cpus]")
+
+  /** The executor-side wiring a multi-process `master` needs (none for
+    * plain `local[N]`). */
+  def executorConf(master: String): Seq[(String, String)] =
+    if (!isCluster(master)) Nil
     else {
       require(sys.env.contains("SPARK_HOME"),
-        s"$MasterEnv=$master needs SPARK_HOME (e.g. /opt/spark) so the " +
+        s"master $master needs SPARK_HOME (e.g. /opt/spark) so the " +
           "standalone worker can fork executor JVMs")
-      withMaster
-        .config("spark.executor.extraClassPath",
-          System.getProperty("java.class.path"))
-        .config("spark.executor.extraJavaOptions", execOpts)
+      Seq(
+        "spark.executor.extraClassPath" -> System.getProperty("java.class.path"),
+        "spark.executor.extraJavaOptions" -> execOpts,
         // executor loss must surface as retried tasks, not a dead app:
         // the resilience checks kill executors on purpose
-        .config("spark.task.maxFailures", "8")
-        .config("spark.stage.maxConsecutiveAttempts", "8")
+        "spark.task.maxFailures" -> "8",
+        "spark.stage.maxConsecutiveAttempts" -> "8")
     }
-  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.util.concurrent.{FutureTask, TimeUnit, TimeoutException}
+import java.util.concurrent.TimeoutException
 
 /** Multi-process execution evidence — the claim this engine inherits
   * from the reference (1 coordinator + N worker PROCESSES — reference
@@ -48,32 +48,13 @@ object ClusterCheck {
   private def session(master: String, shufflePartitions: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val b = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.broadcastTimeout", "600")
+    Session.build("graft-cluster-check",
+      Session.Master -> master,
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
       // reliable checkpoint dirs are never self-deleted by Spark; the
       // cleaner removes each CC round's files once its RDD is unreachable
       // (Materialize.stage scaladoc — the cluster-mode requirement)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-    val withMaster =
-      if (Cluster.isCluster(master)) {
-        require(sys.env.contains("SPARK_HOME"),
-          s"$master needs SPARK_HOME so the standalone worker can fork executors")
-        b.master(master)
-          .config("spark.executor.extraClassPath",
-            System.getProperty("java.class.path"))
-          .config("spark.executor.extraJavaOptions", Cluster.execOpts)
-          .config("spark.task.maxFailures", "8")
-          .config("spark.stage.maxConsecutiveAttempts", "8")
-      } else b.master(master)
-    val s = withMaster.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
   }
 
   /** Canonical content hash: row strings sorted, md5 — partition-layout
@@ -87,29 +68,19 @@ object ClusterCheck {
     (rows.length.toLong, md.digest().map("%02x".format(_)).mkString)
   }
 
-  /** Run one query under a watchdog; None on timeout/error (recorded). */
+  /** Run one query under the watchdog; None on timeout/error (recorded). */
   private def runHashed(spark: SparkSession, name: String,
       fn: (SparkSession, String) => DataFrame, sfDir: String,
       timeoutSec: Long, errors: collection.mutable.Map[String, String])
-      : Option[(Long, String)] = {
-    val sc = spark.sparkContext
-    val task = new FutureTask[(Long, String)](() => {
-      sc.setJobGroup(name, name, interruptOnCancel = true)
-      try resultHash(fn(spark, sfDir)) finally sc.clearJobGroup()
-    })
-    val th = new Thread(task, s"cluster-$name"); th.setDaemon(true); th.start()
-    val r = try Some(task.get(timeoutSec, TimeUnit.SECONDS)) catch {
-      case _: TimeoutException =>
-        sc.cancelJobGroup(name); errors(name) = "Timeout"; None
-      case e: Throwable =>
-        val c = if (e.getCause != null) e.getCause else e
+      : Option[(Long, String)] =
+    QueryRunner.run(spark, name, timeoutSec)(resultHash(fn(spark, sfDir))) match {
+      case Right(h) => Some(h)
+      case Left(_: TimeoutException) => errors(name) = "Timeout"; None
+      case Left(c) =>
         errors(name) = c.getClass.getSimpleName + ": " +
           String.valueOf(c.getMessage).take(120)
         None
     }
-    spark.catalog.clearCache()
-    r
-  }
 
   /** Kill `n` forked executor JVMs (children running
     * CoarseGrainedExecutorBackend), after `delayMs`. The flag records
@@ -155,8 +126,7 @@ object ClusterCheck {
       sys.env.getOrElse("GRAFT_CLUSTER_MASTER", "local-cluster[2,8,4096]")
     val timeoutSec = sys.env.getOrElse("GRAFT_QUERY_TIMEOUT", "300").toLong
     val chainN = sys.env.getOrElse("GRAFT_CHAIN_N", "200000").toLong
-    val only = sys.env.get("GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
+    val selected = QueryRunner.selected(SparkEntry.queries)
     val indexDir =
       java.nio.file.Files.createTempDirectory("graft-cluster-index").toString
     val ckptDir =

@@ -43,15 +43,7 @@ object CompactionFlagship {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse("/tmp/graft_compact1g")
     val nDocs = if (args.length > 1) args(1).toLong else 3300000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-compaction-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build("graft-compaction-flagship")
 
     def timed[T](name: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime()
@@ -182,7 +174,7 @@ object CompactionFlagship {
       s""""parity_stack_vs_compacted":$parityStack,""" +
       s""""parity_vs_rebuild":$parityRebuild,""" +
       s""""row_arithmetic_exact":$arithmetic,""" +
-      s""""compacted_rows":$nCompacted,"cpus":$cpus}""")
+      s""""compacted_rows":$nCompacted,"cpus":${Session.cpus}}""")
     spark.stop()
     if (!(parityStack && parityRebuild && arithmetic)) sys.exit(1)
   }

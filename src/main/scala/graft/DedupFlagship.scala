@@ -104,17 +104,7 @@ object DedupFlagship {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_dedup1g"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-dedup-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build("graft-dedup-flagship")
 
     // ---- untimed setup
     val corpusDir = s"$work/corpus"
@@ -188,7 +178,7 @@ object DedupFlagship {
     }
     val recall = truthAgg("hit").toDouble / math.max(1L, truthAgg("truth"))
     val precisionVsPlanted = truthAgg("hit").toDouble / math.max(1L, nPairs)
-    println(f"""{"metric":"dedup_1gb","docs":$nDocs,"bytes":$bytes,"pairs":$nPairs,"truth_pairs":${truthAgg("truth")},"recall":$recall%.4f,"precision_vs_planted":$precisionVsPlanted%.4f,"extra_pairs":${truthAgg("extra")},"far_planted_found":${truthAgg("planted_far_found")},"clustered_docs":$nClustered,"clusters":$nClusters,"dropped_docs":$nDropped,"index_sec":${f"$tIndex%.1f"},"pairs_sec":${f"$tPairs%.1f"},"clusters_sec":${f"$tClusters%.1f"},"canonical_sec":${f"$tCanon%.1f"},"truth_sec":${f"$tTruth%.1f"},"cpus":$cpus}""")
+    println(f"""{"metric":"dedup_1gb","docs":$nDocs,"bytes":$bytes,"pairs":$nPairs,"truth_pairs":${truthAgg("truth")},"recall":$recall%.4f,"precision_vs_planted":$precisionVsPlanted%.4f,"extra_pairs":${truthAgg("extra")},"far_planted_found":${truthAgg("planted_far_found")},"clustered_docs":$nClustered,"clusters":$nClusters,"dropped_docs":$nDropped,"index_sec":${f"$tIndex%.1f"},"pairs_sec":${f"$tPairs%.1f"},"clusters_sec":${f"$tClusters%.1f"},"canonical_sec":${f"$tCanon%.1f"},"truth_sec":${f"$tTruth%.1f"},"cpus":${Session.cpus}}""")
     spark.stop()
   }
 }

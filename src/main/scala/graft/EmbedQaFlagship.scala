@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.{Pipeline, Similarity}
 
 /** Embedding-QA flagship at ~1M vectors (r12 verdict item 6): the
@@ -42,43 +41,19 @@ object EmbedQaFlagship {
     val nVecs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_embedqa1m"
     val eventsDir = if (args.length > 2) args(2) else "/tmp/sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-embedqa-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val sc = spark.sparkContext
-    sc.setLogLevel("WARN")
+    val spark = Session.build("graft-embedqa-flagship")
 
-    // task-CPU accumulator (stages run sequentially, so a global
-    // counter with a bus drain between snapshots attributes exactly)
-    val cpuAcc = new java.util.concurrent.atomic.AtomicLong()
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          cpuAcc.addAndGet(te.taskMetrics.executorCpuTime)
-    })
-    def drain(): Unit = try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      try bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      catch { case _: NoSuchMethodException =>
-        bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-          .invoke(bus, java.lang.Long.valueOf(10000L))
-      }
-    } catch { case _: Throwable => Thread.sleep(100) }
+    // stages run sequentially, so whole-app task CPU between two bus
+    // drains attributes exactly
+    val metrics = Metrics.install(spark)
     def timed[T](name: String)(f: => T): (T, Double, Double) = {
-      drain(); val c0 = cpuAcc.get(); val t0 = System.nanoTime()
-      val r = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      drain(); val cpu = (cpuAcc.get() - c0) / 1e9
-      println(f"stage $name%-22s wall $wall%8.1f s   cpu $cpu%8.1f s")
-      (r, wall, cpu)
+      val ((r, wall), m) = metrics.measure {
+        val t0 = System.nanoTime()
+        val r = f
+        (r, (System.nanoTime() - t0) / 1e9)
+      }
+      println(f"stage $name%-22s wall $wall%8.1f s   cpu ${m.cpuSec}%8.1f s")
+      (r, wall, m.cpuSec)
     }
 
     // ---- corpus (shared ANN generator; reused across runs)

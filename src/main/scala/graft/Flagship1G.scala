@@ -84,16 +84,7 @@ object Flagship1G {
   def main(args: Array[String]): Unit = {
     val targetBytes = args.headOption.map(_.toLong).getOrElse(1000000000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_1gb"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-flagship-1g")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build("graft-flagship-1g")
 
     // ---- untimed setup: synthesize + zip the corpus (stands in for the
     // enwik9 download the zero-egress sandbox cannot perform)
@@ -131,7 +122,7 @@ object Flagship1G {
     val counts = WordCount.tokenCounts(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // NUM_REDUCERS = 2 × parallelism (reference coordinator.py:11)
-    JsonSink.writeReduceObjects(counts, s"$work/out", 2 * cpus.toInt)
+    JsonSink.writeReduceObjects(counts, s"$work/out", 2 * Session.cpus)
     // top-20 from the SAME persisted counts (WordCount.top20 semantics;
     // the one tokenize pass feeds both the sink and the report)
     val top20 = counts
@@ -143,7 +134,7 @@ object Flagship1G {
     val nDistinct = counts.count()
     counts.unpersist()
     println("top-20: " + top20.map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(", "))
-    println(f"""{"metric":"flagship_1gb","extract_sec":${(tExtract - t0) / 1e9}%.2f,"total_sec":${(t1 - t0) / 1e9}%.2f,"bytes":$targetBytes,"tokens":$nWords,"distinct":$nDistinct,"cpus":$cpus}""")
+    println(f"""{"metric":"flagship_1gb","extract_sec":${(tExtract - t0) / 1e9}%.2f,"total_sec":${(t1 - t0) / 1e9}%.2f,"bytes":$targetBytes,"tokens":$nWords,"distinct":$nDistinct,"cpus":${Session.cpus}}""")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic-data generator for SCALE FACTORS THE DRIVER
@@ -44,15 +44,7 @@ object GenSf {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/sf1")
     val mult = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-gensf")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build("graft-gensf")
 
     // sf0.1 base counts × mult (embeddings follow the driver's own
     // sub-linear ×4-per-decade trend)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.Behavior
 
 /** Dimension-scale stress of the honest-exact-rank allowlist class
@@ -33,38 +32,9 @@ object RankDimFlagship {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(100000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-rankdim-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val sc = spark.sparkContext
-    sc.setLogLevel("WARN")
-
+    val spark = Session.build("graft-rankdim-flagship")
     // spill/CPU accounting across all tasks of the measured action
-    val cpu = new java.util.concurrent.atomic.AtomicLong()
-    val memSpill = new java.util.concurrent.atomic.AtomicLong()
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong()
-    val peakMem = new java.util.concurrent.atomic.AtomicLong()
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          cpu.addAndGet(te.taskMetrics.executorCpuTime)
-          memSpill.addAndGet(te.taskMetrics.memoryBytesSpilled)
-          diskSpill.addAndGet(te.taskMetrics.diskBytesSpilled)
-          peakMem.accumulateAndGet(te.taskMetrics.peakExecutionMemory,
-            (a, b) => math.max(a, b))
-        }
-    })
-    def drain(): Unit = try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } catch { case _: Throwable => Thread.sleep(200) }
+    val metrics = Metrics.install(spark)
 
     // synthetic dimension in the shipped perCust schema — xxhash64-keyed
     // (pure Catalyst, no driver-side randomness), value ranges matching
@@ -75,18 +45,15 @@ object RankDimFlagship {
       "date_add(DATE'1995-01-01', CAST(pmod(xxhash64(id, 1), 2404) AS INT)) AS last_day",
       "pmod(xxhash64(id, 2), 50) AS freq",
       "pmod(xxhash64(id, 3), 10000000) AS cents"))
-    drain()
-    val (c0, m0, d0) = (cpu.get, memSpill.get, diskSpill.get)
-    peakMem.set(0L)
-
-    val t0 = System.nanoTime()
-    val rows = Behavior.rfmFrom(dim).collect()
-    val wall = (System.nanoTime() - t0) / 1e9
-    drain()
+    val ((rows, wall), m) = metrics.measure {
+      val t0 = System.nanoTime()
+      val rows = Behavior.rfmFrom(dim).collect()
+      (rows, (System.nanoTime() - t0) / 1e9)
+    }
     val segs = rows.length
     val total = rows.map(_.getLong(3)).sum
     require(total == n, s"segment counts must cover every row: $total != $n")
-    println(f"""{"metric":"rankdim","n_rows":$n,"wall_sec":${math.round(wall * 100) / 100.0},"cpu_sec":${math.round((cpu.get - c0) / 1e7) / 100.0},"segments":$segs,"mem_spill_mb":${(memSpill.get - m0) >> 20},"disk_spill_mb":${(diskSpill.get - d0) >> 20},"peak_task_mem_mb":${peakMem.get >> 20}}""")
+    println(f"""{"metric":"rankdim","n_rows":$n,"wall_sec":${math.round(wall * 100) / 100.0},"cpu_sec":${math.round(m.cpuNs / 1e7) / 100.0},"segments":$segs,"mem_spill_mb":${m.memSpillBytes >> 20},"disk_spill_mb":${m.diskSpillBytes >> 20},"peak_task_mem_mb":${m.peakExecMem >> 20}}""")
     spark.stop()
   }
 }

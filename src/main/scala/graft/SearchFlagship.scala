@@ -46,15 +46,7 @@ object SearchFlagship {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse("/tmp/graft_search1g")
     val nDocs = if (args.length > 1) args(1).toLong else 3300000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-search-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build("graft-search-flagship")
 
     def timed[T](name: String)(f: => T): (T, Double) = {
       val t0 = System.nanoTime()
@@ -126,7 +118,7 @@ object SearchFlagship {
       s""""phrase":{"rows":$nPh,"sec":${r2(tPh)}},""" +
       s""""ndcg":{"permille":${ndcgRow.getLong(4)},"n_relevant":${ndcgRow.getLong(0)},"sec":${r2(tNd)}},""" +
       s""""packing":{"sequences":${packStats._1},"tokens":${packStats._2},"doc_memberships":${packStats._3},"sec":${r2(tPack)}},""" +
-      s""""cpus":$cpus}""")
+      s""""cpus":${Session.cpus}}""")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, SimJoin}
 
@@ -38,17 +37,7 @@ object SimJoinFlagship {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_dedup1g"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-simjoin-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build("graft-simjoin-flagship")
 
     val corpusDir = s"$work/corpus"
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$corpusDir/_SUCCESS"))) {
@@ -115,7 +104,7 @@ object SimJoinFlagship {
     val lshRecall = lshHit.toDouble / math.max(1L, nExact)
     val exactSec = tIndex + tExact
     val lshSec = tLshIndex + tLshPairs
-    println(f"""{"metric":"ssjoin_1gb","docs":$nDocs,"bytes":$bytes,"exact_pairs":$nExact,"lsh_pairs":$nLsh,"lsh_recall_vs_exact":$lshRecall%.4f,"lsh_outside_exact":$lshOutside,"missing_planted":$missingPlanted,"exact_index_sec":${f"$tIndex%.1f"},"exact_join_sec":${f"$tExact%.1f"},"exact_total_sec":${f"$exactSec%.1f"},"lsh_total_sec":${f"$lshSec%.1f"},"exact_vs_lsh_cost":${f"${exactSec / math.max(0.1, lshSec)}%.2f"},"truth_sec":${f"$tTruth%.1f"},"cpus":$cpus}""")
+    println(f"""{"metric":"ssjoin_1gb","docs":$nDocs,"bytes":$bytes,"exact_pairs":$nExact,"lsh_pairs":$nLsh,"lsh_recall_vs_exact":$lshRecall%.4f,"lsh_outside_exact":$lshOutside,"missing_planted":$missingPlanted,"exact_index_sec":${f"$tIndex%.1f"},"exact_join_sec":${f"$tExact%.1f"},"exact_total_sec":${f"$exactSec%.1f"},"lsh_total_sec":${f"$lshSec%.1f"},"exact_vs_lsh_cost":${f"${exactSec / math.max(0.1, lshSec)}%.2f"},"truth_sec":${f"$tTruth%.1f"},"cpus":${Session.cpus}}""")
     spark.stop()
   }
 }

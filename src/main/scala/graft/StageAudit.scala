@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Stage-level CPU attribution for one registry query (r11 verdict
   * item 3: "is the bm25 family's 7–9 s sf0.1 floor fixed machinery or
@@ -16,15 +15,7 @@ object StageAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Cluster.configure(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build("graft-stage-audit")
 
     final case class St(id: Int, name: String, cpuSec: Double,
         recordsIn: Long, shuffleReadRec: Long, shuffleWriteRec: Long,
@@ -51,9 +42,8 @@ object StageAudit {
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).collect().length
       val wall = (System.nanoTime() - t0) / 1e9
-      // stage events are posted async; give the bus a beat to drain
-      // (listenerBus is private[spark]; a bounded sleep suffices here)
-      Thread.sleep(1500)
+      // stage events are posted async: drain the bus before reading
+      Metrics.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       import scala.jdk.CollectionConverters._
       val ss = stages.asScala.toSeq.sortBy(-_.cpuSec)

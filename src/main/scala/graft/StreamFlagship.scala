@@ -126,25 +126,7 @@ object StreamFlagship {
     val work = args.headOption.getOrElse("/tmp/graft_stream1g")
     val nEvents = if (args.length > 1) args(1).toLong else 16000000L
     val nDocs = if (args.length > 2) args(2).toLong else 3300000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false") // streaming plans
-      .config("spark.ui.enabled", "false")
-      // GRAFT_STATE_STORE=rocksdb switches to the RocksDB provider —
-      // the production backend for large state (state lives off-heap
-      // on local disk with changelog checkpointing instead of JVM-heap
-      // hashmaps + full snapshot uploads). Default = HDFS-backed.
-      .config("spark.sql.streaming.stateStore.providerClass",
-        if (sys.env.get("GRAFT_STATE_STORE").contains("rocksdb"))
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build("graft-stream-flagship", Session.streaming: _*)
     val recorder = new Recorder
     spark.streams.addListener(recorder)
 
@@ -324,7 +306,7 @@ object StreamFlagship {
       stats("sessionize", mainStats, sessMainSec, nEvents) + "," +
       s""""sessionize_out_rows":$nSess,"sessionize_parity":$sessParity,"batch_twin_sec":${math.round(batchSec * 100) / 100.0},""" +
       stats("near_dup_gate", gateStats, gateSec, nDocs) + "," +
-      s""""gate_survivors":${csGateStream._1},"gate_parity":$gateParity,"gate_keeper_match":$keeperMatch,"cpus":$cpus}"""
+      s""""gate_survivors":${csGateStream._1},"gate_parity":$gateParity,"gate_keeper_match":$keeperMatch,"cpus":${Session.cpus}}"""
     println(json)
     spark.stop()
   }

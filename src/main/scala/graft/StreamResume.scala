@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.EventsStream
 
@@ -47,17 +46,8 @@ object StreamResume {
   // results stay comparable by construction (review finding)
   import StreamFlagship.{EvSchema, eventSlice, flushSentinel, sessionChecksum}
 
-  private def session(app: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(app)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  private def session(app: String): SparkSession =
+    Session.build(app, Session.streaming: _*)
 
   /** One main-replay leg: the sessionize query over the backlog as
     * ~32 micro-batches, AvailableNow, parquet sink + checkpoint. */
@@ -109,7 +99,6 @@ object StreamResume {
     if (args.headOption.contains("--child")) {
       // forked main-replay leg — the parent SIGKILLs this JVM mid-run
       val spark = session("graft-stream-resume-child")
-      spark.sparkContext.setLogLevel("WARN")
       runMain(spark, args(1), args(2), args(3))
       spark.stop()
       return
@@ -118,7 +107,6 @@ object StreamResume {
     val nEvents = if (args.length > 1) args(1).toLong else 16000000L
     val killAfter = if (args.length > 2) args(2).toInt else 10
     val spark = session("graft-stream-resume")
-    spark.sparkContext.setLogLevel("WARN")
 
     // ---- backlog (the StreamFlagship event generator + slice shape:
     // event time strictly increasing with id, sequential slice writes

@@ -85,16 +85,7 @@ object SubstrFlagship {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
     val work = if (args.length > 1) args(1) else "/tmp/graft_substr1g"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-substr-flagship")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build("graft-substr-flagship")
 
     val corpusDir = s"$work/corpus"
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$corpusDir/_SUCCESS"))) {
@@ -110,37 +101,18 @@ object SubstrFlagship {
     // wall-clock on a shared VM is noisy (BENCH_NOTES_r07/r08); the
     // drift-immune evidence for the hash-vs-string key trade is the
     // SHUFFLE VOLUME the window pipeline writes and its task CPU time
-    val sc = spark.sparkContext
-    val shuf = new java.util.concurrent.atomic.AtomicLong()
-    val cpu = new java.util.concurrent.atomic.AtomicLong()
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          shuf.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          cpu.addAndGet(te.taskMetrics.executorCpuTime)
-        }
-    })
-    def drainListeners(): Unit = try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      try bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      catch { case _: NoSuchMethodException =>
-        bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-          .invoke(bus, java.lang.Long.valueOf(10000L))
-      }
-    } catch { case _: Throwable => Thread.sleep(100) }
+    val metrics = Metrics.install(spark)
 
     def run(label: String, hashed: Boolean): Unit = {
-      drainListeners()
-      val shuf0 = shuf.get(); val cpu0 = cpu.get()
-      val t0 = System.nanoTime()
-      val spans = TextAnalysis.substringDedup(docs, K, hashWindows = hashed)
-        .localCheckpoint()
-      val nSpans = spans.count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      drainListeners()
-      val shufGb = (shuf.get() - shuf0) / 1e9
-      val cpuSec = (cpu.get() - cpu0) / 1e9
+      val ((spans, nSpans, dt), m) = metrics.measure {
+        val t0 = System.nanoTime()
+        val spans = TextAnalysis.substringDedup(docs, K, hashWindows = hashed)
+          .localCheckpoint()
+        val nSpans = spans.count()
+        (spans, nSpans, (System.nanoTime() - t0) / 1e9)
+      }
+      val shufGb = m.shuffleWriteBytes / 1e9
+      val cpuSec = m.cpuSec
       // exact span hits: detected span ≡ the planted passage bounds
       val hit = spans.join(tr, Seq("doc_id", "span_start", "span_end"), "left_semi").count()
       val inexact = spans.join(tr, Seq("doc_id", "span_start", "span_end"), "left_anti")
@@ -166,7 +138,7 @@ object SubstrFlagship {
         .agg(coalesce(sum("ov"), lit(0L))).head().getLong(0)
       val recall = hit.toDouble / math.max(1L, nTruth)
       val tokRecall = covered.toDouble / math.max(1L, nTruth * PassLen)
-      println(f"""{"metric":"substr_1gb_$label","docs":$nDocs,"bytes":$bytes,"k":$K,"truth_spans":$nTruth,"spans":$nSpans,"exact_hits":$hit,"widened_spans":$widened,"disjoint_spans":$disjoint,"recall_exact":$recall%.4f,"recall_tokens":$tokRecall%.4f,"sec":${f"$dt%.1f"},"shuffle_gb":$shufGb%.2f,"cpu_sec":${f"$cpuSec%.1f"},"cpus":$cpus}""")
+      println(f"""{"metric":"substr_1gb_$label","docs":$nDocs,"bytes":$bytes,"k":$K,"truth_spans":$nTruth,"spans":$nSpans,"exact_hits":$hit,"widened_spans":$widened,"disjoint_spans":$disjoint,"recall_exact":$recall%.4f,"recall_tokens":$tokRecall%.4f,"sec":${f"$dt%.1f"},"shuffle_gb":$shufGb%.2f,"cpu_sec":${f"$cpuSec%.1f"},"cpus":${Session.cpus}}""")
     }
 
     run("hash", hashed = true)

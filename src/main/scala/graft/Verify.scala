@@ -1,65 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // GRAFT_MASTER=local-cluster[2,8,4096] runs the whole correctness
-    // dump across real forked executor JVMs (see Cluster.scala)
-    val spark = Cluster.configure(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE ON here: correctness runs in the configuration a cluster
-      // would ship (skew-join splitting is the 100 TB skew story). The
-      // round-1 "AQE stall" was not AQE: withFinalPlanUpdate was waiting
-      // on single-task stages of one-row-group scans running interpreted
-      // (see Tables.spread) — fixed, AQE runs clean. The timed Bench
-      // keeps AQE off because per-stage re-planning roughly doubles
-      // wall time at toy scale, which would misstate steady-state perf.
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
-      // generated-class cache sized for the whole suite (default 100
-      // thrashes across 52 queries — see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.broadcastTimeout", "600")
-      .config("spark.executor.heartbeatInterval", "20s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeat.maxFailures", "180")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    val sc = spark.sparkContext
-    val timeoutSec = sys.env.getOrElse("GRAFT_QUERY_TIMEOUT", "240").toLong
     // GRAFT_ONLY=a,b,c: dump (and emit oracle SQL for) just those
     // queries — local builder iteration; the driver never sets it
-    val only = sys.env.get("GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
+    val selected = QueryRunner.selected(SparkEntry.queries)
+    val timeoutSec = sys.env.getOrElse("GRAFT_QUERY_TIMEOUT", "240").toLong
+    // GRAFT_MASTER=local-cluster[2,8,4096] runs the whole correctness
+    // dump across real forked executor JVMs (see Cluster.scala)
+    val spark = Session.build("graft-verify")
+    new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
-      // per-query watchdog (same pattern as Bench): one wedged query must
-      // cost the correctness run one result, not the whole artifact
-      val task = new java.util.concurrent.FutureTask[Unit](() => {
-        sc.setJobGroup(name, name, interruptOnCancel = true)
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        finally sc.clearJobGroup()
-      })
-      val th = new Thread(task, s"verify-$name")
-      th.setDaemon(true)
-      th.start()
-      try task.get(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          sc.cancelJobGroup(name)
+      // one wedged query must cost the correctness run one result, not
+      // the whole artifact
+      QueryRunner.run(spark, name, timeoutSec) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      } match {
+        case Right(_) =>
+        case Left(_: java.util.concurrent.TimeoutException) =>
           System.err.println(s"[verify] $name timed out after ${timeoutSec}s")
-        case e: Throwable =>
-          val c = if (e.getCause != null) e.getCause else e
+        case Left(c) =>
           System.err.println(s"[verify] $name failed: ${c.getMessage}")
       }
-      finally spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -74,7 +39,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_(k)) }
+      .filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -1,0 +1,138 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+import java.util.concurrent.TimeoutException
+
+import org.apache.spark.JobExecutionStatus
+
+/** The mains' shared harness: the one session config, the per-query
+  * watchdog and the GRAFT_ONLY selector — plus a guard that keeps the
+  * per-main copies they replaced from growing back. */
+class SessionSpec extends SparkSpec {
+
+  private def read(f: File): String = Files.readString(f.toPath)
+
+  test("batch config: exactly Verify's values at SPARK_GRAFT_CPUS, one value per key") {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    assert(Session.cpus == cpus)
+    val expected = Map(
+      "spark.master" -> sys.env.getOrElse("GRAFT_MASTER", s"local[$cpus]"),
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.codegen.cache.maxEntries" -> "5000",
+      "spark.sql.broadcastTimeout" -> "600",
+      "spark.executor.heartbeatInterval" -> "20s",
+      "spark.network.timeout" -> "600s",
+      "spark.executor.heartbeat.maxFailures" -> "180",
+      "spark.ui.enabled" -> "false")
+    assert(Session.batch.toMap == expected)
+    assert(Session.batch.size == expected.size)
+    val local = Session.conf(Session.Master -> "local[8]", "spark.sql.shuffle.partitions" -> "8")
+    assert(local.map(_._1).distinct.size == local.size, "an extra must replace, not repeat, a key")
+    assert(local.toMap == expected ++ Map("spark.master" -> "local[8]",
+      "spark.sql.shuffle.partitions" -> "8"))
+  }
+
+  test("batch config matches the benchmark's session on every key it records") {
+    // the benchmark builds its own session (it must not depend on the
+    // mains); its Runner records RecordedConf per run — read both from
+    // its source so a drift on either side fails here
+    val src = read(new File("perfbench/src/main/scala/perfbench/Runner.scala"))
+    val rec = src.indexOf("val RecordedConf")
+    val recorded = "\"([^\"]+)\"".r.findAllMatchIn(src.substring(rec, src.indexOf(")", rec)))
+      .map(_.group(1)).toSeq
+    assert(recorded.contains("spark.sql.adaptive.enabled"), recorded)
+    val at = src.indexOf("def buildSession")
+    val builder = src.substring(at, src.indexOf(".getOrCreate()", at))
+    val benchConf = """\.config\("([^"]+)",\s*([^)]+)\)""".r.findAllMatchIn(builder)
+      .map(m => m.group(1) -> m.group(2).trim).toMap
+    assert(builder.contains(".master(s\"local[$cores]\")"))
+    assert(benchConf("spark.sql.shuffle.partitions") == "cores.toString")
+    val ours = Session.batch.toMap
+    recorded.filterNot(Set("spark.master", "spark.sql.shuffle.partitions")).foreach { k =>
+      assert(ours.get(k) == benchConf.get(k).map(_.stripPrefix("\"").stripSuffix("\"")), k)
+    }
+  }
+
+  test("streaming config turns AQE off and names a state-store provider") {
+    val c = Session.conf(Session.streaming: _*).toMap
+    assert(c("spark.sql.adaptive.enabled") == "false")
+    assert(c("spark.sql.streaming.stateStore.providerClass").endsWith("StateStoreProvider"))
+    assert(c("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
+  test("watchdog: a query past its timeout is cancelled, and the session stays usable") {
+    val sc = spark.sparkContext
+    val group = "session-spec-sleeper"
+    val t0 = System.nanoTime()
+    val r = QueryRunner.run(spark, group, 2) {
+      sc.parallelize(1 to 2, 2).map { x => Thread.sleep(120000L); x }.count()
+    }
+    val waited = (System.nanoTime() - t0) / 1e9
+    assert(r.swap.exists(_.isInstanceOf[TimeoutException]), r)
+    assert(waited >= 2 && waited < 30, waited)
+    // job status reaches the status store through the listener bus
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    def statuses = sc.statusTracker.getJobIdsForGroup(group).toSeq
+      .flatMap(sc.statusTracker.getJobInfo).map(_.status)
+    while (!(statuses.nonEmpty && statuses.forall(_ == JobExecutionStatus.FAILED)) &&
+        System.nanoTime() < deadline) Thread.sleep(100)
+    assert(statuses.nonEmpty && statuses.forall(_ == JobExecutionStatus.FAILED), statuses)
+    assert(QueryRunner.run(spark, "session-spec-after", 60)(spark.range(10).count()) == Right(10L))
+  }
+
+  test("watchdog: a failing query comes back as its cause") {
+    val r = QueryRunner.run(spark, "session-spec-failing", 60)(sys.error("boom"))
+    assert(r.swap.exists(_.getMessage == "boom"), r)
+  }
+
+  test("metrics: measure returns the body's task deltas, groups count their own jobs") {
+    val m = Metrics.install(spark)
+    try {
+      // a fresh plan per run: a re-run Dataset would reuse its map output
+      def shuffled = spark.range(0, 20000, 1, 4).selectExpr("id % 7 AS k").groupBy("k").count()
+      val (rows, d) = m.measure(shuffled.collect().length)
+      assert(rows == 7)
+      assert(d.cpuNs > 0 && d.shuffleWriteBytes > 0, d)
+      assert(m.measure(())._2.cpuNs == 0L, "no work, no delta")
+      assert(m.group("session-spec-metrics") == Metrics.Totals.Zero)
+      QueryRunner.run(spark, "session-spec-metrics", 60)(shuffled.collect())
+      val g = m.group("session-spec-metrics")
+      assert(g.cpuNs > 0 && g.shuffleWriteBytes > 0, g)
+    } finally spark.sparkContext.removeSparkListener(m)
+  }
+
+  test("GRAFT_ONLY selector: unknown names rejected by name, blank means all") {
+    val all = SparkEntry.queries
+    assert(QueryRunner.only(all, None) == Right(all))
+    assert(QueryRunner.only(all, Some("")) == Right(all))
+    assert(QueryRunner.only(all, Some(" , ")) == Right(all))
+    assert(QueryRunner.only(all, Some("q1_pricing_summary, nope,wc_top20x,nope")) ==
+      Left(Seq("nope", "wc_top20x")))
+    val picked = QueryRunner.only(all, Some(" q1_pricing_summary ,spearman_corr"))
+    assert(picked.map(_.keySet) == Right(Set("q1_pricing_summary", "spearman_corr")))
+  }
+
+  test("tooling guard: one session builder, one bus drain, one watchdog, no retired knobs") {
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root (cwd ${new File(".").getAbsolutePath})")
+    def files(d: File): Seq[File] = Option(d.listFiles()).toSeq.flatten
+      .flatMap(f => if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
+    val sources = files(root).map(f => root.toPath.relativize(f.toPath).toString -> read(f))
+    def offenders(token: String, home: String) =
+      sources.collect { case (n, s) if n != home && s.contains(token) => n }
+    assert(offenders("SparkSession.builder", "graft/Session.scala").isEmpty)
+    assert(offenders("listenerBus", "graft/Metrics.scala").isEmpty)
+    assert(offenders("FutureTask", "graft/QueryRunner.scala").isEmpty)
+    assert(offenders("\"GRAFT_ONLY\"", "graft/QueryRunner.scala").isEmpty)
+    // env knobs retired as constants (their evidence: BENCH_r03_aqe.json,
+    // BENCH_r04_aqe.json, BENCH_r05_noaqe.json, BENCH_r07_noaqe.json)
+    Seq("AQE", "WARM_PASS", "KILL_STALE").map("GRAFT_" + _).foreach { knob =>
+      assert(offenders(knob, "").isEmpty, knob)
+    }
+  }
+}

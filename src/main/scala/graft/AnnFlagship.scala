@@ -104,9 +104,9 @@ object AnnFlagship {
 
     val methods = Seq[(String, () => DataFrame)](
       "lsh" -> (() => Similarity.lshTopK(emb, NQueries, K, n)),
-      "lsh_mp" -> (() => Similarity.lshTopKProbed(emb, NQueries, K, n)),
+      "lsh_mp" -> (() => Similarity.lshTopK(emb, NQueries, K, n, radius = 1)),
       "ivf" -> (() => Similarity.ivfTopK(emb, 8, NQueries, K, n)),
-      "ivf_mp" -> (() => Similarity.ivfTopKProbed(emb, 8, NQueries, K, 2, n)),
+      "ivf_mp" -> (() => Similarity.ivfTopK(emb, 8, NQueries, K, n, nprobe = 2)),
       // default = the committed operating point (refine=16 since round
       // 9); the sweep brackets it with the old r8 point, the nprobe=2
       // insurance, and the r32 headroom row
@@ -119,7 +119,7 @@ object AnnFlagship {
         corpusCount = n, refine = 32)),
       // deep-probe rows: the straddle-regime repair path (nprobe
       // recovers cross-cell candidates, refine re-ranks them exactly)
-      "ivf_p4" -> (() => Similarity.ivfTopKProbed(emb, 8, NQueries, K, 4, n)),
+      "ivf_p4" -> (() => Similarity.ivfTopK(emb, 8, NQueries, K, n, nprobe = 4)),
       "ivfpq_p4r32" -> (() => Similarity.ivfPqTopK(emb, 8, NQueries, K,
         corpusCount = n, nprobe = 4, refine = 32)),
       "int8" -> (() => Similarity.quantizedTopK(emb, NQueries, K)),
@@ -151,7 +151,7 @@ object AnnFlagship {
         Seq(
           // the candidate-recall ceiling in rotated space (should track
           // the unrotated ivf_p4 — rotation preserves geometry)
-          "ivf_p4_opq" -> (() => Similarity.ivfTopKProbed(rot, 8, NQueries, K, 4, n)),
+          "ivf_p4_opq" -> (() => Similarity.ivfTopK(rot, 8, NQueries, K, n, nprobe = 4)),
           // the contested row: does rotation close 0.822 → its ceiling?
           "ivfpq_p4r32_opq" -> (() => Similarity.ivfPqTopK(rot, 8, NQueries, K,
             corpusCount = n, nprobe = 4, refine = 32)),

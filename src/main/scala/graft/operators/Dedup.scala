@@ -158,8 +158,8 @@ object Dedup {
 
   /** [[nearDupPairs]] from a PREBUILT capped band table — lets callers
     * serve the band index from a shared materialized build.
-    * `pairMembershipVerify` picks the verification formulation — see
-    * [[verifyJaccard]] for the measured regime split. */
+    * `pairMembershipVerify = false` picks the two-leg count — see
+    * [[verifyJaccard]] for the measurement. */
   def nearDupPairsFromBands(docs: DataFrame, b: DataFrame,
       mkGrams: DataFrame => DataFrame, threshold: Double,
       pairMembershipVerify: Boolean = true): DataFrame = {
@@ -258,92 +258,78 @@ object Dedup {
       maxBand: Int = MaxBandBucket): DataFrame =
     cappedBandsPlan(rawCorpus.union(rawIncrement), maxBand)
 
-  /** Exact set-jaccard verification over a candidate pair table,
-    * computed GRAM-LEVEL: |A∩B| is a count over the (pair, gram)
-    * equi-join of the two docs' distinct gram streams, |A∪B| =
-    * |A|+|B|−|A∩B| from per-doc distinct counts. Every row in every
-    * stage is SKINNY (ids + one gram string) and every aggregation is
-    * partial-aggregable — unlike the previous collect_set formulation,
-    * which materialized each candidate doc's full shingle set as one
-    * array row (a single pathological document with tens of millions
-    * of grams OOMs the task that builds its array; here it is just
-    * more rows). Grams are built ONLY for docs appearing in some
-    * candidate pair, so cost stays bounded by the near-dup
-    * neighborhood, never the corpus. Identical numbers: intersection/
-    * union over distinct grams, same double division, same rounding. */
-  /** Exact-jaccard verification in TWO measured formulations (r15
-    * optimization round); `pairMembership` picks per call site.
+  /** The one pair-gram count behind every exact set-similarity verify
+    * (this one, and [[SimJoin]]'s jaccard, containment and cosine): each
+    * candidate pair explodes into its two (pair, doc_id) membership
+    * rows, ONE doc_id equi-join attaches the candidate docs' gram
+    * stream, and one (pair, gram) count gives per pair tot = |A| + |B|,
+    * na = |A| and ni = |A∩B| — grams are distinct per doc, so a shared
+    * gram's cell has c = 2. `gramsOf` maps the candidate doc-id set to
+    * its distinct (doc_id, g) rows, so grams are built only for the
+    * near-dup neighborhood, never the corpus. Every row is skinny and
+    * every aggregation partial-aggregable (a doc with tens of millions
+    * of grams is more rows, never one array). Pairs sharing no gram
+    * surface with ni = 0 and fall to any positive accept test. A caller
+    * that never reads `na` does not pay for it: Catalyst prunes the
+    * aggregate. */
+  private[operators] def pairGramCounts(cand0: DataFrame,
+      gramsOf: DataFrame => DataFrame): DataFrame = {
+    val cand = cand0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val mem = cand.select(col("doc_a"), col("doc_b"),
+      explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+    gramsOf(mem.select("doc_id").distinct()).join(mem, Seq("doc_id"))
+      .groupBy(col("doc_a"), col("doc_b"), col("g"))
+      .agg(count(lit(1)).as("c"),
+        max(when(col("doc_id") === col("doc_a"), 1L).otherwise(0L)).as("ia"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(sum(col("c")).as("tot"), sum(col("ia")).as("na"),
+        sum(when(col("c") === 2, 1L).otherwise(0L)).as("ni"))
+  }
+
+  /** |A∩B| / |A∪B| of a pair-gram count, as ni / (tot − ni). */
+  private[operators] val jaccardOfCounts: Column =
+    col("ni").cast("double") / (col("tot") - col("ni")).cast("double")
+
+  /** The shared verify tail: pairs passing `keep`, with `score` rounded
+    * to 6 digits as column `name`, in pair order. */
+  private[operators] def acceptedPairs(counts: DataFrame, keep: Column,
+      score: Column, name: String): DataFrame =
+    counts.filter(keep)
+      .select(col("doc_a"), col("doc_b"), round(score, 6).as(name))
+      .orderBy("doc_a", "doc_b")
+
+  /** Exact set-jaccard verification of a candidate pair table over
+    * `mkGrams` of the candidate docs ([[pairGramCounts]]).
     *
-    * PAIR-MEMBERSHIP form (guide §2.4 — the VERDICT r14 "share one
-    * exchange across the verify legs" rewrite): each candidate pair
-    * explodes into its two (pair, doc_id) membership rows, ONE doc_id
-    * equi-join attaches the gram stream, and one (pair, gram) count
-    * derives everything pair-level (a gram common to both docs appears
-    * twice in its cell — grams are distinct per doc — so
-    * |A∩B| = #cells with c = 2 and na + nb = Σc). 5 joins → 1, the two
-    * per-side gram legs and both size join-backs gone. Measured
-    * isolated sf0.1 (3-rep medians): near_dup_incremental wall
-    * 3.05 → 1.13 s, ssjoin family −25 % wall / −40 % CPU (the SimJoin
-    * twin of this form).
-    *
-    * TWO-LEG form (the pre-r15 shape, kept for the DENSE-gram regime):
-    * the membership form replicates every doc's grams per pair BEFORE
-    * the (pair, g) exchange (Catalyst additionally pushes the gram
-    * distinct past the membership join, so the replicated stream is
-    * the multiset), while the two-leg form ships the deduped stream
-    * once per leg and its intersection join materializes only matches.
-    * For near_dup_ngram (char-12-grams, ~2.4 M tagged rows over 1 k
-    * candidate pairs) the membership form measured isolated wall
-    * 2.05 → 3.03 s (CPU 19.7 → 12.7 s) — wall is the gate axis, so the
-    * char-gram verify keeps the two-leg form; word-gram callers and
-    * the index-served SimJoin verifies take the membership form. */
+    * `pairMembership = false` keeps the pre-r15 TWO-LEG count for the
+    * dense-gram regime: the membership form replicates every doc's
+    * grams per pair BEFORE the (pair, g) exchange, while the two-leg
+    * form ships the deduped stream once per leg and its intersection
+    * join materializes only matches. For near_dup_ngram's char-12-gram
+    * verify, result-timed (noop sink, sf0.1, local[4], 15 alternating
+    * reps in one window), the membership form's median wall was 1.558 s
+    * (q1–q3 1.436–1.662) against the two-leg form's 1.347 s
+    * (1.283–1.517), so that call site keeps the two-leg form. */
   private[operators] def verifyJaccard(docs: DataFrame, mkGrams: DataFrame => DataFrame,
       cand0: DataFrame, threshold: Double,
       pairMembership: Boolean = true): DataFrame = {
-    val cand = cand0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val jac = if (pairMembership) {
-      val mem = cand.select(col("doc_a"), col("doc_b"),
-        explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      val candIds = mem.select("doc_id").distinct()
-      val grams = mkGrams(docs.join(candIds, Seq("doc_id"), "left_semi"))
-        .distinct()
-      // pairs with an empty intersection surface with ni = 0 and are
-      // dropped by the positive-threshold filter — the same final set
-      // as the two-leg form's inner join on the intersection
-      grams.join(mem, Seq("doc_id"))
-        .groupBy(col("doc_a"), col("doc_b"), col("g"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(sum(col("c")).as("tot"),
-          sum(when(col("c") === 2, 1L).otherwise(0L)).as("ni"))
-        .select(col("doc_a"), col("doc_b"),
-          (col("ni").cast("double") /
-            (col("tot") - col("ni")).cast("double")).as("jac"))
-    } else {
-      val candIds = cand
-        .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-        .distinct()
-      // distinct gram stream of candidate docs — shared by the size
-      // aggregate and both sides of the intersection join
-      val grams = mkGrams(docs.join(candIds, Seq("doc_id"), "left_semi"))
-        .distinct()
+    def gramsOf(ids: DataFrame) =
+      mkGrams(docs.join(ids, Seq("doc_id"), "left_semi")).distinct()
+    val counts = if (pairMembership) pairGramCounts(cand0, gramsOf) else {
+      val cand = cand0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val grams = gramsOf(cand
+          .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct())
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val sizes = grams.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val inter = grams.select(col("doc_id").as("doc_a"), col("g"))
+      grams.select(col("doc_id").as("doc_a"), col("g"))
         .join(cand, "doc_a")
         .join(grams.select(col("doc_id").as("doc_b"), col("g")), Seq("doc_b", "g"))
         .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("ni"))
-      inter
         .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
         .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-        .select(col("doc_a"), col("doc_b"),
-          (col("ni").cast("double") /
-            (col("na") + col("nb") - col("ni")).cast("double")).as("jac"))
+        .select(col("doc_a"), col("doc_b"), (col("na") + col("nb")).as("tot"), col("ni"))
     }
-    jac.filter(col("jac") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jac"), 6).as("jaccard"))
-      .orderBy("doc_a", "doc_b")
+    acceptedPairs(counts, jaccardOfCounts >= threshold, jaccardOfCounts, "jaccard")
   }
 
   /** INCREMENTAL near-dup: pairs that touch the NEW batch (doc_id >=

@@ -40,7 +40,9 @@ object Materialize {
   private val buildSecs =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
 
-  def timedBuild[T](key: String)(f: => T): T = {
+  /** Runs every build [[memo]] forces (the benchmark's probe tags a job
+    * as an index build by this frame on its call site). */
+  private[operators] def timedBuild[T](key: String)(f: => T): T = {
     val t0 = System.nanoTime()
     val r = f
     buildSecs.put(key, (System.nanoTime() - t0) / 1e9)
@@ -51,6 +53,45 @@ object Materialize {
     import scala.jdk.CollectionConverters._
     buildSecs.asScala.map { case (k, v) => k -> v.doubleValue }.toMap
   }
+
+  /** A build forced at most once; the lock is the holder's own. */
+  private final class Once(build: => Any) { lazy val value: Any = build }
+
+  private val built = new java.util.concurrent.ConcurrentHashMap[String, Once]()
+  private val evictionHooked = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** The one in-JVM index memo: `build` runs at most once per
+    * (session, content key), its wall time lands in [[buildTimes]]
+    * under `key`, and every later call gets the same value.
+    *
+    * The map stores a lazy holder and the build is forced OUTSIDE
+    * `computeIfAbsent`, so a build may memoize other builds (the PQ
+    * code table trains its codebook and reads the assignment inside its
+    * own build) — a value computed inside `computeIfAbsent` may not
+    * touch the map ("Recursive update"). Entries clear when the
+    * session's SparkContext ends, so a JVM that cycles contexts keeps
+    * no dead context's index plans reachable. */
+  def memo[T](spark: SparkSession, key: String)(build: => T): T = {
+    val sc = spark.sparkContext
+    if (evictionHooked.add(sc.applicationId))
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+          built.clear()
+      })
+    built.computeIfAbsent(s"${sessionKey(spark)}:$key",
+      _ => new Once(timedBuild(key)(build))).value.asInstanceOf[T]
+  }
+
+  /** [[memo]] over [[table]]: a materialized index, built once. */
+  def index(spark: SparkSession, key: String)(df: => DataFrame): DataFrame =
+    memo(spark, key)(table(spark, key)(df))
+
+  /** Row count of `df`, one columnar count per (session, plan). */
+  def count(df: DataFrame): Long =
+    memo(df.sparkSession, s"count:${df.queryExecution.logical.semanticHash()}")(
+      df.select(org.apache.spark.sql.functions.count(
+        org.apache.spark.sql.functions.lit(1))).head().getLong(0))
 
   private def fsPath(spark: SparkSession, p: String) = {
     val hp = new org.apache.hadoop.fs.Path(p)

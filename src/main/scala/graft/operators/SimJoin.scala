@@ -157,7 +157,8 @@ object SimJoin {
       // restore the registry's id ordering (probe orientation is by size)
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-    verify(ranked, cand, num.toDouble / den, "jaccard")
+    Dedup.acceptedPairs(verify(ranked, cand),
+      Dedup.jaccardOfCounts >= num.toDouble / den, Dedup.jaccardOfCounts, "jaccard")
   }
 
   /** All DIRECTED document pairs where doc_a's gram set is ≥ num/den
@@ -203,7 +204,9 @@ object SimJoin {
     val cand = positionalCandidates(cand0)(
       bound => bound * den >= col("na") * num,
       minMatches = least(lit(PrefixExt.toLong), ceilMul(col("na"), num, den)))
-    verify(ranked, cand, num.toDouble / den, "containment")
+    val contained = col("ni").cast("double") / col("na").cast("double")
+    Dedup.acceptedPairs(verify(ranked, cand),
+      contained >= num.toDouble / den, contained, "containment")
   }
 
   /** All pairs with exact BINARY-COSINE similarity ≥ num/den over the
@@ -243,7 +246,13 @@ object SimJoin {
       minMatches = least(lit(PrefixExt.toLong), ceilMul(col("na"), num, den)))
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-    verify(ranked, cand, num.toDouble / den, "cosine", num, den)
+    // accept decision in exact integers (squared inequality); the
+    // reported similarity is the one place a double appears, and it is
+    // the same IEEE sqrt+divide+round both engines compute
+    val counts = verify(ranked, cand).withColumn("nb", col("tot") - col("na"))
+    Dedup.acceptedPairs(counts,
+      col("ni") * col("ni") * (den * den) >= col("na") * col("nb") * (num * num),
+      col("ni").cast("double") / sqrt((col("na") * col("nb")).cast("double")), "cosine")
   }
 
   /** Convenience builds for spec use: stage the index eagerly (it feeds
@@ -259,71 +268,11 @@ object SimJoin {
       num: Int, den: Int): DataFrame =
     containmentJoinFromIndex(Materialize.stage(rankedGramIndex(docs, mkGrams)), num, den)
 
-  /** Exact verification over a candidate pair table, gram-level (the
-    * same skinny-row shape as [[Dedup.verifyJaccard]]: |A∩B| as a
-    * (pair, gram) equi-join count, sizes from per-doc counts —
-    * partial-aggregable end to end, no per-doc arrays), with the gram
-    * streams SERVED FROM THE INDEX (bare scans of the materialized
-    * table restricted to candidate docs) instead of re-tokenizing the
-    * corpus. Denominator is |A∪B| for jaccard, |A| for containment.
-    * The candidate persist is bounded by the candidate-pair
-    * neighborhood, never the corpus. */
-  private def verify(ranked: DataFrame, cand0: DataFrame,
-      threshold: Double, mode: String,
-      num: Int = 0, den: Int = 0): DataFrame = {
-    val cand = cand0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // PAIR-MEMBERSHIP rewrite (r15 optimization round, guide §2.4) —
-    // the [[Dedup.verifyJaccard]] shape: each candidate pair explodes
-    // into its two (pair, doc_id) rows, ONE doc_id equi-join attaches
-    // the index's gram stream, and one (pair, gram) count derives
-    // ni / na / nb together (index grams are distinct per doc, so a
-    // shared gram's cell has c = 2; na = #cells whose doc_a side was
-    // present, nb = Σc − na). Replaces the two per-side gram legs, the
-    // size aggregate and both size join-backs: the gram stream is
-    // shuffled once, 5 joins → 1. Same longs, same double arithmetic.
-    val mem = cand.select(col("doc_a"), col("doc_b"),
-      explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-    val candIds = mem.select("doc_id").distinct()
-    val grams = ranked.select(col("doc_id"), col("g"))
-      .join(candIds, Seq("doc_id"), "left_semi")
-    val sized = grams.join(mem, Seq("doc_id"))
-      .groupBy(col("doc_a"), col("doc_b"), col("g"))
-      .agg(count(lit(1)).as("c"),
-        max(when(col("doc_id") === col("doc_a"), 1L).otherwise(0L)).as("ia"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(sum(col("c")).as("tot"), sum(col("ia")).as("na"),
-        sum(when(col("c") === 2, 1L).otherwise(0L)).as("ni"))
-      .withColumn("nb", col("tot") - col("na"))
-    // zero-intersection pairs now surface with ni = 0 and fall to the
-    // positive-threshold filter / integer accept test — same result set
-    // as the former inner-join-on-intersection form
-    mode match {
-      case "containment" =>
-        sized.select(col("doc_a"), col("doc_b"),
-            (col("ni").cast("double") / col("na").cast("double")).as("s"))
-          .filter(col("s") >= threshold)
-          .select(col("doc_a"), col("doc_b"), round(col("s"), 6).as("containment"))
-          .orderBy("doc_a", "doc_b")
-      case "jaccard" =>
-        sized
-          .select(col("doc_a"), col("doc_b"),
-            (col("ni").cast("double") /
-              (col("na") + col("nb") - col("ni")).cast("double")).as("s"))
-          .filter(col("s") >= threshold)
-          .select(col("doc_a"), col("doc_b"), round(col("s"), 6).as("jaccard"))
-          .orderBy("doc_a", "doc_b")
-      case "cosine" =>
-        // accept decision in exact integers (squared inequality); the
-        // reported similarity is the one place a double appears, and it
-        // is the same IEEE sqrt+divide+round both engines compute
-        sized
-          .filter(col("ni") * col("ni") * (den * den) >=
-            col("na") * col("nb") * (num * num))
-          .select(col("doc_a"), col("doc_b"),
-            round(col("ni").cast("double") /
-              sqrt((col("na") * col("nb")).cast("double")), 6).as("cosine"))
-          .orderBy("doc_a", "doc_b")
-    }
-  }
+  /** Pair-gram counts of a candidate pair table ([[Dedup.pairGramCounts]])
+    * with the gram streams SERVED FROM THE INDEX — bare scans of the
+    * materialized table restricted to candidate docs — instead of
+    * re-tokenizing the corpus. */
+  private def verify(ranked: DataFrame, cand: DataFrame): DataFrame =
+    Dedup.pairGramCounts(cand, ids =>
+      ranked.select(col("doc_id"), col("g")).join(ids, Seq("doc_id"), "left_semi"))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -119,6 +119,70 @@ object Similarity {
       planes: Int = LshPlanes): Column =
     graft.functions.GraftFunctions.lsh_bucket(spark, e, planes)
 
+  // ---- the ANN core: candidates → score → rank ------------------------
+  //
+  // Every top-k path is one candidate generator (all pairs, the query's
+  // LSH bucket within a probe radius, its `nprobe` IVF cells, or a
+  // quantized shortlist), one scorer (rounded cosine over float or int8
+  // vectors, or PQ's ADC distance) and the one ranker below; refining
+  // paths re-rank their shortlist with [[exactRefine]].
+
+  /** Rounded native cosine — the score every float and int8 path ranks
+    * on, rounded to 6 digits before ranking so both engines order
+    * identically. */
+  private def roundedCos(spark: SparkSession, a: Column, b: Column): Column =
+    round(graft.functions.GraftFunctions.cosine_sim(spark, a, b), 6)
+
+  /** The query slice (vec_id < nQueries) as (query_id, `cols`…). */
+  private def queries(df: DataFrame, nQueries: Int, cols: Column*): DataFrame =
+    df.filter(col("vec_id") < nQueries).select(col("vec_id").as("query_id") +: cols: _*)
+
+  /** The cosine scorer: corpus rows (vec_id, `cvec`, …) against the
+    * BROADCAST query side (query_id, `qvec`, …) — the query batch is
+    * API-bounded tiny, so the corpus side never shuffles — matched on
+    * the candidate generator's key (`on`: LSH bucket or IVF cell; none
+    * for brute force), self-pairs excluded. */
+  private def cosineScored(corpus: DataFrame, qs: DataFrame, on: Option[Column],
+      qvec: String, cvec: String, as: String = "cos_sim"): DataFrame = {
+    val notSelf = col("vec_id") =!= col("query_id")
+    corpus.join(broadcast(qs), on.fold(notSelf)(_ && notSelf))
+      .select(col("query_id"), col("vec_id").as("cand_id"),
+        roundedCos(corpus.sparkSession, col(qvec), col(cvec)).as(as))
+  }
+
+  /** The one ranker: per query, `score` descending (ascending for a
+    * distance) with cand_id ascending as the total-order tie-break,
+    * ranks ≤ k kept as `rnk`. It ranks final top-k's, refine
+    * shortlists and probe cells alike. */
+  private def topPerQuery(scored: DataFrame, score: String, k: Int,
+      ascending: Boolean = false): DataFrame = {
+    val order = if (ascending) col(score).asc else col(score).desc
+    scored.withColumn("rnk", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(order, col("cand_id").asc))
+        .cast("long"))
+      .filter(col("rnk") <= k)
+  }
+
+  /** The top-k output shape: (query_id, rnk, cand_id, score) in rank order. */
+  private def ranked(scored: DataFrame, score: String, k: Int): DataFrame =
+    topPerQuery(scored, score, k)
+      .select(col("query_id"), col("rnk"), col("cand_id"), col(score))
+      .orderBy("query_id", "rnk")
+
+  /** Exact refine: true float cosines over the original vectors decide
+    * the final k of a (query_id, cand_id) shortlist — bounded at
+    * shortlist-size vector reads, repairing the quantized score's error
+    * in the final ranking. */
+  private def exactRefine(emb: DataFrame, short: DataFrame, nQueries: Int,
+      k: Int): DataFrame =
+    ranked(short.select(col("query_id"), col("cand_id"))
+        .join(emb.select(col("vec_id").as("cand_id"), col("embedding").as("cemb")),
+          "cand_id")
+        .join(broadcast(queries(emb, nQueries, col("embedding").as("qe"))), "query_id")
+        .select(col("query_id"), col("cand_id"),
+          roundedCos(emb.sparkSession, col("qe"), col("cemb")).as("cos_sim")),
+      "cos_sim", k)
+
   /** Corpus size above which [[bruteForceTopK]] switches from the
     * single per-query window to the bucketed two-stage top-k. Below
     * it the single sort fits executor memory and the extra exchange
@@ -139,108 +203,51 @@ object Similarity {
     *    ~N/256 rows, stage 2 ranks the ≤ 256·k survivors per query.
     *    Top-k of a union = top-k of the per-bucket top-k's, so the
     *    result is identical while the sort spill shrinks 256×.
-    * Pass `corpusCount` when the caller knows it (flagships and the
-    * registry do); the fallback is one columnar count, MEMOIZED per
-    * (session, plan) so repeated calls — and plan inspection — pay it
-    * once (review finding: an un-memoized count re-ran the emb lineage
-    * on every invocation). */
-  private val bruteCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
+    * Without `corpusCount` the corpus size is [[Materialize.count]]. */
   def bruteForceTopK(emb: DataFrame, nQueries: Int, k: Int,
       corpusCount: Option[Long] = None): DataFrame = {
-    val q = emb.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      .filter(col("query_id") < nQueries)
-    val c = emb.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
-    val scored = c.join(broadcast(q), col("cand_id") =!= col("query_id"))
-      .select(col("query_id"), col("cand_id"),
-        round(graft.functions.GraftFunctions.cosine_sim(
-          emb.sparkSession, col("qe"), col("ce")), 6).as("cos_sim"))
-    val n = corpusCount.getOrElse(bruteCountMemo.computeIfAbsent(
-      s"${Materialize.sessionKey(emb.sparkSession)}:" +
-        s"${emb.queryExecution.logical.semanticHash()}",
-      _ => emb.select(count(lit(1))).head().getLong(0)))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    val prefiltered =
+    val scored = cosineScored(emb, queries(emb, nQueries, col("embedding").as("qe")),
+      None, "qe", "embedding")
+    val n = corpusCount.getOrElse(Materialize.count(emb))
+    ranked(
       if (n < BruteBucketMin) scored
-      else {
-        val wb = Window.partitionBy(col("query_id"), col("bkt"))
-          .orderBy(col("cos_sim").desc, col("cand_id").asc)
-        scored
-          .withColumn("bkt", pmod(col("cand_id"), lit(256)))
-          .withColumn("rb", row_number().over(wb))
-          .filter(col("rb") <= k)
-      }
-    prefiltered.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"), col("cos_sim"))
-      .orderBy("query_id", "rnk")
+      else scored.withColumn("bkt", pmod(col("cand_id"), lit(256)))
+        .withColumn("rb", row_number().over(Window.partitionBy(col("query_id"), col("bkt"))
+          .orderBy(col("cos_sim").desc, col("cand_id").asc)))
+        .filter(col("rb") <= k),
+      "cos_sim", k)
   }
 
-  /** Sign-LSH top-k: candidates restricted to the query's bucket.
-    * Approximate by design; recall/cost tuned via TargetBucket. The
-    * plane count derives from the corpus count (pass the memoized
-    * catalog stat `Tables.rowCount` as `corpusCount`; the fallback
-    * count(*) is the same table-stats read any cost-based planner
-    * does), so bucket sizes hold steady as the corpus grows. */
+  /** Sign-LSH top-k: candidates restricted to the query's bucket, or
+    * at `radius` 1 to it and every bucket one hyperplane bit away
+    * (MULTIPROBE — Lv et al. 2007's recall repair with the
+    * deterministic all-distance-1 probe set, which both engines
+    * reproduce without ranking hyperplane margins). Radius 1 finds a
+    * vector differing from the query in exactly one plane's sign, which
+    * radius 0 cannot, so its candidates are a strict superset and recall
+    * is monotonically ≥ at (planes+1)× the candidate volume. Both radii
+    * run the same join: the probe list explodes on the BROADCAST query
+    * side, the corpus computes one bucket per vector and never
+    * shuffles, and probe buckets are distinct, so each (query,
+    * candidate) pair joins at most once.
+    *
+    * The plane count derives from the corpus count (pass the memoized
+    * catalog stat `Tables.rowCount` as `corpusCount`; the fallback is
+    * [[Materialize.count]]), so bucket sizes hold steady as the corpus
+    * grows. */
   def lshTopK(emb: DataFrame, nQueries: Int, k: Int,
-      corpusCount: Option[Long] = None): DataFrame = {
-    val planes = planesFor(corpusCount.getOrElse(emb.count()))
+      corpusCount: Option[Long] = None, radius: Int = 0): DataFrame = {
+    require(radius == 0 || radius == 1, s"LSH probe radius must be 0 or 1, got $radius")
+    val planes = planesFor(corpusCount.getOrElse(Materialize.count(emb)))
     val sig = emb.select(col("vec_id"), col("embedding"),
       lshBucketCol(emb.sparkSession, col("embedding"), planes).as("bucket"))
-    val q = sig.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-      col("bucket").as("qbucket")).filter(col("query_id") < nQueries)
-    val scored = sig.join(broadcast(q),
-        col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("cand_id"),
-        round(graft.functions.GraftFunctions.cosine_sim(
-          emb.sparkSession, col("qe"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"), col("cos_sim"))
-      .orderBy("query_id", "rnk")
-  }
-
-  /** MULTIPROBE sign-LSH top-k: each query searches its home bucket
-    * PLUS every Hamming-1 neighbor (one hyperplane bit flipped) — the
-    * standard recall repair for bucketed LSH (Lv et al. 2007's
-    * multi-probe idea with the deterministic all-distance-1 probe set,
-    * which both engines reproduce without ranking hyperplane margins).
-    * A vector differing from the query by exactly one plane's sign is
-    * invisible to [[lshTopK]] but found here, so candidates are a
-    * strict superset of single-probe's (the home bucket is probe 0) and
-    * recall is monotonically ≥ at (planes+1)× the candidate volume —
-    * still a ~2^planes/(planes+1) reduction over brute force. Plan
-    * shape is IDENTICAL to single-probe: the probe list explodes on the
-    * BROADCAST query side (nQueries·(planes+1) rows), the corpus side
-    * computes one bucket per vector and never shuffles; probe buckets
-    * are distinct by construction, so each (query, candidate) pair
-    * joins at most once and no dedup pass is needed. */
-  def lshTopKProbed(emb: DataFrame, nQueries: Int, k: Int,
-      corpusCount: Option[Long] = None): DataFrame = {
-    val spark = emb.sparkSession
-    val planes = planesFor(corpusCount.getOrElse(emb.count()))
-    val sig = emb.select(col("vec_id"), col("embedding"),
-      lshBucketCol(spark, col("embedding"), planes).as("bucket"))
-    val probes = array(col("bucket") +: (0 until planes).map(j =>
-      col("bucket").bitwiseXOR(lit(1 << j))): _*)
-    val q = sig.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        explode(probes).as("qbucket"))
-    val scored = sig.join(broadcast(q),
-        col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("cand_id"),
-        round(graft.functions.GraftFunctions.cosine_sim(
-          spark, col("qe"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"), col("cos_sim"))
-      .orderBy("query_id", "rnk")
+    val probe = if (radius == 0) col("bucket")
+      else explode(array(col("bucket") +: (0 until planes).map(j =>
+        col("bucket").bitwiseXOR(lit(1 << j))): _*))
+    ranked(cosineScored(sig,
+        queries(sig, nQueries, col("embedding").as("qe"), probe.as("qbucket")),
+        Some(col("bucket") === col("qbucket")), "qe", "embedding"),
+      "cos_sim", k)
   }
 
   /** Centroid-table broadcast cutoff: past this many centroids the
@@ -265,8 +272,7 @@ object Similarity {
     val side = if (k <= MaxBroadcastCentroids) broadcast(cents) else cents
     emb.crossJoin(side)
       .select(col("vec_id"), col("embedding"), col("cent_id"),
-        round(graft.functions.GraftFunctions.cosine_sim(
-          spark, col("embedding"), col(centCol)), 6).as("ccos"))
+        roundedCos(spark, col("embedding"), col(centCol)).as("ccos"))
   }
 
   /** Training-sample size multiple: the Lloyd re-centering trains on
@@ -344,38 +350,31 @@ object Similarity {
         expr("2097151 - (p % 2097152)").as("cell"),
         expr("CAST(p DIV 2097152 - 1000000 AS DOUBLE) / 1000000.0").as("ccos"))
 
-  /** Lloyd-iterated centroid table (cent_id, ce1), K rows — an ANN
-    * INDEX structure, built once per (session, corpus, parameters) and
-    * memoized, exactly like a production IVF deployment trains its
-    * coarse quantizer once and serves every query from the build. The
-    * first consumer pays the (sample-bounded) training job via
-    * [[Materialize.table]] — eager localCheckpoint in-JVM, durable
-    * content-keyed parquet when spark.graft.index.dir is set; every
-    * later consumer — nprobe=1, multiprobe, assignment — starts from
-    * the materialized K-row table. Keyed on the canonicalized input
-    * plan, so distinct corpora never share an index. Never the SQL
-    * cache: per-query clearCache hygiene must not evict an index
-    * build. */
-  private val centroidMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Int)]()
+  /** Content key of an index over `emb`: tag, canonical-plan hash,
+    * parameters and the source-file fingerprint — the fingerprint is
+    * what stops a REGENERATED corpus under the same path from being
+    * served a stale durable index. */
+  private def indexKey(tag: String, emb: DataFrame, params: Any*): String =
+    s"$tag:${emb.queryExecution.logical.semanticHash()}${params.map(p => s":$p").mkString}" +
+      s"@${Materialize.sourceFingerprint(emb.sparkSession, emb.inputFiles.toSeq)}"
 
+  private def ivfKey(tag: String, emb: DataFrame, minCentroids: Int,
+      corpusCount: Option[Long]): String =
+    indexKey(tag, emb, minCentroids, corpusCount.getOrElse(-1L))
+
+  /** Lloyd-iterated centroid table (cent_id, ce1), K rows — an ANN
+    * INDEX structure, built once per (session, corpus, parameters)
+    * through [[Materialize.memo]], exactly like a production IVF
+    * deployment trains its coarse quantizer once and serves every query
+    * from the build. Never the SQL cache: per-query clearCache hygiene
+    * must not evict an index build. */
   private[graft] def ivfCentroids(emb: DataFrame, minCentroids: Int,
       corpusCount: Option[Long]): (DataFrame, Int) = {
-    // content key: canonicalized-plan hash + parameters + source-file
-    // fingerprint (shared by the durable parquet path — the fingerprint
-    // is what stops a REGENERATED corpus under the same path from being
-    // served a stale centroid table); memo key prefixes the session
-    // UUID — stable and never reused, unlike identityHashCode
-    val spark = emb.sparkSession
-    val contentKey = s"ivfCentroids:${emb.queryExecution.logical.semanticHash()}:" +
-      s"$minCentroids:${corpusCount.getOrElse(-1L)}" +
-      s"@${Materialize.sourceFingerprint(spark, emb.inputFiles.toSeq)}"
-    centroidMemo.computeIfAbsent(s"${Materialize.sessionKey(spark)}:$contentKey",
-      _ => Materialize.timedBuild(contentKey) {
-        val k = centroidsFor(corpusCount.getOrElse(emb.count()), minCentroids)
-        val c = Materialize.table(spark, contentKey)(trainCentroids(emb, k))
-        (c, k)
-      })
+    val key = ivfKey("ivfCentroids", emb, minCentroids, corpusCount)
+    Materialize.memo(emb.sparkSession, key) {
+      val k = centroidsFor(corpusCount.getOrElse(Materialize.count(emb)), minCentroids)
+      (Materialize.table(emb.sparkSession, key)(trainCentroids(emb, k)), k)
+    }
   }
 
   private def trainCentroids(emb: DataFrame, k: Int): DataFrame = {
@@ -395,18 +394,9 @@ object Similarity {
     cents1
   }
 
-  private def ivfScored(emb: DataFrame, minCentroids: Int,
-      corpusCount: Option[Long]): DataFrame = {
-    val (cents1, k) = ivfCentroids(emb, minCentroids, corpusCount)
-    scoreAgainst(emb, cents1, k, "ce1")
-  }
-
-  private val assignMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The INVERTED FILE itself, as a built-once index: the narrow
-    * (vec_id, cell, ccos) corpus→cell assignment, memoized through
-    * [[Materialize.table]] exactly like the centroid table. Before this
+    * (vec_id, cell, ccos) corpus→cell assignment, built once through
+    * [[Materialize.index]] exactly like the centroid table. Before this
     * existed, every IVF consumer (nprobe=1, multiprobe, IVF-PQ,
     * semantic dedup) re-ran the N×K assignment join per call — measured
     * at 1M vectors that is ~185 s of redundant cosine evaluation per
@@ -416,20 +406,15 @@ object Similarity {
     * vec_id (co-partitionable, broadcastable at small SF) instead of
     * being duplicated into the index files. */
   def ivfAssignIndex(emb: DataFrame, minCentroids: Int,
-      corpusCount: Option[Long] = None): DataFrame = {
-    val spark = emb.sparkSession
-    val contentKey = s"ivfAssign:${emb.queryExecution.logical.semanticHash()}:" +
-      s"$minCentroids:${corpusCount.getOrElse(-1L)}" +
-      s"@${Materialize.sourceFingerprint(spark, emb.inputFiles.toSeq)}"
-    assignMemo.computeIfAbsent(s"${Materialize.sessionKey(spark)}:$contentKey",
-      _ => Materialize.timedBuild(contentKey)(Materialize.table(spark, contentKey)(
-        // narrow end-to-end: score WITHOUT carrying the vector and
-        // argmax over (cent_id, ccos) only — same winners, 10× smaller
-        // rows through the N×K stream (see [[argmaxCellNarrow]])
-        argmaxCellNarrow(
-          ivfScored(emb, minCentroids, corpusCount)
-            .select(col("vec_id"), col("cent_id"), col("ccos"))))))
-  }
+      corpusCount: Option[Long] = None): DataFrame =
+    Materialize.index(emb.sparkSession, ivfKey("ivfAssign", emb, minCentroids, corpusCount)) {
+      val (cents1, k) = ivfCentroids(emb, minCentroids, corpusCount)
+      // narrow end-to-end: score WITHOUT carrying the vector and
+      // argmax over (cent_id, ccos) only — same winners, 10× smaller
+      // rows through the N×K stream (see [[argmaxCellNarrow]])
+      argmaxCellNarrow(scoreAgainst(emb, cents1, k, "ce1")
+        .select(col("vec_id"), col("cent_id"), col("ccos")))
+    }
 
   /** IVF INDEX INTROSPECTION — the [[Search.indexStats]] twin for the
     * ANN family: cell-occupancy distribution of the served assignment
@@ -443,12 +428,7 @@ object Similarity {
     * appears only through the already-materialized assignment index. */
   def ivfIndexStats(emb: DataFrame, minCentroids: Int,
       corpusCount: Option[Long] = None): DataFrame = {
-    // count via the brute memo (review finding: a bare emb.count() here
-    // re-ran the embeddings lineage on every call / plan inspection)
-    val k = centroidsFor(corpusCount.getOrElse(bruteCountMemo.computeIfAbsent(
-      s"${Materialize.sessionKey(emb.sparkSession)}:" +
-        s"${emb.queryExecution.logical.semanticHash()}",
-      _ => emb.select(count(lit(1))).head().getLong(0))), minCentroids)
+    val (_, k) = ivfCentroids(emb, minCentroids, corpusCount)
     val cells = ivfAssignIndex(emb, minCentroids, corpusCount)
       .groupBy("cell").agg(count(lit(1)).as("cn"))
     cells.agg(
@@ -505,56 +485,59 @@ object Similarity {
       .union(grade("ivf_int8", ivfInt8TopK(emb, minCentroids, nQueries, k,
         nprobe = 2, refine = 4, corpusCount = corpusCount)))
       .union(grade("ivf_p2",
-        ivfTopKProbed(emb, minCentroids, nQueries, k, 2, corpusCount)))
+        ivfTopK(emb, minCentroids, nQueries, k, corpusCount, nprobe = 2)))
       .orderBy("method")
   }
 
   /** Assignment with embeddings re-attached — (vec_id, embedding, cell,
     * ccos), the working shape every IVF consumer scores against. */
-  private def assignedWithEmb(emb: DataFrame, minCentroids: Int,
-      corpusCount: Option[Long]): DataFrame =
+  def ivfAssign(emb: DataFrame, minCentroids: Int,
+      corpusCount: Option[Long] = None): DataFrame =
     emb.select(col("vec_id"), col("embedding"))
       .join(ivfAssignIndex(emb, minCentroids, corpusCount), "vec_id")
       .select(col("vec_id"), col("embedding"), col("cell"), col("ccos"))
 
-  def ivfAssign(emb: DataFrame, minCentroids: Int,
-      corpusCount: Option[Long] = None): DataFrame =
-    assignedWithEmb(emb, minCentroids, corpusCount)
+  /** Probe cells: each query ranks every centroid in its own tiny plan
+    * (nQueries × K rows, never the corpus) by (rounded cosine DESC,
+    * centroid id ASC) and keeps the top `nprobe` as (query_id, qe,
+    * qcell). Rank 1 is the home cell — the assignment index's argmax —
+    * so probe sets only grow with nprobe. */
+  private[graft] def probeCells(emb: DataFrame, minCentroids: Int, nQueries: Int,
+      nprobe: Int, corpusCount: Option[Long]): DataFrame = {
+    val (cents1, kc) = ivfCentroids(emb, minCentroids, corpusCount)
+    topPerQuery(scoreAgainst(emb.filter(col("vec_id") < nQueries), cents1, kc, "ce1")
+        .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
+          col("cent_id").as("cand_id"), col("ccos")),
+      "ccos", nprobe)
+      .select(col("query_id"), col("qe"), col("cand_id").as("qcell"))
+  }
 
-  /** IVF top-k: search restricted to the query's cell (nprobe=1). The
-    * second of the two ANN scale paths (sign-LSH buckets being the
-    * other); cells shuffle on cell id exactly like LSH buckets. */
+  /** The query slice with its home cell read off an assignment view. */
+  private def homeCells(assigned: DataFrame, nQueries: Int): DataFrame =
+    queries(assigned, nQueries, col("embedding").as("qe"), col("cell").as("qcell"))
+
+  /** Exact top-k over the candidates in each query's cells. */
+  private[graft] def cellTopK(assigned: DataFrame, qs: DataFrame, k: Int): DataFrame =
+    ranked(cosineScored(assigned, qs, Some(col("cell") === col("qcell")),
+      "qe", "embedding"), "cos_sim", k)
+
+  /** IVF top-k: each query searches its `nprobe` nearest cells — the
+    * second ANN scale path (sign-LSH buckets being the other). nprobe =
+    * 1 is the home cell, read straight off the materialized assignment
+    * index, so it needs no query-slice ranking plan. nprobe > 1 is
+    * MULTIPROBE, the standard recall repair for coarse quantization (a
+    * query near a cell boundary has its true neighbors in the adjacent
+    * cell): candidates are a superset of nprobe = 1's, so recall is
+    * monotonically ≥ at nprobe × the scoring cost. No dedup is needed:
+    * a candidate lives in exactly one home cell and a query's probe
+    * cells are distinct, so each (query, cand) joins once. */
   def ivfTopK(emb: DataFrame, minCentroids: Int, nQueries: Int, k: Int,
-      corpusCount: Option[Long] = None): DataFrame =
-    // both sides of the self-join read the MATERIALIZED assignment index
-    // (narrow table + vec_id equi-join to re-attach embeddings) — the
-    // N×K assignment job runs once per (session, corpus, params), not
-    // once per consumer subtree
-    ivfProbe(ivfAssign(emb, minCentroids, corpusCount), nQueries, k)
-
-  /** The nprobe=1 probe over ANY (vec_id, embedding, cell, ccos)
-    * assignment view — shared by the one-shot index ([[ivfTopK]]) and
-    * the incremental base+delta serve ([[ivfTopKIncremental]]). */
-  private def ivfProbe(assigned: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val spark = assigned.sparkSession
-    val q = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("cell").as("qcell"))
-    // the query batch is API-bounded tiny — broadcast it like the other
-    // ANN paths (bruteForce/lsh) so the corpus side never shuffles on
-    // cell; the vec_id < nQueries filter also pushes through the argmax
-    // grouping to the scan, so the q subtree only scores the query slice
-    val scored = assigned.join(broadcast(q),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("cand_id"),
-        round(graft.functions.GraftFunctions.cosine_sim(
-          spark, col("qe"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"), col("cos_sim"))
-      .orderBy("query_id", "rnk")
+      corpusCount: Option[Long] = None, nprobe: Int = 1): DataFrame = {
+    val assigned = ivfAssign(emb, minCentroids, corpusCount)
+    cellTopK(assigned,
+      if (nprobe == 1) homeCells(assigned, nQueries)
+      else probeCells(emb, minCentroids, nQueries, nprobe, corpusCount),
+      k)
   }
 
   // ---- incremental adds (the FAISS IVF `add` semantics) ---------------
@@ -616,7 +599,7 @@ object Similarity {
     val assigned = emb.select(col("vec_id"), col("embedding"))
       .join(assignedNarrow, "vec_id")
       .select(col("vec_id"), col("embedding"), col("cell"), col("ccos"))
-    ivfProbe(assigned, nQueries, k)
+    cellTopK(assigned, homeCells(assigned, nQueries), k)
   }
 
   /** Hot-bucket cap for the embedding near-dup self-join: a bucket
@@ -631,50 +614,6 @@ object Similarity {
     * the corpus grows, so the cap only ever trims pathological dense
     * cells instead of dropping nearly every bucket. */
   val MaxLshBucket = 512
-
-  /** IVF top-k with MULTIPROBE: each query searches its `nprobe` nearest
-    * cells instead of only its home cell — the standard recall repair for
-    * coarse quantization (a query near a cell boundary has its true
-    * neighbors in the adjacent cell). Candidates are a superset of the
-    * nprobe=1 candidates BY CONSTRUCTION (probe cell ranks 1..nprobe
-    * include rank 1), so recall is monotonically >= ivfTopK's at nprobe x
-    * the scoring cost. Cell ranking is deterministic (rounded cosine
-    * DESC, centroid id ASC) so the oracle reproduces the exact probes;
-    * the probe list is an equi-join key — cells shuffle once, same plan
-    * shape as nprobe=1. */
-  def ivfTopKProbed(emb: DataFrame, minCentroids: Int, nQueries: Int, k: Int,
-      nprobe: Int, corpusCount: Option[Long] = None): DataFrame = {
-    val spark = emb.sparkSession
-    // NB: kc is the CENTROID count — naming it `k` would shadow the top-k
-    // parameter and turn the final rank filter into "top-K-centroids"
-    val (cents1, kc) = ivfCentroids(emb, minCentroids, corpusCount)
-    // the corpus side serves from the materialized assignment index;
-    // the probe ranking below scores the QUERY SLICE against the same
-    // (checkpointed) centroid table in its own tiny plan (nQueries × K
-    // rows), never the corpus
-    val assigned = assignedWithEmb(emb, minCentroids, corpusCount)
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("cent_id").asc)
-    val probes = scoreAgainst(emb.filter(col("vec_id") < nQueries), cents1, kc, "ce1")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("cent_id").as("qcell"))
-    // nQueries × nprobe rows — broadcast like every other ANN query side
-    val cands = assigned.join(broadcast(probes),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("cand_id"),
-        round(graft.functions.GraftFunctions.cosine_sim(
-          spark, col("qe"), col("embedding")), 6).as("cos_sim"))
-    // no dedup needed: a candidate lives in exactly ONE home cell and the
-    // probe cells per query are distinct, so each (query, cand) joins once
-    val wq = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    cands.withColumn("rnk", row_number().over(wq).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"), col("cos_sim"))
-      .orderBy("query_id", "rnk")
-  }
 
   // ---- IVF-PQ ----------------------------------------------------------
 
@@ -738,7 +677,7 @@ object Similarity {
     val (cents1, kc) = ivfCentroids(emb, minCentroids, corpusCount)
     val cside = cents1.select(col("cent_id").as("cell"), col("ce1").as("ce"))
     val joined = if (kc <= MaxBroadcastCentroids) broadcast(cside) else cside
-    assignedWithEmb(emb, minCentroids, corpusCount)
+    ivfAssign(emb, minCentroids, corpusCount)
       .join(joined, "cell")
       .select(col("vec_id"), col("embedding"), col("ce"))
   }
@@ -748,9 +687,6 @@ object Similarity {
     (1 to PqSubDim).map { j =>
       val d = col(s"qa$j") - col(s"qc$j"); d * d
     }.reduce(_ + _)
-
-  private val pqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** PQ codebook — (sub, code, qc1..qc4), ≤ [[PqSub]]·[[PqCodes]] rows,
     * trained on RESIDUAL subvectors. Training mirrors the IVF build:
@@ -763,13 +699,9 @@ object Similarity {
     * geometry) so a durable index dir written by the pre-residual code
     * can never be served to this one. */
   private def pqCodebook(emb: DataFrame, minCentroids: Int,
-      corpusCount: Option[Long]): DataFrame = {
-    val spark = emb.sparkSession
-    val contentKey = s"pqCodebook:v2:${emb.queryExecution.logical.semanticHash()}:" +
-      s"$minCentroids:${corpusCount.getOrElse(-1L)}" +
-      s"@${Materialize.sourceFingerprint(spark, emb.inputFiles.toSeq)}"
-    pqMemo.computeIfAbsent(s"${Materialize.sessionKey(spark)}:$contentKey",
-      _ => Materialize.timedBuild(contentKey)(Materialize.table(spark, contentKey) {
+      corpusCount: Option[Long]): DataFrame =
+    Materialize.index(emb.sparkSession,
+        ivfKey("pqCodebook:v2", emb, minCentroids, corpusCount)) {
       // sample filter AFTER centroid attachment: the coarse quantizer
       // and assignment are the full-corpus index structures; only the
       // codebook's Lloyd step trains on the bounded prefix (the
@@ -795,8 +727,7 @@ object Similarity {
           floor(col(s"s$j").cast("double") / col("cnt").cast("double") + lit(0.5))
             .cast("long").as(s"qc$j")): _*)
       cents
-    }))
-  }
+    }
 
   /** Corpus PQ codes: per (vector, subspace) the argmin-distance code
     * (ties → lower code id). Like [[argmaxCellNarrow]], the argmin is
@@ -819,9 +750,6 @@ object Similarity {
       .select(col("vec_id"), col("sub"),
         (col("pk") % lit(PqCodes.toLong)).as("code"))
 
-  private val pqCodesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The PQ CODE TABLE as a built-once index, stored PACKED: all
     * [[PqSub]]=16 4-bit codes of a vector in ONE BIGINT (bit_or of
     * disjoint shifts — exactly 64 bits), so the durable structure is
@@ -838,22 +766,18 @@ object Similarity {
     * Key tag v3 = packed layout (a v2 flat dir is never reused). */
   private def pqCodesIndex(emb: DataFrame, minCentroids: Int,
       corpusCount: Option[Long]): DataFrame = {
-    val spark = emb.sparkSession
-    val contentKey = s"pqCodes:v3:${emb.queryExecution.logical.semanticHash()}:" +
-      s"$minCentroids:${corpusCount.getOrElse(-1L)}" +
-      s"@${Materialize.sourceFingerprint(spark, emb.inputFiles.toSeq)}"
-    pqCodesMemo.computeIfAbsent(s"${Materialize.sessionKey(spark)}:$contentKey",
-      _ => Materialize.timedBuild(contentKey) {
-        val packed = Materialize.table(spark, contentKey)(
-          pqEncode(residualSubvecs(withCentroid(emb, minCentroids, corpusCount)),
-            pqCodebook(emb, minCentroids, corpusCount))
-            .groupBy(col("vec_id"))
-            .agg(expr("bit_or(shiftleft(code, sub * 4))").as("packed")))
-        packed.select(col("vec_id"), col("packed"),
-            explode(sequence(lit(0), lit(PqSub - 1))).as("sub"))
-          .select(col("vec_id"), col("sub"),
-            expr("shiftright(packed, sub * 4) & CAST(15 AS BIGINT)").as("code"))
-      })
+    val key = ivfKey("pqCodes:v3", emb, minCentroids, corpusCount)
+    Materialize.memo(emb.sparkSession, key) {
+      val packed = Materialize.table(emb.sparkSession, key)(
+        pqEncode(residualSubvecs(withCentroid(emb, minCentroids, corpusCount)),
+          pqCodebook(emb, minCentroids, corpusCount))
+          .groupBy(col("vec_id"))
+          .agg(expr("bit_or(shiftleft(code, sub * 4))").as("packed")))
+      packed.select(col("vec_id"), col("packed"),
+          explode(sequence(lit(0), lit(PqSub - 1))).as("sub"))
+        .select(col("vec_id"), col("sub"),
+          expr("shiftright(packed, sub * 4) & CAST(15 AS BIGINT)").as("code"))
+    }
   }
 
   /** IVF-PQ top-k with refine — the production ANN index shape (FAISS
@@ -891,73 +815,37 @@ object Similarity {
   def ivfPqTopK(emb: DataFrame, minCentroids: Int, nQueries: Int, k: Int,
       corpusCount: Option[Long] = None, nprobe: Int = 1,
       refine: Int = RefineFactor): DataFrame = {
-    val spark = emb.sparkSession
     val (cents1, kc) = ivfCentroids(emb, minCentroids, corpusCount)
-    val assigned = ivfAssignIndex(emb, minCentroids, corpusCount)
-      .select(col("vec_id"), col("cell"))
     val cb = pqCodebook(emb, minCentroids, corpusCount)
     val codes = pqCodesIndex(emb, minCentroids, corpusCount)
-    // probe cells: the query slice ranks every centroid in its own tiny
-    // plan (nQueries × K rows) and keeps the top `nprobe`. Rank 1 IS the
-    // home cell (same rounded-cosine/cent-id argmax as the assignment
-    // index), so nprobe=1 reproduces the original home-cell-only search
-    // bit-for-bit and recall grows monotonically with nprobe — the
-    // standard recall repair for queries whose true neighbors sit just
-    // across a cell boundary.
-    val wp = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("cent_id").asc)
-    val probes0 = scoreAgainst(emb.filter(col("vec_id") < nQueries), cents1, kc, "ce1")
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id"), col("embedding"), col("cent_id").as("qcell"))
-    val cand = assigned.join(broadcast(
-        probes0.select(col("vec_id").as("query_id"), col("qcell"))),
+    val probes = probeCells(emb, minCentroids, nQueries, nprobe, corpusCount)
+    val cand = ivfAssignIndex(emb, minCentroids, corpusCount)
+      .select(col("vec_id"), col("cell"))
+      .join(broadcast(probes.select(col("query_id"), col("qcell"))),
         col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("cand_id"), col("qcell"))
     // query distance tables PER PROBED CELL: a probed cell's candidates
     // are coded as residuals against THAT cell's centroid, so the query
     // must be quantized in the same frame — its residual is recomputed
     // against each probe cell's centroid (classic per-cell lookup
-    // tables; the nprobe=1 case degenerates to the query's own home
-    // cell). nQueries × nprobe × PqSub × PqCodes rows — broadcast.
+    // tables). nQueries × nprobe × PqSub × PqCodes rows — broadcast.
     val centSide = cents1.select(col("cent_id").as("qcell"), col("ce1").as("ce"))
-    val probeCent = probes0.join(
-      if (kc <= MaxBroadcastCentroids) broadcast(centSide) else centSide, "qcell")
-    val qdt = residualSubvecs(probeCent, Seq("vec_id", "qcell"))
+    val probeCent = probes.select(col("query_id"), col("qe").as("embedding"), col("qcell"))
+      .join(if (kc <= MaxBroadcastCentroids) broadcast(centSide) else centSide, "qcell")
+    val qdt = residualSubvecs(probeCent, Seq("query_id", "qcell"))
       .join(broadcast(cb), "sub")
-      .select(col("vec_id").as("query_id"), col("qcell"), col("sub"), col("code"),
+      .select(col("query_id"), col("qcell"), col("sub"), col("code"),
         pqDist.as("dpart"))
+    // the ADC scorer: a candidate's distance is the sum of its PqSub
+    // table lookups, never touching its floats
     val adc = cand
       .join(codes.select(col("vec_id").as("cand_id"), col("sub"), col("code")),
         "cand_id")
       .join(broadcast(qdt), Seq("query_id", "qcell", "sub", "code"))
       .groupBy(col("query_id"), col("cand_id"))
       .agg(sum(col("dpart")).as("adc_dist"))
-    // ADC shortlist → EXACT re-rank (the refine stage): quantized
-    // distance picks refine·k candidates per query, true cosines
-    // over the original vectors decide the final k — bounded exact
-    // work (refine·k·nQueries pairs) repairing quantization
-    // error in the final ranking
-    val ws = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("cand_id").asc)
-    val short = adc.withColumn("srnk", row_number().over(ws))
-      .filter(col("srnk") <= refine * k)
-      .select(col("query_id"), col("cand_id"))
-    val qe = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val scored = short
-      .join(emb.select(col("vec_id").as("cand_id"), col("embedding").as("cemb")),
-        "cand_id")
-      .join(broadcast(qe), "query_id")
-      .select(col("query_id"), col("cand_id"),
-        round(graft.functions.GraftFunctions.cosine_sim(
-          spark, col("qe"), col("cemb")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"), col("cos_sim"))
-      .orderBy("query_id", "rnk")
+    exactRefine(emb, topPerQuery(adc, "adc_dist", refine * k, ascending = true),
+      nQueries, k)
   }
 
   /** SEMANTIC DEDUP (the SemDeDup shape, Abbas et al. 2023): cluster
@@ -980,7 +868,7 @@ object Similarity {
       corpusCount: Option[Long] = None): DataFrame = {
     val spark = emb.sparkSession
     val (_, kc) = ivfCentroids(emb, minCentroids, corpusCount)
-    val assigned = assignedWithEmb(emb, minCentroids, corpusCount)
+    val assigned = ivfAssign(emb, minCentroids, corpusCount)
     val reps = assigned.groupBy(col("cell"))
       .agg(max_by(struct(col("vec_id"), col("embedding")),
         struct(col("ccos"), (-col("vec_id")).as("nv"))).as("r"))
@@ -989,8 +877,7 @@ object Similarity {
     val repSide = if (kc <= MaxBroadcastCentroids) broadcast(reps) else reps
     assigned.join(repSide, "cell")
       .select(col("vec_id"), col("cell"), col("rep_id"),
-        round(graft.functions.GraftFunctions.cosine_sim(
-          spark, col("embedding"), col("re")), 6).as("rep_cos"))
+        roundedCos(spark, col("embedding"), col("re")).as("rep_cos"))
       .withColumn("is_dup",
         col("vec_id") =!= col("rep_id") && col("rep_cos") >= threshold)
       .orderBy("vec_id")
@@ -1040,7 +927,7 @@ object Similarity {
     val spark = emb.sparkSession
     var raw: Option[DataFrame] = None
     val sig = materialize { () =>
-      val planes = planesFor(corpusCount.getOrElse(emb.count()))
+      val planes = planesFor(corpusCount.getOrElse(Materialize.count(emb)))
       val sig0 = emb.select(col("vec_id"), col("embedding"),
           lshBucketCol(spark, col("embedding"), planes).as("bucket"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1052,8 +939,7 @@ object Similarity {
     sig.as("x").join(sig.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
-        round(graft.functions.GraftFunctions.cosine_sim(spark,
-          col("x.embedding"), col("y.embedding")), 6).as("cos_sim"))
+        roundedCos(spark, col("x.embedding"), col("y.embedding")).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
       .orderBy("vec_a", "vec_b")
   }
@@ -1072,9 +958,6 @@ object Similarity {
     * floor is exact everywhere. Plan shape: identical to
     * [[bruteForceTopK]] — broadcast the tiny query set, no corpus
     * shuffle, per-query top-k window. */
-  private val quantMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The QUANTIZED CORPUS as a built-once index — (vec_id, qv), the
     * 4×-smaller column a production vector store persists and serves
     * from. Materialized for two reasons: it is what "quantize the
@@ -1084,12 +967,8 @@ object Similarity {
     * projection, re-quantizing every corpus vector once per QUERY PAIR
     * (measured 3× over float brute force at 1M×64 queries — the exact
     * inversion of the feature's purpose). */
-  private def quantizedCorpus(emb: DataFrame): DataFrame = {
-    val spark = emb.sparkSession
-    val contentKey = s"int8Corpus:${emb.queryExecution.logical.semanticHash()}" +
-      s"@${Materialize.sourceFingerprint(spark, emb.inputFiles.toSeq)}"
-    quantMemo.computeIfAbsent(s"${Materialize.sessionKey(spark)}:$contentKey",
-      _ => Materialize.timedBuild(contentKey)(Materialize.table(spark, contentKey) {
+  private def quantizedCorpus(emb: DataFrame): DataFrame =
+    Materialize.index(emb.sparkSession, indexKey("int8Corpus", emb)) {
         val maxAbs = array_max(transform(col("embedding"), x => abs(x.cast("double"))))
         emb.select(col("vec_id"), col("embedding"))
           .withColumn("max_abs", maxAbs)
@@ -1103,36 +982,13 @@ object Similarity {
           .withColumn("qv", transform(col("embedding"), x =>
             floor(x.cast("double") * (lit(127.0) / col("max_abs")) + lit(0.5)).cast("float")))
           .select(col("vec_id"), col("qv"))
-      }))
-  }
+    }
 
   def quantizedTopK(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val spark = emb.sparkSession
     val base = quantizedCorpus(emb)
-    val q = base.select(col("vec_id").as("query_id"), col("qv").as("qa"))
-      .filter(col("query_id") < nQueries)
-    // scoring via the native cosine expression: the quantized elements
-    // are exact small integers in double, and cosine_sim's generated
-    // loop accumulates dot/norms left-to-right exactly like the oracle's
-    // expanded 64-term chains — same IEEE sequence, same value. The
-    // previous composed-builtin form (3×64 element_at terms per pair)
-    // blew past the JIT's method-size limits and ran interpreted,
-    // measured 15× SLOWER than float brute force at 1M vectors — the
-    // exact inversion of what int8 quantization is for.
-    val scored = base.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("cand_id"),
-        round(graft.functions.GraftFunctions.cosine_sim(
-          spark, col("qa"), col("qv")), 6).as("qcos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("cand_id").asc)
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"), col("qcos"))
-      .orderBy("query_id", "rnk")
+    ranked(cosineScored(base, queries(base, nQueries, col("qv").as("qa")), None,
+      "qa", "qv", "qcos"), "qcos", k)
   }
-
-  private val int8IvfMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** The int8-in-IVF serving index: the quantized corpus CO-LOCATED
     * with its inverted-file cell — (vec_id, cell, qv), the table a
@@ -1141,17 +997,11 @@ object Similarity {
     * joining the two existing narrow indexes; without this the
     * corpus-sized assignment⋈quantized join would re-run per serve. */
   private def int8IvfIndex(emb: DataFrame, minCentroids: Int,
-      corpusCount: Option[Long]): DataFrame = {
-    val spark = emb.sparkSession
-    val contentKey = s"int8Ivf:v1:${emb.queryExecution.logical.semanticHash()}:" +
-      s"$minCentroids:${corpusCount.getOrElse(-1L)}" +
-      s"@${Materialize.sourceFingerprint(spark, emb.inputFiles.toSeq)}"
-    int8IvfMemo.computeIfAbsent(s"${Materialize.sessionKey(spark)}:$contentKey",
-      _ => Materialize.timedBuild(contentKey)(Materialize.table(spark, contentKey)(
-        quantizedCorpus(emb).join(
-          ivfAssignIndex(emb, minCentroids, corpusCount)
-            .select(col("vec_id"), col("cell")), "vec_id"))))
-  }
+      corpusCount: Option[Long]): DataFrame =
+    Materialize.index(emb.sparkSession, ivfKey("int8Ivf:v1", emb, minCentroids, corpusCount))(
+      quantizedCorpus(emb).join(
+        ivfAssignIndex(emb, minCentroids, corpusCount)
+          .select(col("vec_id"), col("cell")), "vec_id"))
 
   /** Int8 scoring INSIDE IVF cells with exact re-rank — the standard
     * composition (FAISS `IVFx,SQ8` + refine): the coarse quantizer
@@ -1169,47 +1019,13 @@ object Similarity {
   def ivfInt8TopK(emb: DataFrame, minCentroids: Int, nQueries: Int, k: Int,
       nprobe: Int = 2, refine: Int = 4,
       corpusCount: Option[Long] = None): DataFrame = {
-    val spark = emb.sparkSession
-    val (cents1, kc) = ivfCentroids(emb, minCentroids, corpusCount)
     val corpus = int8IvfIndex(emb, minCentroids, corpusCount)
-    // probe ranking on the query slice only — same construction (and
-    // the same rank-1 = home-cell identity) as [[ivfPqTopK]]
-    val wp = Window.partitionBy(col("vec_id"))
-      .orderBy(col("ccos").desc, col("cent_id").asc)
-    val probes = scoreAgainst(emb.filter(col("vec_id") < nQueries), cents1, kc, "ce1")
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("cent_id").as("qcell"))
-    val q = corpus.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("qv").as("qa"))
-      .join(probes, "query_id")
-    val scored = corpus.join(broadcast(q),
-        col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("cand_id"),
-        round(graft.functions.GraftFunctions.cosine_sim(
-          spark, col("qa"), col("qv")), 6).as("qcos"))
-    val ws = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("cand_id").asc)
-    val short = scored.withColumn("srnk", row_number().over(ws))
-      .filter(col("srnk") <= refine * k)
-      .select(col("query_id"), col("cand_id"))
-    // exact refine: true float cosines decide the final k — bounded at
-    // refine·k·nQueries vector reads, repairing quantization error
-    val qe = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val refined = short
-      .join(emb.select(col("vec_id").as("cand_id"), col("embedding").as("cemb")),
-        "cand_id")
-      .join(broadcast(qe), "query_id")
-      .select(col("query_id"), col("cand_id"),
-        round(graft.functions.GraftFunctions.cosine_sim(
-          spark, col("qe"), col("cemb")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    refined.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("cand_id"), col("cos_sim"))
-      .orderBy("query_id", "rnk")
+    val qs = queries(corpus, nQueries, col("qv").as("qa"))
+      .join(probeCells(emb, minCentroids, nQueries, nprobe, corpusCount)
+        .select(col("query_id"), col("qcell")), "query_id")
+    val short = topPerQuery(cosineScored(corpus, qs, Some(col("cell") === col("qcell")),
+      "qa", "qv", "qcos"), "qcos", refine * k)
+    exactRefine(emb, short, nQueries, k)
   }
 
   /** EMBEDDING SPLIT DRIFT: pairwise cosine between the train/val/test
@@ -1244,8 +1060,7 @@ object Similarity {
         col("a.split") < col("b.split"))
       .select(col("a.split").as("split_a"), col("b.split").as("split_b"),
         col("a.cnt").as("n_a"), col("b.cnt").as("n_b"),
-        round(graft.functions.GraftFunctions.cosine_sim(
-          spark, col("a.ce"), col("b.ce")), 6).as("centroid_cos"))
+        roundedCos(spark, col("a.ce"), col("b.ce")).as("centroid_cos"))
       .orderBy("split_a", "split_b")
   }
 

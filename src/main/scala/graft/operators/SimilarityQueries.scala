@@ -69,7 +69,7 @@ object SimilarityQueries {
 
   /** Multiprobe LSH oracle: the probe set is the home bucket (sentinel
     * j = MaxPlanes) plus one single-bit flip per ACTIVE plane (j < np,
-    * the CTE-derived count) — mirrors lshTopKProbed's deterministic
+    * the CTE-derived count) — mirrors lshTopK's radius-1 deterministic
     * all-Hamming-1 probe list; probe buckets are distinct so each
     * (query, candidate) joins once. */
   private val annLshMultiprobeSql =
@@ -593,8 +593,8 @@ object SimilarityQueries {
         Some(Tables.rowCount(s, d, "embeddings"))),
       Some(annLshSql)),
     QueryDef("ann_lsh_multiprobe",
-      (s, d) => Similarity.lshTopKProbed(Tables.embeddings(s, d), 16, 3,
-        Some(Tables.rowCount(s, d, "embeddings"))),
+      (s, d) => Similarity.lshTopK(Tables.embeddings(s, d), 16, 3,
+        Some(Tables.rowCount(s, d, "embeddings")), radius = 1),
       Some(annLshMultiprobeSql)),
     // index introspection: cell-occupancy stats of the SAME served
     // assignment the ivf probes run against (oracle retrains via the
@@ -620,8 +620,8 @@ object SimilarityQueries {
         Some(Tables.rowCount(s, d, "embeddings"))),
       Some(annIvfSql)),
     QueryDef("ann_ivf_multiprobe",
-      (s, d) => Similarity.ivfTopKProbed(Tables.embeddings(s, d), 8, 16, 3, 2,
-        Some(Tables.rowCount(s, d, "embeddings"))),
+      (s, d) => Similarity.ivfTopK(Tables.embeddings(s, d), 8, 16, 3,
+        Some(Tables.rowCount(s, d, "embeddings")), nprobe = 2),
       Some(annIvfMultiprobeSql)),
     // the approximate probes graded against brute-force ground truth at
     // the same (nQueries, k): recall@3 per method, the nprobe lever's

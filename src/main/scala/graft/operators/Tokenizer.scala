@@ -117,25 +117,16 @@ object Tokenizer {
     BpeState(mergesDf, words)
   }
 
-  // ---- trained-artifact cache (the SharedIntermediates pattern, kept
-  // here because the two artifacts come out of ONE training run) ----
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, BpeState]()
-
   /** Train-once per (session, dataset); both artifacts durable
     * content-keyed tables under spark.graft.index.dir. The training
     * loop is inside the lazy thunk, so a session that finds BOTH
     * committed parquet tables never runs it at all. */
   def trained(s: SparkSession, d: String): BpeState = {
     val fp = Materialize.sourceFingerprint(s, Seq(d))
-    memo.computeIfAbsent(s"${Materialize.sessionKey(s)}:bpe:$d@$fp", { _ =>
-      lazy val st = learnBpe(Tables.documents(s, d))
-      val kM = s"bpeMerges$Rounds:$d@$fp"
-      val kV = s"bpeVocab$Rounds:$d@$fp"
-      BpeState(
-        merges = Materialize.timedBuild(kM)(Materialize.table(s, kM)(st.merges)),
-        vocab = Materialize.timedBuild(kV)(Materialize.table(s, kV)(st.vocab)))
-    })
+    lazy val st = learnBpe(Tables.documents(s, d))
+    BpeState(
+      merges = Materialize.index(s, s"bpeMerges$Rounds:$d@$fp")(st.merges),
+      vocab = Materialize.index(s, s"bpeVocab$Rounds:$d@$fp")(st.vocab))
   }
 
   /** The learned merge list — rank, pair (wrapped form), merged symbol,

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.operators.{Dedup, Materialize, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 /** Dedup + similarity invariants on sf0.001 (planted near-dups). */
@@ -463,12 +463,75 @@ class DedupSimilaritySpec extends SparkSpec {
       got.count(truth.contains).toDouble / truth.size
     }
     val r1 = recallOf(Similarity.ivfTopK(emb, 8, 16, k))
-    val r2 = recallOf(Similarity.ivfTopKProbed(emb, 8, 16, k, nprobe = 2))
+    val r2 = recallOf(Similarity.ivfTopK(emb, 8, 16, k, nprobe = 2))
     assert(r2 >= r1, s"multiprobe recall $r2 < nprobe=1 recall $r1")
     // probing 2 cells must also never SHRINK any query's result set
     val n1 = Similarity.ivfTopK(emb, 8, 16, k).count()
-    val n2 = Similarity.ivfTopKProbed(emb, 8, 16, k, nprobe = 2).count()
+    val n2 = Similarity.ivfTopK(emb, 8, 16, k, nprobe = 2).count()
     assert(n2 >= n1, s"multiprobe returned fewer rows ($n2) than nprobe=1 ($n1)")
+  }
+
+  test("IVF nprobe=1: the home cell off the assignment is the rank-1 probe cell") {
+    val k = 3
+    val assigned = Similarity.ivfAssign(emb, 8)
+    val probes = Similarity.probeCells(emb, 8, 16, 1, None)
+    val home = assigned.filter(col("vec_id") < 16)
+      .select(col("vec_id").as("query_id"), col("cell").as("qcell"))
+      .as[(Long, Long)].collect().sorted
+    assert(home.length == 16)
+    assert(probes.select("query_id", "qcell").as[(Long, Long)].collect().sorted
+      .sameElements(home), "rank-1 probe cell differs from the assigned home cell")
+    val served = Similarity.ivfTopK(emb, 8, 16, k)
+      .as[(Long, Long, Long, Double)].collect()
+    val ranked = Similarity.cellTopK(assigned, probes, k)
+      .as[(Long, Long, Long, Double)].collect()
+    assert(served.nonEmpty)
+    served.groupBy(_._1).foreach { case (q, rows) =>
+      assert(rows.sorted.sameElements(ranked.filter(_._1 == q).sorted),
+        s"query $q: home-cell rows differ from the ranked-probe rows")
+    }
+    assert(ranked.map(_._1).toSet == served.map(_._1).toSet)
+  }
+
+  test("LSH top-k without a corpus count counts the corpus once per session") {
+    // a corpus no other test builds from, so the first call is cold
+    val fresh = emb.filter(col("vec_id") =!= 4099L)
+    val m = Metrics.install(spark)
+    try {
+      assert(m.measure(Similarity.lshTopK(fresh, 4, 3))._2.cpuNs > 0,
+        "the first build counts the corpus")
+      assert(m.measure(Similarity.lshTopK(fresh, 4, 3))._2 == Metrics.Totals.Zero,
+        "a second build ran a Spark job")
+    } finally spark.sparkContext.removeSparkListener(m)
+  }
+
+  test("nested index builds run once per session: a second IVF-PQ call builds nothing") {
+    // the PQ code table builds its codebook and reads the assignment
+    // inside its own build; a fresh corpus makes every build cold
+    val fresh = emb.filter(col("vec_id") =!= 4097L)
+    val before = Materialize.buildTimes
+    val first = Similarity.ivfPqTopK(fresh, 8, 4, 3).collect()
+    val built = Materialize.buildTimes.keySet -- before.keySet
+    Seq("ivfCentroids", "ivfAssign", "pqCodebook", "pqCodes").foreach { tag =>
+      assert(built.exists(_.startsWith(tag + ":")), s"no $tag build in $built")
+    }
+    val snapshot = Materialize.buildTimes
+    val again = Similarity.ivfPqTopK(fresh, 8, 4, 3).collect()
+    assert(Materialize.buildTimes == snapshot, "the second call rebuilt an index")
+    assert(again.sortBy(_.toString).sameElements(first.sortBy(_.toString)))
+  }
+
+  test("index memo: builds nest to any depth, each key builds once per session") {
+    var runs = 0
+    def build(depth: Int): Int = Materialize.memo(spark, s"memo-spec-nest:$depth") {
+      runs += 1
+      if (depth == 0) 0 else build(depth - 1) + 1
+    }
+    assert(build(64) == 64 && runs == 65)
+    val snapshot = Materialize.buildTimes
+    assert((0 to 64).forall(d => snapshot.contains(s"memo-spec-nest:$d")))
+    assert(build(64) == 64 && runs == 65, "a memoized build ran again")
+    assert(Materialize.buildTimes == snapshot)
   }
 
   test("LSH multiprobe: candidates superset of single-probe, recall >= single-probe") {
@@ -478,7 +541,7 @@ class DedupSimilaritySpec extends SparkSpec {
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "cand_id").as[(Long, Long)].collect().toSet
     val single = pairsOf(Similarity.lshTopK(emb, 16, k))
-    val multi = pairsOf(Similarity.lshTopKProbed(emb, 16, k))
+    val multi = pairsOf(Similarity.lshTopK(emb, 16, k, radius = 1))
     def recallOf(s: Set[(Long, Long)]) =
       s.count(truth.contains).toDouble / truth.size
     assert(recallOf(multi) >= recallOf(single),
@@ -488,7 +551,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // per query, not set containment of the final k
     val n1 = Similarity.lshTopK(emb, 16, k).groupBy("query_id").count()
       .as[(Long, Long)].collect().toMap
-    val n2 = Similarity.lshTopKProbed(emb, 16, k).groupBy("query_id").count()
+    val n2 = Similarity.lshTopK(emb, 16, k, radius = 1).groupBy("query_id").count()
       .as[(Long, Long)].collect().toMap
     n1.foreach { case (q, n) =>
       assert(n2.getOrElse(q, 0L) >= n, s"query $q shrank: $n -> ${n2.get(q)}")
@@ -498,7 +561,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val c1 = Similarity.lshTopK(emb, 16, k)
       .select("query_id", "rnk", "cos_sim")
       .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
-    val c2 = Similarity.lshTopKProbed(emb, 16, k)
+    val c2 = Similarity.lshTopK(emb, 16, k, radius = 1)
       .select("query_id", "rnk", "cos_sim")
       .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
     c1.foreach { case (key, cos) =>

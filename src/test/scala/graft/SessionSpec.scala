@@ -117,14 +117,19 @@ class SessionSpec extends SparkSpec {
     assert(picked.map(_.keySet) == Right(Set("q1_pricing_summary", "spearman_corr")))
   }
 
-  test("tooling guard: one session builder, one bus drain, one watchdog, no retired knobs") {
+  /** (path under src/main/scala, text) of every main source file. */
+  private lazy val sources = {
     val root = new File("src/main/scala")
     assert(root.isDirectory, s"run from the repository root (cwd ${new File(".").getAbsolutePath})")
     def files(d: File): Seq[File] = Option(d.listFiles()).toSeq.flatten
       .flatMap(f => if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
-    val sources = files(root).map(f => root.toPath.relativize(f.toPath).toString -> read(f))
-    def offenders(token: String, home: String) =
-      sources.collect { case (n, s) if n != home && s.contains(token) => n }
+    files(root).map(f => root.toPath.relativize(f.toPath).toString -> read(f))
+  }
+
+  private def offenders(token: String, home: String) =
+    sources.collect { case (n, s) if n != home && s.contains(token) => n }
+
+  test("tooling guard: one session builder, one bus drain, one watchdog, no retired knobs") {
     assert(offenders("SparkSession.builder", "graft/Session.scala").isEmpty)
     assert(offenders("listenerBus", "graft/Metrics.scala").isEmpty)
     assert(offenders("FutureTask", "graft/QueryRunner.scala").isEmpty)
@@ -134,5 +139,13 @@ class SessionSpec extends SparkSpec {
     Seq("AQE", "WARM_PASS", "KILL_STALE").map("GRAFT_" + _).foreach { knob =>
       assert(offenders(knob, "").isEmpty, knob)
     }
+  }
+
+  test("tooling guard: one index memo, one ANN ranker") {
+    assert(offenders("computeIfAbsent", "graft/operators/Materialize.scala")
+      .filter(_.startsWith("graft/operators/")).isEmpty)
+    val similarity = sources.toMap.apply("graft/operators/Similarity.scala")
+    val ranker = java.util.regex.Pattern.quote("Window.partitionBy(col(\"query_id\"))")
+    assert(ranker.r.findAllIn(similarity).length == 1)
   }
 }

@@ -18,8 +18,9 @@ import graft.sources.{JsonSink, TextIngest}
   *   fetchCached(file://corpus.zip)            O1  (download+memoize)
   *   extractZipUtf8 (errors=ignore transcode)  O2
   *   readLines, 32 MB line-aligned splits      O3–O4
-  *   tokenCounts (tokenize → combine →
-  *     hash shuffle → reduce SUM)              O5–O10
+  *   tokenCounts (one-pass tokenize + combine
+  *     per partition → hash shuffle →
+  *     reduce SUM)                             O5–O10
   *   writeReduceObjects (per-partition JSON)   O11–O12
   *   top20 report                              O13–O14
   *

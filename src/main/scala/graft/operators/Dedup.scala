@@ -39,8 +39,7 @@ object Dedup {
     * the rest of the near-dup pipeline combined). */
   private def wordTokens(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      posexplode(regexp_extract_all(lower(col("text")),
-        lit(WordCount.TokenPattern), lit(0))).as(Seq("pos", "tok")))
+      posexplode(WordCount.tokenArray(col("text"))).as(Seq("pos", "tok")))
 
   /** Word-3-gram occurrences as a flat (doc_id, g) stream (multiset —
     * MinHash's per-doc MIN is identical over multiset and set). Grams
@@ -449,7 +448,7 @@ object Dedup {
     * signature-equality dedup gate. */
   def withMinhashSig(docs: DataFrame): DataFrame = {
     val base = docs.withColumn("w",
-      regexp_extract_all(lower(col("text")), lit(WordCount.TokenPattern), lit(0)))
+      WordCount.tokenArray(col("text")))
     val grams = when(size(col("w")) >= 3,
         expr("transform(sequence(1, size(w) - 2), i -> concat_ws(' ', slice(w, i, 3)))"))
       .otherwise(array(lower(col("text"))))
@@ -756,7 +755,7 @@ object Dedup {
     * md5(token) — engine-portable (ascii/shift/and only). */
   def simhashDocs(docs: DataFrame): DataFrame = {
     val tokens = docs.select(col("doc_id"),
-      explode(regexp_extract_all(lower(col("text")), lit(WordCount.TokenPattern), lit(0))).as("word"))
+      explode(WordCount.tokenArray(col("text"))).as("word"))
     val hex = md5(col("word"))
     def nibble(d: Int): Column = {
       val a = ascii(substring(hex, d + 1, 1))
@@ -846,8 +845,7 @@ object Dedup {
     // query (the zipfAlpha unstaged-fan-out lesson; review finding)
     val sh = Materialize.stage(docs
       .select(col("doc_id"),
-        regexp_extract_all(lower(col("text")), lit(WordCount.TokenPattern),
-          lit(0)).as("w"))
+        WordCount.tokenArray(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"),
         array_distinct(transform(sequence(lit(0), size(col("w")) - 3),

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.WordCount.tokenArray
 import graft.functions.Exact._
 
 /** Training-data pipeline operators beyond filtering/dedup: chunking
@@ -23,14 +24,11 @@ import graft.functions.Exact._
   */
 object Pipeline {
 
-  private def toks: Column =
-    regexp_extract_all(lower(col("text")), lit(WordCount.TokenPattern), lit(0))
-
   /** Fixed-size token-window chunking with overlap (size 32, stride 24):
     * the standard long-document → training-example splitter. Chunks
     * start every `stride` tokens; the final chunk may be short. */
   def docChunks(docs: DataFrame, size: Int = 32, stride: Int = 24): DataFrame =
-    docs.select(col("doc_id"), toks.as("w"))
+    docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(expr("size(w) > 0"))
       .select(col("doc_id"),
         posexplode(expr(s"transform(sequence(1, size(w), $stride), i -> slice(w, i, $size))"))
@@ -48,7 +46,8 @@ object Pipeline {
     * gate). Per-doc distinct before the explode keeps the shuffled
     * volume at O(distinct tokens per doc). */
   def vocabPrune(docs: DataFrame, minDf: Long = 2): DataFrame = {
-    val perDoc = docs.select(col("doc_id"), explode(array_distinct(toks)).as("token"))
+    val perDoc = docs.select(col("doc_id"),
+      explode(array_distinct(tokenArray(col("text")))).as("token"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     perDoc.groupBy(col("token")).agg(count(lit(1)).as("doc_freq"))
       .crossJoin(broadcast(nDocs))
@@ -63,7 +62,7 @@ object Pipeline {
     * near-duplicated content; a cheap dedup-adjacent quality signal.
     * Gram df counts shuffle once on the gram string. */
   def bigramNovelty(docs: DataFrame): DataFrame = {
-    val grams = docs.select(col("doc_id"), toks.as("w"))
+    val grams = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(expr("size(w) >= 2"))
       .select(col("doc_id"), explode(expr(
         "array_distinct(transform(sequence(1, size(w) - 1), i -> concat_ws(' ', slice(w, i, 2))))"))
@@ -679,7 +678,7 @@ object Pipeline {
     * (9.6 → 6.1 s). The stage-or-not call is per consumer, measured —
     * not a blanket rule. */
   private def distinctDocTokens(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(array_distinct(toks)).as("token"))
+    docs.select(col("doc_id"), explode(array_distinct(tokenArray(col("text")))).as("token"))
 
   /** Top-K document-frequency vocabulary with the deterministic tie
     * (df desc, token asc) — orderBy+limit → TakeOrderedAndProject
@@ -944,8 +943,7 @@ object Pipeline {
     val lens = docs.select(col("doc_id"),
       md5(col("doc_id").cast("string")).as("h"),
       TextAnalysis.md5Bucket.as("bkt"),
-      (greatest(size(regexp_extract_all(lower(col("text")),
-        lit(WordCount.TokenPattern), lit(0))), lit(0)) + 1).cast("long").as("n"))
+      (greatest(size(tokenArray(col("text"))), lit(0)) + 1).cast("long").as("n"))
     val inBkt = lens.withColumn("run",
       coalesce(sum(col("n")).over(
         Window.partitionBy(col("bkt")).orderBy(col("h"), col("doc_id"))

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.util.Locale
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -45,8 +47,7 @@ object Search {
     * document (reported 1-based at query output). */
   def postings(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-        posexplode(regexp_extract_all(lower(col("text")),
-          lit(WordCount.TokenPattern), lit(0))).as(Seq("pos", "tok")))
+        posexplode(WordCount.tokenArray(col("text"))).as(Seq("pos", "tok")))
       .select(col("tok"), col("doc_id"), col("pos"))
 
   /** Per-(term, doc) term frequencies from the index. */
@@ -113,15 +114,14 @@ object Search {
   }
 
   /** [[phraseSearch]] for an EXPLICIT phrase of ANY length ≥ 1 — the
-    * audit-a-leaked-passage form. The phrase is tokenized with the
-    * index's own token pattern; each token contributes one
-    * posting-list leg joined at pos+j (the n=3 chain of the registry
-    * probe, generalized by a fold). A phrase containing any
-    * out-of-vocabulary token matches nothing and returns the empty
-    * result shape. */
+    * audit-a-leaked-passage form. The phrase is tokenized by the
+    * index's own rule ([[WordCount.lineTokens]], never the JVM's default
+    * locale); each token contributes one posting-list leg joined at pos+j
+    * (the n=3 chain of the registry probe, generalized by a fold). A
+    * phrase containing any out-of-vocabulary token matches nothing and
+    * returns the empty result shape. */
   def phraseSearchFor(idx: DataFrame, phrase: String): DataFrame = {
-    val ts = WordCount.TokenPattern.r
-      .findAllIn(phrase.toLowerCase).toList
+    val ts = WordCount.lineTokens(phrase).toList
     require(ts.nonEmpty, "phrase needs at least one token")
     val m0 = idx.filter(col("tok") === ts.head)
       .select(col("doc_id"), col("pos"))
@@ -191,7 +191,7 @@ object Search {
     // from the precomputed doc-length index when the caller has one
     // (count of dl rows ≡ countDistinct(doc_id) over the index: dl IS
     // the per-doc grouping), else a staged full-index countDistinct.
-    val sub = idx.filter(col("tok").isin(terms.map(_.toLowerCase): _*))
+    val sub = idx.filter(col("tok").isin(terms.map(_.toLowerCase(Locale.ROOT)): _*))
     val tf = Materialize.stage(termFreq(sub))
     val dft = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val nDocs = dl.map(_.agg(count(lit(1)).as("n_docs")))
@@ -270,7 +270,7 @@ object Search {
   private def scoreBm25AllFor(idx: DataFrame, terms: Seq[String],
       dl: Option[DataFrame]): DataFrame = {
     require(terms.nonEmpty, "query needs at least one term")
-    val sub = idx.filter(col("tok").isin(terms.map(_.toLowerCase): _*))
+    val sub = idx.filter(col("tok").isin(terms.map(_.toLowerCase(Locale.ROOT)): _*))
     val tf = Materialize.stage(termFreq(sub))
     scoreBm25All(idx, tf, tf.groupBy("term").agg(count(lit(1)).as("df")), dl)
   }
@@ -444,7 +444,7 @@ object Search {
   def searchEvalNdcg(idx: DataFrame, terms: Seq[String],
       k: Int = 20, dl: Option[DataFrame] = None): DataFrame = {
     require(terms.nonEmpty, "query needs at least one term")
-    val q = terms.map(_.toLowerCase).distinct
+    val q = terms.map(_.toLowerCase(Locale.ROOT)).distinct
     // ONE posting-list-bounded tf subtree (the static isin reaches the
     // scan) feeds both the relevance leg and the BM25 ranking leg —
     // the per-(term,doc) aggregate covers only the query terms'

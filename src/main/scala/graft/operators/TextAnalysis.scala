@@ -4,6 +4,7 @@ import graft.functions.Exact.ln4
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.WordCount.tokenArray
 
 /** Text-analysis operators for a training-data pipeline: language-ID
   * heuristic, quality scoring, token counting (whitespace + BPE-ish
@@ -18,9 +19,6 @@ object TextAnalysis {
 
   /** GPT2-ish token pattern (no lookarounds → portable to RE2). */
   val BpePattern = "'(?:s|t|re|ve|m|ll|d)| ?[a-z]+| ?[0-9]+| ?[^a-z0-9\\s']+"
-
-  private def toks: Column =
-    regexp_extract_all(lower(col("text")), lit(WordCount.TokenPattern), lit(0))
 
   /** Hex nibble `i` (0-based) of md5(doc_id) as an integer — the shared
     * engine-portable uniform-hash building block behind every
@@ -49,7 +47,7 @@ object TextAnalysis {
 
   /** N-gram-heuristic language ID: stopword hit ratio → {en, other}. */
   def langId(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), toks.as("w"))
+    docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(size(col("w")) > 0)
       .select(
         col("doc_id"),
@@ -170,7 +168,7 @@ object TextAnalysis {
     * one vocabulary-keyed shuffle, then one global fold; safe past
     * 10⁹ tokens in DECIMAL(38,0)). */
   def tokenConcentration(docs: DataFrame): DataFrame =
-    docs.select(explode(toks).as("t"))
+    docs.select(explode(tokenArray(col("text"))).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
       .agg(
         sum(col("c")).cast("decimal(38,0)").as("n"),
@@ -198,7 +196,7 @@ object TextAnalysis {
   def vocabCoverage(docs: DataFrame): DataFrame = {
     val ks = Seq(16, 64, 256, 1024)
     val wcnt = Materialize.stage(
-      docs.select(explode(toks).as("t")).groupBy("t").agg(count(lit(1)).as("c")))
+      docs.select(explode(tokenArray(col("text"))).as("t")).groupBy("t").agg(count(lit(1)).as("c")))
     val covAggs = ks.map(k =>
       sum(when(col("rank") <= k, col("c")).otherwise(0L)).as(s"cov$k"))
     zipfRanks(wcnt)
@@ -291,7 +289,7 @@ object TextAnalysis {
     // Heaps-bounded staged table. Same pattern as negativeSamples'
     // staged rank table.
     val pts = zipfRanks(Materialize.stage(
-      docs.select(explode(toks).as("t"))
+      docs.select(explode(tokenArray(col("text"))).as("t"))
         .groupBy("t").agg(count(lit(1)).as("c"))))
       .select(
         floor(log(col("rank").cast("double")) * lit(10000.0) + lit(0.5))
@@ -336,7 +334,8 @@ object TextAnalysis {
   /** Quality scoring: type/token ratio, mean token length, and a
     * deterministic composite score. */
   def qualityScore(docs: DataFrame): DataFrame = {
-    val base = docs.select(col("doc_id"), length(col("text")).cast("long").as("n_chars"), toks.as("w"))
+    val base = docs.select(col("doc_id"), length(col("text")).cast("long").as("n_chars"),
+      tokenArray(col("text")).as("w"))
       .filter(size(col("w")) > 0)
       .select(
         col("doc_id"), col("n_chars"),
@@ -369,7 +368,7 @@ object TextAnalysis {
     * corpus; AQE broadcasts only when it fits), one band-keyed
     * aggregate. */
   def dupQualityBias(docs: DataFrame, clusters: DataFrame): DataFrame = {
-    val base = docs.select(col("doc_id"), toks.as("w"))
+    val base = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(size(col("w")) > 0)
       .select(col("doc_id"),
         size(col("w")).cast("long").as("n_tokens"),
@@ -473,7 +472,7 @@ object TextAnalysis {
     * docFingerprint: grams, distinct counts, and the ratio are per-row
     * ARRAY transforms — one map stage over the corpus. */
   def repetitionStats(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), toks.as("w"))
+    docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"),
         expr("transform(sequence(1, size(w) - 2), i -> concat_ws(' ', slice(w, i, 3)))").as("g3"))
@@ -501,7 +500,7 @@ object TextAnalysis {
     * doc, so no reducer sees more than one doc's vocabulary — skew
     * bounded by the largest single document, not the corpus. */
   def docEntropy(docs: DataFrame): DataFrame = {
-    val c = docs.select(col("doc_id"), explode(toks).as("tok"))
+    val c = docs.select(col("doc_id"), explode(tokenArray(col("text"))).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
     c.groupBy("doc_id").agg(
         sum(col("c")).as("n_tokens"),
@@ -533,7 +532,7 @@ object TextAnalysis {
     * relative to the corpus — runtime stats may broadcast it, but
     * nothing is forced (eval suites grow). */
   def contamination(docs: DataFrame, evalMaxId: Long = 25, n: Int = 8): DataFrame = {
-    val grams = docs.select(col("doc_id"), toks.as("w"))
+    val grams = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(size(col("w")) >= n)
       .select(col("doc_id"), explode(expr(
         s"array_distinct(transform(sequence(1, size(w) - ${n - 1}), i -> concat_ws(' ', slice(w, i, $n))))"))
@@ -576,7 +575,7 @@ object TextAnalysis {
       docs: DataFrame, evalMaxId: Long = 25, n: Int = 8,
       bloomItems: Long = 1000000L, bloomBits: Long = 8388608L): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val grams = docs.select(col("doc_id"), toks.as("w"))
+    val grams = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(size(col("w")) >= n)
       .select(col("doc_id"), explode(expr(
         s"array_distinct(transform(sequence(1, size(w) - ${n - 1}), i -> concat_ws(' ', slice(w, i, $n))))"))
@@ -627,7 +626,7 @@ object TextAnalysis {
     * row per maximal duplicated span, 1-based inclusive token bounds. */
   def substringDedup(docs: DataFrame, k: Int = 8,
       hashWindows: Boolean = false): DataFrame = {
-    val rawWins = docs.select(col("doc_id"), toks.as("w"))
+    val rawWins = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(size(col("w")) >= k)
       .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(1, size(w) - ${k - 1}), i -> concat_ws(' ', slice(w, i, $k)))"))
@@ -685,7 +684,7 @@ object TextAnalysis {
     * explodes per-token rows. Output: one row per doc (docs with no
     * redundant content report 0 — the gate decision is explicit). */
   def substringDedupClean(docs: DataFrame, k: Int = 8): DataFrame = {
-    val base = docs.select(col("doc_id"), toks.as("w"))
+    val base = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
     val wins = base
       .filter(size(col("w")) >= k)
       .select(col("doc_id"), posexplode(expr(
@@ -777,7 +776,7 @@ object TextAnalysis {
     * single-row corpus total is broadcast), then the per-doc top-k
     * window over k' = tf rows per doc. */
   def tfidfTopTerms(docs: DataFrame, k: Int = 3): DataFrame = {
-    val terms = docs.select(col("doc_id"), explode(toks).as("term"))
+    val terms = docs.select(col("doc_id"), explode(tokenArray(col("text"))).as("term"))
     val tf = terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val dft = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = tf.agg(countDistinct(col("doc_id")).as("n_docs"))
@@ -853,7 +852,7 @@ object TextAnalysis {
   def heavyHitterTokens(docs: DataFrame, k: Int = 64): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val tokens = docs.select(explode(toks).as("token")).as[String]
+    val tokens = docs.select(explode(tokenArray(col("text"))).as("token")).as[String]
     val cands = tokens.mapPartitions { it =>
       val counts = scala.collection.mutable.HashMap[String, Long]()
       it.foreach { t =>
@@ -869,7 +868,7 @@ object TextAnalysis {
       }
       counts.keysIterator
     }.toDF("token").distinct()
-    val total = docs.agg(sum(size(toks)).as("n_total"))
+    val total = docs.agg(sum(size(tokenArray(col("text")))).as("n_total"))
     tokens.toDF()
       .join(cands, Seq("token"), "left_semi")
       .groupBy(col("token")).agg(count(lit(1)).as("freq"))
@@ -1028,7 +1027,7 @@ object TextAnalysis {
     * corpus broadcasts the bounded allocation table. */
   def stratifiedNeyman(docs: DataFrame, k: Int = NeymanBudget): DataFrame = {
     val strata = Materialize.stage(docs
-      .select(col("lang"), col("source"), size(toks).cast("long").as("t"))
+      .select(col("lang"), col("source"), size(tokenArray(col("text"))).cast("long").as("t"))
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("n"),
         sum(col("t").cast("decimal(38,0)")).as("s"),
@@ -1107,7 +1106,7 @@ object TextAnalysis {
     val u = (0 until 5).map(i => md5Nibble(i) * (1 << (4 * (4 - i))))
       .reduce(_ + _).cast("long")
     docs
-      .select(col("doc_id"), size(toks).cast("long").as("n_tokens"),
+      .select(col("doc_id"), size(tokenArray(col("text"))).cast("long").as("n_tokens"),
         u.as("u20"))
       .filter(col("n_tokens") > 0)
       .withColumn("pen", lit(AesLnMax) - ln4(col("u20") + 1).cast("long"))
@@ -1136,7 +1135,7 @@ object TextAnalysis {
     // r12, the bm25-family finding); staged it is a vocabulary-sized
     // table read four times
     val tokSplit = Materialize.stage(
-      docs.select(splitOf.as("split"), explode(toks).as("tok"))
+      docs.select(splitOf.as("split"), explode(tokenArray(col("text"))).as("tok"))
         .groupBy(col("split"), col("tok")).agg(count(lit(1)).as("c")))
     val globalTok = tokSplit.groupBy(col("tok")).agg(sum(col("c")).as("c_all"))
     val splitTotals = tokSplit.groupBy(col("split")).agg(sum(col("c")).as("n_split"))
@@ -1191,7 +1190,7 @@ object TextAnalysis {
     // promises is actually one
     val docBucket = Materialize.stage(docs
       .select(col("doc_id"), (col("lang") === "en").as("is_target"),
-        explode(toks).as("t"))
+        explode(tokenArray(col("text"))).as("t"))
       .select(col("doc_id"), col("is_target"),
         substring(md5(col("t")), 1, 2).as("bucket"))
       .groupBy("doc_id", "is_target", "bucket")
@@ -1231,7 +1230,7 @@ object TextAnalysis {
     * value is completeness of the pipeline surface. */
   def corpusSummary(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("lang"), col("source"),
-        size(toks).cast("long").as("n_toks"),
+        size(tokenArray(col("text"))).cast("long").as("n_toks"),
         length(col("text")).cast("long").as("n_chars"))
       .agg(
         count(lit(1)).as("n_docs"),
@@ -1443,7 +1442,7 @@ object TextAnalysis {
     * hit ratio and a keep/drop decision at `maxRatio`. Per-row array
     * filter over the token array; no shuffle. */
   def blocklistGate(docs: DataFrame, maxRatio: Double = 0.05): DataFrame =
-    docs.select(col("doc_id"), toks.as("w"))
+    docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(size(col("w")) > 0)
       .select(col("doc_id"),
         size(col("w")).cast("long").as("n_tokens"),
@@ -1468,7 +1467,7 @@ object TextAnalysis {
     * corpus, so the hit join is left to runtime stats (AQE broadcasts
     * it when small). */
   def boilerplateCoverage(docs: DataFrame, n: Int = 5, minDocs: Int = 3): DataFrame = {
-    val grams = docs.select(col("doc_id"), toks.as("w"))
+    val grams = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(size(col("w")) >= n)
       .select(col("doc_id"), explode(expr(
         s"transform(sequence(1, size(w) - ${n - 1}), i -> concat_ws(' ', slice(w, i, $n)))"))
@@ -1532,7 +1531,7 @@ object TextAnalysis {
     // (sf0.1: ~60k vocab rows vs ~5M stream rows), three consumers
     // (cell build, estimate join, final join); the SQL cache entry is
     // freed by the per-query clearCache hygiene in Bench/Verify.
-    val exact = docs.select(explode(toks).as("tok"))
+    val exact = docs.select(explode(tokenArray(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("exact_cnt"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cells = exact
@@ -1575,7 +1574,7 @@ object TextAnalysis {
     * table costs a tiny aggregate over c2 instead of a third shuffle of
     * the stream. */
   def bigramLmScore(docs: DataFrame): DataFrame = {
-    val big = docs.select(col("doc_id"), toks.as("w"))
+    val big = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(size(col("w")) >= 2)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(w) - 1), i -> concat_ws(' ', slice(w, i, 2)))"))
@@ -1585,7 +1584,7 @@ object TextAnalysis {
       .withColumn("w1", substring_index(col("g"), " ", 1))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
-    val v = docs.select(explode(toks).as("tok")).agg(
+    val v = docs.select(explode(tokenArray(col("text"))).as("tok")).agg(
       countDistinct(col("tok")).as("v"))
     val scored = big.join(c2.select("g", "c2"), "g").join(c1, "w1")
       .crossJoin(broadcast(v))
@@ -1779,8 +1778,7 @@ object TextAnalysis {
       kSel: Int = KeynessKSel): DataFrame = {
     val occ = Materialize.stage(docs
       .select(col("source"),
-        explode(regexp_extract_all(lower(col("text")),
-          lit(WordCount.TokenPattern), lit(0))).as("token"))
+        explode(tokenArray(col("text"))).as("token"))
       .groupBy(col("source"), col("token"))
       .agg(count(lit(1)).as("a")))
     val cand = occ.groupBy(col("token")).agg(sum(col("a")).as("cw"))
@@ -1845,8 +1843,7 @@ object TextAnalysis {
       .select(col("lang"),
         // lit(pattern), not an embedded SQL string literal — the token
         // pattern contains an apostrophe
-        size(regexp_extract_all(lower(col("text")),
-          lit(WordCount.TokenPattern), lit(0))).cast("long").as("w"),
+        size(tokenArray(col("text"))).cast("long").as("w"),
         (size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0))) + 1)
           .cast("long").as("s"),
         size(regexp_extract_all(lower(col("text")), lit("[aeiouy]+"),
@@ -1873,8 +1870,7 @@ object TextAnalysis {
     * never disagree). */
   private def tokenFirstDoc(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"),
-      explode(array_distinct(regexp_extract_all(lower(col("text")),
-        lit(WordCount.TokenPattern), lit(0)))).as("token"))
+      explode(array_distinct(tokenArray(col("text")))).as("token"))
     .groupBy(col("token")).agg(min(col("doc_id")).as("fd"))
 
   /** doc-id range bounds (d0, span) for the decile grid — doc_id need
@@ -1946,8 +1942,7 @@ object TextAnalysis {
     // per-decile token occurrences
     val nByDecile = docs
       .select(col("doc_id"),
-        size(regexp_extract_all(lower(col("text")),
-          lit(WordCount.TokenPattern), lit(0))).cast("long").as("t"))
+        size(tokenArray(col("text"))).cast("long").as("t"))
       .crossJoin(broadcast(bounds))
       .select(decileOf("doc_id").as("decile"), col("t"))
       .groupBy("decile").agg(sum(col("t")).as("nt"))

@@ -57,8 +57,7 @@ object Tokenizer {
   /** Word-frequency table with initial per-character symbol strings. */
   private[graft] def initWords(docs: DataFrame): DataFrame =
     docs
-      .select(explode(regexp_extract_all(lower(col("text")),
-        lit(WordCount.TokenPattern), lit(0))).as("word"))
+      .select(explode(WordCount.tokenArray(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .withColumn("sym", regexp_replace(col("word"), "(.)", "($1)"))
 
@@ -154,8 +153,7 @@ object Tokenizer {
   def bpeEncodeStats(s: SparkSession, d: String): DataFrame = {
     val counts = encodeCounts(s, d)
     Tables.documents(s, d)
-      .select(col("doc_id"), explode(regexp_extract_all(lower(col("text")),
-        lit(WordCount.TokenPattern), lit(0))).as("word"))
+      .select(col("doc_id"), explode(WordCount.tokenArray(col("text"))).as("word"))
       .join(broadcast(counts), "word")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"), sum(col("n_sym")).as("n_symbols"))
@@ -176,8 +174,7 @@ object Tokenizer {
     val counts = encodeCounts(s, d)
     Tables.documents(s, d)
       .select(col("lang"), col("doc_id"),
-        explode(regexp_extract_all(lower(col("text")),
-          lit(WordCount.TokenPattern), lit(0))).as("word"))
+        explode(WordCount.tokenArray(col("text"))).as("word"))
       .join(broadcast(counts), "word")
       .groupBy("lang")
       .agg(countDistinct(col("doc_id")).as("n_docs"),

@@ -213,6 +213,21 @@ class SearchSimJoinSpec extends SparkSpec {
       p4(0).getLong(3) == 2L, s"got ${p4.toSeq}")
   }
 
+  test("query text is lowercased by the index's rule, not the default locale") {
+    val idx = Search.postings(docsDF(
+      0L -> "this is in the city", 1L -> "it is in the inn", 2L -> "no match here"))
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      // under tr, "IS IN".toLowerCase is "ıs ın" (dotless ı)
+      val lower = Search.phraseSearchFor(idx, "is in the").collect().toSeq
+      assert(lower.map(_.getLong(0)) == Seq(0L, 1L))
+      assert(Search.phraseSearchFor(idx, "IS IN THE").collect().toSeq == lower)
+      assert(Search.bm25SearchFor(idx, Seq("IT", "INN")).collect().toSeq ==
+        Search.bm25SearchFor(idx, Seq("it", "inn")).collect().toSeq)
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("index stats equal an independent vocabulary recompute") {
     val d = docsDF(corpus: _*)
     val got = Search.indexStats(Search.postings(d), k = 5).collect()

@@ -141,6 +141,12 @@ class SessionSpec extends SparkSpec {
     }
   }
 
+  test("tooling guard: one token pattern, read only by WordCount") {
+    // DuckDB oracle SQL in *Queries.scala spells the pattern on its own
+    assert(offenders("TokenPattern", "graft/operators/WordCount.scala")
+      .filterNot(_.endsWith("Queries.scala")).isEmpty)
+  }
+
   test("tooling guard: one index memo, one ANN ranker") {
     assert(offenders("computeIfAbsent", "graft/operators/Materialize.scala")
       .filter(_.startsWith("graft/operators/")).isEmpty)

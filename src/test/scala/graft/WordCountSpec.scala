@@ -1,7 +1,12 @@
 package graft
 
+import java.util.Locale
+
 import graft.operators.WordCount
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.{count, explode, lit, spark_partition_id}
+import org.apache.spark.sql.types.LongType
 
 /** Reference-semantics unit tests for the word-count family:
   * token alphabet `[A-Za-z']+` lowercased, deterministic top-k tie-break
@@ -19,6 +24,24 @@ class WordCountSpec extends SparkSpec {
       .as[String].collect().toSeq
     // é is non-ASCII → excluded from [a-z']+; "migr" remains from émigré
     assert(toks == Seq("don't", "stop", "abc", "def", "migr"))
+
+    // tokenCounts' combining kernel equals the builtin form on adversarial
+    // lines, at 1 and 4 input partitions
+    val long = "Ab" * WordCount.InitialBuffer + "c"
+    val lines = corpus("Hello WORLD hello World hELLO", "'", "''", "don't dogs' 'tis o'Clock",
+      "abc123def,ghi;jkl-mno 42 x_y(z)", "", "   \t  ", null, s"$long x $long",
+      "émigré Émigré", "\u212Aabc KELVIN", "\u0130stanbul", "Straße STRASSE")
+      .union(spark.sql("SELECT CAST(unhex(h) AS STRING) AS text FROM VALUES " +
+        "('80616263'), ('E2616263'), ('C1816263'), ('61FF62') AS t(h)"))
+    for (n <- Seq(1, 4)) {
+      val df = lines.repartition(n)
+      val want = WordCount.tokens(df).groupBy("word").count().as[(String, Long)].collect()
+      val got = WordCount.tokenCounts(df).as[(String, Long)].collect()
+      assert(got.length == got.map(_._1).distinct.length)
+      assert(got.toSet == want.toSet, s"$n partitions")
+      assert(want.toSet.contains(("kabc", 1L)))
+      assert(want.toSet.contains((long.toLowerCase(Locale.ROOT), 2L)))
+    }
   }
 
   test("top-20 tie-break is (cnt DESC, length DESC, word ASC)") {
@@ -58,5 +81,44 @@ class WordCountSpec extends SparkSpec {
       .join(docs, "doc_id")
       .where($"stat_chars" =!= org.apache.spark.sql.functions.length($"text"))
     assert(joined.count() == 0)
+  }
+
+  test("combiner: one exchange, at most one row per partition and word, cnt a non-null BIGINT") {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val docs = Tables.documents(s2, sf0001)
+    val counts = WordCount.tokenCounts(docs)
+    assert(counts.schema == WordCount.tokens(docs).groupBy("word")
+      .agg(count(lit(1)).as("cnt")).schema)
+    assert(counts.schema("cnt").dataType == LongType && !counts.schema("cnt").nullable)
+    def exchanges(df: DataFrame) = df.queryExecution.executedPlan.collect {
+      case e: ShuffleExchangeExec => e
+    }
+    // one Exchange on top of whatever the documents scan brings
+    counts.collect()
+    assert(exchanges(counts).size == 1 + exchanges(docs).size)
+    val written = exchanges(counts).head.metrics("shuffleRecordsWritten").value
+    val perPartitionDistinct = docs
+      .select(spark_partition_id().as("p"), explode(WordCount.tokenArray($"text")).as("word"))
+      .groupBy("p", "word").count().count()
+    assert(written > 0 && written <= perPartitionDistinct, s"$written > $perPartitionDistinct")
+  }
+
+  test("combiner: a table past its bound emits and restarts, and the sums stay exact") {
+    def word(i: Int): String =
+      Iterator.iterate(i)(_ / 26).takeWhile(_ > 0).map(d => ('a' + d % 26).toChar).mkString + "q"
+    val distinct = 2 * WordCount.MaxWords + 17
+    val words = (1 to distinct).map(word) ++ (1 to 5000).map(i => word(i % 300 + 1))
+    // short lines, one line holding more distinct words than the bound, and
+    // one line of long words holding more key chars than the table keeps
+    val lines = words.grouped(50).map(_.mkString(" ")).toSeq :+
+      words.reverse.take(WordCount.MaxWords + 5).map(_.toUpperCase(Locale.ROOT)).mkString(" ") :+
+      (1 to 300).map(word(_) * 10000).mkString(" ")
+    val want = lines.flatMap(_.toLowerCase(Locale.ROOT).split(" ")).groupBy(identity).view
+      .mapValues(_.size.toLong).toMap
+    assert(want.size == distinct + 300)
+    val out = WordCount.combine(lines.iterator).toSeq
+    assert(out.size > want.size, "the table never reached its bound")
+    assert(out.groupMapReduce(_._1)(_._2)(_ + _) == want)
   }
 }

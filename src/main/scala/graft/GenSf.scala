@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *
   * All draws are xxhash64-keyed (pure Catalyst, distributed, no
   * driver-side randomness, reproducible bit-for-bit), the same
-  * pattern as [[AnnFlagship]]'s corpus. NOT a substitute for the
+  * pattern as the [[flagship.Ann]] scenarios' corpus. NOT a substitute for the
   * driver's data at the oracle scales — correctness stays gated on
   * /root/testdata; this exists for scaling measurements only.
   *
@@ -193,7 +193,7 @@ object GenSf {
     write("documents", docs)
 
     // embeddings: 64-dim float, 10 label clusters (centers keyed on
-    // label, per-vector noise) — the AnnFlagship recipe at the
+    // label, per-vector noise) — the flagship.Ann recipe at the
     // registry's scale and schema
     write("embeddings", spark.range(nVecs).selectExpr(
       "id AS vec_id",

@@ -2,15 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
+import graft.operators.Materialize
 import graft.streaming.EventsStream
 
 /** Streaming CRASH-RESUME flagship — the streaming twin of
   * ClusterCheck's batch executor-kill recovery (r9 verdict item 5):
   * kill the whole driver JVM mid-replay and prove that resuming from
   * the checkpoint produces output hash-identical to an uninterrupted
-  * run, at the same ~1 GB event volume as StreamFlagship.
+  * run, at the same ~1 GB event volume as the `stream` scenario of
+  * [[Flagship]].
   *
-  * Protocol (per run, the StreamFlagship shape): a 16M-event parquet
+  * Protocol (per run, the `stream` scenario's shape): a 16M-event parquet
   * backlog replayed through `sessionizeStateful` as real micro-batches
   * (file source + maxFilesPerTrigger + Trigger.AvailableNow), then one
   * far-future sentinel event + a second AvailableNow run on the same
@@ -40,11 +42,11 @@ import graft.streaming.EventsStream
   *        (--child <evDir> <out> <ckpt> is the forked entry point)
   */
 object StreamResume {
-  val Slices = 64
-  // generator formula, sentinel, schema, and parity projection are
-  // StreamFlagship's OWN members (not copies) — the two flagships'
-  // results stay comparable by construction (review finding)
-  import StreamFlagship.{EvSchema, eventSlice, flushSentinel, sessionChecksum}
+  // generator formula, sentinel, schema, slice writer and parity
+  // projection are the stream scenario's OWN members (not copies) — the
+  // two results stay comparable by construction
+  import flagship.StreamReplay.{EvSchema, eventSlice, flushSentinel, linkDir, sessionChecksum,
+    wipe, writeSlices}
 
   private def session(app: String): SparkSession =
     Session.build(app, Session.streaming: _*)
@@ -70,25 +72,6 @@ object StreamResume {
     runMain(spark, evDir, out, ckpt)
   }
 
-  private def wipe(paths: String*): Unit = paths.foreach { p =>
-    val f = new java.io.File(p)
-    if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
-  }
-
-  /** Hardlink view of the generated backlog, so each run appends its
-    * own sentinel without touching the shared source. (listFiles, not
-    * Files.list — the stream variant leaks a directory fd unless
-    * closed; review finding.) */
-  private def linkDir(src: String, dst: String): Unit = {
-    wipe(dst)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
-    Option(new java.io.File(src).listFiles()).getOrElse(Array.empty)
-      .filter(_.isFile).foreach { f =>
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst, f.getName), f.toPath)
-      }
-  }
-
   private def commitCount(ckpt: String): Int = {
     val d = new java.io.File(s"$ckpt/commits")
     if (!d.exists()) 0
@@ -108,25 +91,13 @@ object StreamResume {
     val killAfter = if (args.length > 2) args(2).toInt else 10
     val spark = session("graft-stream-resume")
 
-    // ---- backlog (the StreamFlagship event generator + slice shape:
+    // ---- backlog (the stream scenario's event generator + slice shape:
     // event time strictly increasing with id, sequential slice writes
-    // so replay order = event-time order) -----------------------------
-    val base = s"$work/events_base_n$nEvents"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(base))) {
-      val tmp = new java.io.File(base + ".tmp")
-      wipe(tmp.getPath)
-      val per = nEvents / Slices
-      val tW = System.nanoTime()
-      for (i <- 0 until Slices) {
-        val lo = i * per
-        val hi = if (i == Slices - 1) nEvents else (i + 1) * per
-        eventSlice(spark, lo, hi, nEvents)
-          .coalesce(4).write.mode(if (i == 0) "overwrite" else "append")
-          .parquet(tmp.getPath)
-      }
-      java.nio.file.Files.move(tmp.toPath, java.nio.file.Paths.get(base))
-      println(f"setup: $nEvents events in ${(System.nanoTime() - tW) / 1e9}%.1f s")
-    }
+    // so replay order = event-time order), committed once per size ------
+    val tW = System.nanoTime()
+    val base = Materialize.commit(spark, work, s"events_base_n$nEvents")(
+      d => writeSlices(d, nEvents)(eventSlice(spark, _, _, nEvents)))
+    println(f"setup: $nEvents events ready in ${(System.nanoTime() - tW) / 1e9}%.1f s")
 
     // ---- run A: uninterrupted control --------------------------------
     val (evA, outA, ckptA) = (s"$work/ev_a", s"$work/out_a", s"$work/ckpt_a")

@@ -163,10 +163,10 @@ object Behavior {
 
   /** The rank-window → quartile-code → segment-aggregate stage of
     * [[rfmSegments]], over any (c_custkey, last_day, freq, cents)
-    * dimension table — factored out so [[graft.RankDimFlagship]] can
-    * drive the EXACT shipped window shape at 10⁸ synthetic rows (r13
-    * verdict item 7: measure the honest-exact-rank allowlist class at
-    * dimension scale instead of arguing it). */
+    * dimension table — factored out so the `rankdim` scenario of
+    * [[graft.Flagship]] can drive the EXACT shipped window shape at 10⁸
+    * synthetic rows (r13 verdict item 7: measure the honest-exact-rank
+    * allowlist class at dimension scale instead of arguing it). */
   def rfmFrom(perCust: DataFrame): DataFrame = {
     // honest-exact global ranks over the customer DIMENSION
     // (allowlisted; see scaladoc). ⌈4r/n⌉ as the integral

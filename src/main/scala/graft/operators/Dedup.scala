@@ -110,8 +110,9 @@ object Dedup {
     * registry/oracle surface — DuckDB reproduces md5 hex arithmetic
     * digit-for-digit, xxhash64 has no cross-engine twin — so every
     * oracle-gated entry is unchanged; this is the path a production
-    * deployment (and [[graft.DedupFlagship]]) runs, recall/precision
-    * re-measured against the same planted truth (DEDUP_1GB.md). */
+    * deployment (and the `dedup` scenario of [[graft.Flagship]]) runs,
+    * recall/precision re-measured against the same planted truth
+    * (DEDUP_1GB.md). */
   private[graft] def fastBandTable(grams: DataFrame): DataFrame = {
     val h = xxhash64(col("g"))
     val sig = grams
@@ -857,7 +858,7 @@ object Dedup {
     // lexicographically ordered exactly as its numeric value (the
     // minhashes() comment's rule), so the per-gram conv+cast — 16 base
     // conversions per gram occurrence, the dominant stage of this query's
-    // 12.8 s isolated CPU (StageAudit: 6.7 s in the signature build) —
+    // 12.8 s isolated CPU (`Explain <query>` audit: 6.7 s in the signature build) —
     // collapses to 16 per DOC. Same argmin element, bit-identical h_j.
     def sigCol(j: Int): Column = conv(array_min(transform(col("sh"),
       g => substring(md5(concat(g, lit("#" + j))), 1, 8))), 16, 10)

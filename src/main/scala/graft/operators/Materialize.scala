@@ -17,9 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    which localCheckpoint blocks do not: this is the path a 100 TB
   *    deployment runs on (the reference likewise persists its shuffle
   *    intermediates on disk — reference worker/worker.py:34-36,
-  *    coordinator/coordinator.py:57-89). A directory missing its
-  *    `_SUCCESS` marker (crashed writer) is rebuilt, and the
-  *    `overwrite` write makes the retry idempotent.
+  *    coordinator/coordinator.py:57-89). An uncommitted directory
+  *    (crashed writer) is rebuilt, see [[commit]].
   *  - IN-MEMORY (default, single-JVM): eager `localCheckpoint` — RDD
   *    storage, intentionally OUTSIDE the SQL cache so per-query
   *    `clearCache()` hygiene in Bench/Verify cannot evict an index
@@ -100,37 +99,44 @@ object Materialize {
 
   /** Materialize `df` under `key`, once. The builder argument is
     * by-name: when the durable table already exists it is never
-    * evaluated (no plan construction, no upstream jobs).
-    *
-    * Commit protocol (multi-driver safe): a builder writes to a PRIVATE
-    * temp directory and atomically renames it into place, so two
-    * sessions sharing one index dir (the stated multi-driver design)
-    * can race freely — exactly one rename wins, losers discard their
-    * temp table, and a concurrent reader only ever observes either no
-    * table or a fully-committed one (never a half-overwritten dir, the
-    * failure mode of the previous in-place `mode(overwrite)` write).
-    * A leftover dir with no `_SUCCESS` (crashed writer) is cleared
-    * before building. Temp names start with '.' so even the worst
-    * rename interleaving (a temp moved INTO a just-committed target by
-    * a lagging loser) is invisible to parquet readers, which skip
-    * dot-prefixed paths. */
+    * evaluated (no plan construction, no upstream jobs). The durable
+    * table goes through [[commit]]. */
   def table(spark: SparkSession, key: String)(df: => DataFrame): DataFrame = {
     val dir = spark.conf.get(DirConf, "")
     if (dir.isEmpty) df.localCheckpoint()
-    else {
-      val safe = key.replaceAll("[^A-Za-z0-9._-]", "_")
-      val (path, fs) = fsPath(spark, s"$dir/$safe")
-      val ok = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-      if (!fs.exists(ok)) {
-        if (fs.exists(path)) fs.delete(path, true)
-        val tmp = new org.apache.hadoop.fs.Path(
-          s"$dir/.tmp-$safe-${java.util.UUID.randomUUID.toString.take(8)}")
-        df.write.mode("overwrite").parquet(tmp.toString)
-        // lost the race (another builder committed meanwhile) → discard
-        if (fs.exists(ok) || !fs.rename(tmp, path)) fs.delete(tmp, true)
-      }
-      spark.read.parquet(path.toString)
+    else spark.read.parquet(commit(spark, dir, key.replaceAll("[^A-Za-z0-9._-]", "_"))(
+      df.write.mode("overwrite").parquet(_)))
+  }
+
+  /** The directory `dir/name`, written by `write` at most once: the path
+    * of a committed directory, which is never rewritten.
+    *
+    * Commit protocol (multi-driver safe): `write` fills a PRIVATE temp
+    * directory, the `_SUCCESS` done-marker is put in it, and it is
+    * atomically renamed into place, so two sessions sharing one index
+    * dir (the stated multi-driver design) can race freely — exactly one
+    * rename wins, losers discard their temp dir, and a concurrent reader
+    * only ever observes either no directory or a fully-committed one
+    * (never a half-overwritten dir, the failure mode of an in-place
+    * `mode(overwrite)` write). A leftover dir with no `_SUCCESS` (crashed
+    * writer) is cleared before building. Temp names start with '.' so
+    * even the worst rename interleaving (a temp moved INTO a
+    * just-committed target by a lagging loser) is invisible to parquet
+    * readers, which skip dot-prefixed paths, and a crashed writer's temp
+    * dir is never read. */
+  def commit(spark: SparkSession, dir: String, name: String)(write: String => Unit): String = {
+    val (path, fs) = fsPath(spark, s"$dir/$name")
+    val ok = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
+    if (!fs.exists(ok)) {
+      if (fs.exists(path)) fs.delete(path, true)
+      val tmp = new org.apache.hadoop.fs.Path(
+        s"$dir/.tmp-$name-${java.util.UUID.randomUUID.toString.take(8)}")
+      write(tmp.toString)
+      fs.create(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"), true).close()
+      // lost the race (another builder committed meanwhile) → discard
+      if (fs.exists(ok) || !fs.rename(tmp, path)) fs.delete(tmp, true)
     }
+    path.toString
   }
 
   /** Content fingerprint of source data, to fold into durable index

@@ -228,7 +228,7 @@ object Pipeline {
     // STAGED: the bin-count aggregate feeds FOUR subtrees (grid bins,
     // grid types, the grid join, and — through cum — both sides of
     // the ref join); unstaged, each runs the corpus scan+aggregate as
-    // its own job (the bm25/StageAudit lesson, measured 9.6 s CPU at
+    // its own job (the bm25/Explain-audit lesson, measured 9.6 s CPU at
     // sf0.1 vs ~3 staged)
     val counts = Materialize.stage(events
       .groupBy(floor(col("value") / width).cast("long").as("bin"),

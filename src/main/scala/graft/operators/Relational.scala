@@ -293,8 +293,8 @@ object Relational {
   /** Exact interpolated percentiles of a 2-decimal-bounded column via
     * its VALUE-CELL table (r14 optimization round). The built-in
     * `percentile` aggregate builds one value→count OpenHashMap per
-    * partition and merges them in the final SINGLE task — StageAudit
-    * measured that merge at 1.55 s of serial wall on equidepth's
+    * partition and merges them in the final SINGLE task — the `Explain <query>`
+    * audit measured that merge at 1.55 s of serial wall on equidepth's
     * near-unique 600k-row input at sf0.1 (~600k boxed inserts + a
     * 236k-entry sort). Here the map-merge becomes a partial-aggregated
     * `groupBy(value)` (each distinct value lives in exactly one

@@ -160,7 +160,7 @@ object Search {
       k: Int = 20, tfPre: Option[DataFrame] = None): DataFrame = {
     // staged: four consumers (two topK legs, the n_docs scalar, the
     // score join) would otherwise each re-run the full-index aggregate
-    // as separate broadcast-subquery jobs (StageAudit r12)
+    // as separate broadcast-subquery jobs (`Explain <query>` audit, r12)
     val tf = tfPre.getOrElse(Materialize.stage(termFreq(idx)))
     val dft = tf.groupBy("term").agg(count(lit(1)).as("df"))
     // ranks loRank..hiRank as the DIFFERENCE of two distributed top-k's
@@ -240,7 +240,7 @@ object Search {
     // STAGE tf: the query-term table and both topK legs are derived
     // from it AND scoreBm25 joins it — unstaged, each broadcast-
     // subquery leg re-runs the full-index scan+aggregate as its own
-    // job (StageAudit r12: 2–3 identical corpus-sized stages per
+    // job (`Explain <query>` audit, r12: 2–3 identical corpus-sized stages per
     // probe, the bm25 family's "fixed machinery" floor). One scan,
     // then every leg reads the checkpointed per-(term,doc) table.
     val tf = tfPre.getOrElse(Materialize.stage(termFreq(idx)))

@@ -55,44 +55,6 @@ object Similarity {
   lazy val lshSigns: Array[Array[Int]] =
     graft.functions.LshBucket.signMatrix(MaxPlanes, Dim)
 
-  // ---- OPQ-lite rotation (r10 verdict item 8) -------------------------
-
-  /** Deterministic sign-flipped HADAMARD rotation R = (1/√Dim)·H·D —
-    * the structured orthogonal transform OPQ-lite uses before PQ encode
-    * (Ge et al. CVPR'13 motivate learned rotations; the
-    * randomized-Hadamard HD form is the standard cheap surrogate, e.g.
-    * FALCONN / QuickADC). H is the Sylvester Hadamard matrix
-    * (H_ij = (−1)^popcount(i AND j)), D a seeded ±1 diagonal; R is
-    * exactly orthogonal, so cosines — and therefore the TRUE neighbor
-    * sets — are preserved, while per-subspace variance is redistributed
-    * across the PQ cut points for correlated inputs. Fixed and seeded:
-    * both engines (and any oracle) reproduce it from the formula.
-    * AnnFlagship measures whether it closes the straddle-regime ADC
-    * gap; [[DedupSimilaritySpec]] pins R's orthogonality and the
-    * cosine-preservation property. */
-  def opqSigns: Array[Double] = Array.tabulate(Dim) { j =>
-    // seeded ±1 diagonal: parity of the low 16 bits of a Weyl sequence
-    if (java.lang.Long.bitCount((j * 0x9e3779b97f4a7c15L) & 0xffffL) % 2 == 0)
-      1.0 else -1.0
-  }
-
-  /** FLAGSHIP-ONLY (advisor r11): this builds a Dim² = 4096-term
-    * literal expression tree (64 outputs × 64-term sums) that exceeds
-    * whole-stage-codegen method limits and evaluates interpreted —
-    * acceptable for the one-time GRAFT_OPQ corpus rewrite it serves,
-    * but it must NOT be promoted into a registered query; if ever
-    * needed there, compute the rotation as an array fold/UDF instead. */
-  def opqRotateCol(e: Column): Column = {
-    val d = opqSigns
-    val inv = 1.0 / math.sqrt(Dim.toDouble)
-    array((0 until Dim).map { i =>
-      (0 until Dim).map { j =>
-        val h = if (java.lang.Integer.bitCount(i & j) % 2 == 0) 1.0 else -1.0
-        lit(h * d(j) * inv) * element_at(e, j + 1).cast("double")
-      }.reduce(_ + _).cast("float")
-    }: _*)
-  }
-
   /** Left-associated Σ a[i]*b[i] in double — order-stable. */
   def dotCol(a: Column, b: Column): Column =
     (1 to Dim).map(i =>
@@ -189,7 +151,7 @@ object Similarity {
     * of the bucketed shape is pure overhead (measured: 3.3× task CPU
     * on the sf0.1 corpus, interleaved A/B vs the r9 binary); above it
     * the single-stage window sorts nQueries·N rows per query slice
-    * and spilled past a 64 GB disk at 10M vectors (AnnPqRegime). */
+    * and spilled past a 64 GB disk at 10M vectors (the `ann_pq` scenario). */
   val BruteBucketMin = 1000000L
 
   /** Brute-force cosine top-k: queries = vec_id < nQueries, ranked per
@@ -334,7 +296,7 @@ object Similarity {
     * aggregate (max_by) plans as SortAggregate — Spark sorts the entire
     * N×K scored stream by key before aggregating, which at 10M vectors
     * × 3162 centroids spilled 24 GB/task past a 64 GB disk (the
-    * round-10 AnnPqRegime failure). A LONG buffer runs through
+    * round-10 `ann_pq` scenario failure). A LONG buffer runs through
     * HashAggregate inside whole-stage codegen: the 3·10¹⁰-row stream
     * folds into 10M partial rows with no sort anywhere. Layout:
     * (ccos_micro + 10⁶)·2²¹ + (2²¹−1 − cent_id); supports K < 2²¹
@@ -738,7 +700,7 @@ object Similarity {
     * max_by it replaces planned as SortAggregate, which sorted the
     * full N×[[PqSub]]×[[PqCodes]] encode stream — at 10M vectors that
     * is 2.6·10⁹ rows (~120 GB of sort spill, past this host's disk;
-    * the second round-10 AnnPqRegime failure). The LONG min() runs
+    * the second round-10 `ann_pq` scenario failure). The LONG min() runs
     * through HashAggregate codegen and folds map-side to one row per
     * (vector, subspace). */
   private def pqEncode(sv: DataFrame, cb: DataFrame): DataFrame =
@@ -754,7 +716,7 @@ object Similarity {
     * [[PqSub]]=16 4-bit codes of a vector in ONE BIGINT (bit_or of
     * disjoint shifts — exactly 64 bits), so the durable structure is
     * genuinely ~8 B/vec + key, the footprint that justifies PQ at 10⁹
-    * vectors. Round 10 finding (AnnPqRegime at 200k): the previous
+    * vectors. Round 10 finding (the `ann_pq` scenario at 200k): the previous
     * flat (vec_id, sub, code) layout cost ~90 B/vec on disk — MORE
     * than the int8 corpus it was supposed to undercut; packing is
     * lossless (codes identical, byte-for-byte) and restores the 8×

@@ -1131,8 +1131,8 @@ object TextAnalysis {
   def tokenKlDrift(docs: DataFrame): DataFrame = {
     // staged: four consumers (global counts, split totals, the grand
     // total, and the scored join) would otherwise each re-run the
-    // corpus tokenize as separate broadcast-subquery jobs (StageAudit
-    // r12, the bm25-family finding); staged it is a vocabulary-sized
+    // corpus tokenize as separate broadcast-subquery jobs (`Explain
+    // <query>` audit, r12, the bm25-family finding); staged it is a vocabulary-sized
     // table read four times
     val tokSplit = Materialize.stage(
       docs.select(splitOf.as("split"), explode(tokenArray(col("text"))).as("tok"))
@@ -1185,7 +1185,7 @@ object TextAnalysis {
   def importanceResampling(docs: DataFrame, k: Int = 100): DataFrame = {
     // staged: the llr broadcast chain and the weights join both consume
     // this table — unstaged, the broadcast leg re-ran the corpus
-    // tokenize+hash as its own job (StageAudit r12: two identical
+    // tokenize+hash as its own job (`Explain <query>` audit, r12: two identical
     // 3-4 s stages); staged, the "ONE corpus scan" the scaladoc
     // promises is actually one
     val docBucket = Materialize.stage(docs

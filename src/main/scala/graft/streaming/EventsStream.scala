@@ -701,7 +701,7 @@ object EventsStream {
     * real state store, real parquet sink), a far-future sentinel in the
     * backlog whose post-batch-0 watermark advance makes the trailing
     * no-data batch fire every open session's event-time timeout (the
-    * StreamFlagship flush protocol, single-run form since the r14
+    * `stream` scenario flush protocol, single-run form since the r14
     * optimization round), and the sink read back into the
     * batch `sessionize` output shape. The DuckDB oracle is the BATCH
     * gap-sessionization — the driver hash gate pins streaming ≡ batch

@@ -676,39 +676,6 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(r.getLong(4) + r.getLong(5) === 1L) // the eval member
   }
 
-  test("OPQ rotation is orthogonal: pairwise cosines (hence neighbor sets) are preserved") {
-    // matrix-level: rows of R = (1/sqrt(D)) H diag(signs) are orthonormal
-    val d = Similarity.opqSigns
-    val dim = Similarity.Dim
-    def r(i: Int, j: Int) =
-      (if (Integer.bitCount(i & j) % 2 == 0) 1.0 else -1.0) * d(j) / math.sqrt(dim.toDouble)
-    for (a <- 0 until dim; b <- a until dim) {
-      val dot = (0 until dim).map(j => r(a, j) * r(b, j)).sum
-      assert(math.abs(dot - (if (a == b) 1.0 else 0.0)) < 1e-12,
-        s"R rows $a,$b not orthonormal: $dot")
-    }
-    // plan-level: pairwise cosines of rotated vectors equal the
-    // originals (float round-trip leaves ~1e-5), so ANN ground truth is
-    // invariant under the rotation
-    val sample = emb.filter(col("vec_id") < 8)
-    val rot = sample.select(col("vec_id"),
-      Similarity.opqRotateCol(col("embedding")).as("embedding"))
-    def cosPairs(df: org.apache.spark.sql.DataFrame) = {
-      val a = df.select(col("vec_id").as("ia"), col("embedding").as("ea"))
-      val b = df.select(col("vec_id").as("ib"), col("embedding").as("eb"))
-      a.join(b, col("ia") < col("ib"))
-        .select(col("ia"), col("ib"),
-          (Similarity.dotCol(col("ea"), col("eb")) /
-            (sqrt(Similarity.norm2Col(col("ea"))) *
-             sqrt(Similarity.norm2Col(col("eb"))))).as("c"))
-        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    }
-    val o = cosPairs(sample); val q = cosPairs(rot)
-    assert(o.keySet == q.keySet && o.nonEmpty)
-    o.foreach { case (k, v) =>
-      assert(math.abs(v - q(k)) < 1e-5, s"pair $k cosine moved: $v vs ${q(k)}") }
-  }
-
   test("incremental ANN adds: base+delta assignment equals frozen full re-assignment; probes serve both sides") {
     val n = emb.count()
     val b = n * 9 / 10

@@ -135,8 +135,11 @@ class SessionSpec extends SparkSpec {
     assert(offenders("FutureTask", "graft/QueryRunner.scala").isEmpty)
     assert(offenders("\"GRAFT_ONLY\"", "graft/QueryRunner.scala").isEmpty)
     // env knobs retired as constants (their evidence: BENCH_r03_aqe.json,
-    // BENCH_r04_aqe.json, BENCH_r05_noaqe.json, BENCH_r07_noaqe.json)
-    Seq("AQE", "WARM_PASS", "KILL_STALE").map("GRAFT_" + _).foreach { knob =>
+    // BENCH_r04_aqe.json, BENCH_r05_noaqe.json, BENCH_r07_noaqe.json) and
+    // before/after knobs whose "before" is frozen in ANN_1M.md (OPQ),
+    // DEDUP_1GB.md (MD5_BANDS) and BASELINE_1GB.md (SERIAL_DECODE)
+    Seq("AQE", "WARM_PASS", "KILL_STALE", "OPQ", "MD5_BANDS", "SERIAL_DECODE")
+        .map("GRAFT_" + _).foreach { knob =>
       assert(offenders(knob, "").isEmpty, knob)
     }
   }
@@ -153,5 +156,13 @@ class SessionSpec extends SparkSpec {
     val similarity = sources.toMap.apply("graft/operators/Similarity.scala")
     val ranker = java.util.regex.Pattern.quote("Window.partitionBy(col(\"query_id\"))")
     assert(ranker.r.findAllIn(similarity).length == 1)
+  }
+
+  test("tooling guard: one commit protocol, one runner for the at-scale scenarios") {
+    // every cached or durable directory goes through Materialize.commit
+    assert(offenders("_SUCCESS", "graft/operators/Materialize.scala").isEmpty)
+    val mains = sources.collect { case (n, s) if s.contains("def main(") => n }
+    assert(mains.sorted == Seq("Bench", "ClusterCheck", "Explain", "Flagship", "GenSf",
+      "StreamResume", "Verify").map(m => s"graft/$m.scala"))
   }
 }

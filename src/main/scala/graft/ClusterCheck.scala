@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.TimeoutException
+
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Multi-process execution evidence — the claim this engine inherits
   * from the reference (1 coordinator + N worker PROCESSES — reference
@@ -219,9 +222,11 @@ object ClusterCheck {
     sc1.stop()
 
     val mismatches = perQuery.filter(_._2 != "match").map(_._1)
-    val errJson = errors.map { case (k, v) => s""""$k":"$v"""" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"cluster_check","master":"$clusterMaster","sf":"$sfDir","queries_total":${selected.size},"queries_match":$nMatch,"mismatches":${mismatches.map("\"" + _ + "\"").mkString("[", ",", "]")},"durable_cross_topology":$durableOk,"durable_bare_scan":$bareScan,"cc_executor_kill_ok":$ccKillOk,"query_executor_kill_ok":$queryKillOk,"chain_n":$chainN,"errors":$errJson}""")
+    println(Json(ListMap("metric" -> "cluster_check", "master" -> clusterMaster, "sf" -> sfDir,
+      "queries_total" -> selected.size, "queries_match" -> nMatch, "mismatches" -> mismatches,
+      "durable_cross_topology" -> durableOk, "durable_bare_scan" -> bareScan,
+      "cc_executor_kill_ok" -> ccKillOk, "query_executor_kill_ok" -> queryKillOk,
+      "chain_n" -> chainN, "errors" -> errors)))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(indexDir))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(clusterIndexDir))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckptDir))

@@ -10,9 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   *
   * `Explain <query> [sfDir]` prints the formatted physical plan of one
   * registry query (default sf0.01), then runs it twice as a full result
-  * — every column and the final order, through the `noop` sink, never a
-  * pruned `count()` — once warm (codegen, index builds) and once
-  * audited, and prints the audited pass's wall time and per-stage table:
+  * ([[QueryRunner.result]], never a pruned `count()`) — once warm
+  * (codegen, index builds) and once audited, and prints the audited pass's wall time and per-stage table:
   * executor CPU, tasks, input records, shuffle read/write records and
   * the stage's name/callsite — the evidence a plan-shape claim needs
   * when per-query totals cannot localize cost (e.g. the same input
@@ -44,7 +43,7 @@ object Explain {
     val spark = Session.build("graft-explain")
     val fn = SparkEntry.queries(name)
     fn(spark, sfDir).explain("formatted")
-    fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warm
+    QueryRunner.result(fn(spark, sfDir)) // warm
     val stages = new ConcurrentLinkedQueue[St]()
     val listener = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
@@ -57,7 +56,7 @@ object Explain {
     }
     spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
-    fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    QueryRunner.result(fn(spark, sfDir))
     val wall = (System.nanoTime() - t0) / 1e9
     // stage events are posted async: drain the bus before reading
     Metrics.drain(spark.sparkContext)

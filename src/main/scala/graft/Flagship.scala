@@ -132,22 +132,9 @@ object Flagship {
         "cpu_s" -> s.m.cpuSec, "shuffle_write_mb" -> s.m.shuffleWriteBytes / 1e6,
         "spill_mb" -> (s.m.memSpillBytes + s.m.diskSpillBytes) / 1e6) }
       val built = Materialize.buildTimes.filter { case (k, v) => !builtBefore.get(k).contains(v) }
-      json(ListMap("metric" -> sc.metric) ++ fields ++ ListMap("stages" -> stages,
+      Json(ListMap("metric" -> sc.metric) ++ fields ++ ListMap("stages" -> stages,
         "index_build" -> ListMap(built.toSeq.sortBy(-_._2): _*), "cpus" -> Session.cpus))
     } finally spark.sparkContext.removeSparkListener(c.metrics)
-  }
-
-  /** Objects from maps (in their order), arrays from other sequences,
-    * doubles rounded to 4 decimals (NaN → null), `None` → null. */
-  def json(v: Any): String = v match {
-    case m: scala.collection.Map[_, _] =>
-      m.map { case (k, x) => json(k.toString) + ":" + json(x) }.mkString("{", ",", "}")
-    case xs: Iterable[_] => xs.map(json).mkString("[", ",", "]")
-    case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else (math.round(d * 1e4) / 1e4).toString
-    case None => "null"
-    case Some(x) => json(x)
-    case x => x.toString
   }
 
   def main(args: Array[String]): Unit = parse(args.toSeq) match {

@@ -8,11 +8,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.SparkSession
 
 /** The one task-metrics listener of the mains: executor CPU, shuffle
-  * write, memory/disk spill and peak execution memory, summed over all
-  * tasks and per job group (a watchdogged query runs under its own
-  * group, see [[QueryRunner]]). Install with [[Metrics.install]]. */
+  * write, memory/disk spill and peak execution memory, per job group (a
+  * watchdogged query runs under its own group, see [[QueryRunner]]) and
+  * per [[measure]] body. Install with [[Metrics.install]]. */
 final class Metrics private (sc: SparkContext) extends SparkListener {
-  import Metrics.Totals
+  import Metrics.{Tag, Totals, bodies}
 
   private final class Acc {
     val cpuNs, shuffleWrite, memSpill, diskSpill, peakMem = new AtomicLong()
@@ -26,48 +26,55 @@ final class Metrics private (sc: SparkContext) extends SparkListener {
     def totals: Totals = Totals(cpuNs.get, shuffleWrite.get, memSpill.get,
       diskSpill.get, peakMem.get)
   }
-  private val all = new Acc
   private val groups = new ConcurrentHashMap[String, Acc]()
-  private val stageGroup = new ConcurrentHashMap[Int, String]()
+  private val stageGroups = new ConcurrentHashMap[Int, Seq[String]]()
 
   override def onJobStart(js: SparkListenerJobStart): Unit =
-    Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-      .foreach(g => js.stageIds.foreach(stageGroup.put(_, g)))
+    Option(js.properties).foreach { p =>
+      val gs = Option(p.getProperty("spark.jobGroup.id")).toSeq ++
+        Option(p.getProperty(Tag)).toSeq.flatMap(_.split(','))
+      if (gs.nonEmpty) js.stageIds.foreach(stageGroups.put(_, gs))
+    }
 
   override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-    if (te.taskMetrics != null) {
-      all.add(te.taskMetrics)
-      Option(stageGroup.get(te.stageId))
-        .foreach(g => groups.computeIfAbsent(g, _ => new Acc).add(te.taskMetrics))
-    }
+    if (te.taskMetrics != null)
+      Option(stageGroups.get(te.stageId)).foreach(_.foreach(g =>
+        groups.computeIfAbsent(g, _ => new Acc).add(te.taskMetrics)))
 
   /** Everything counted so far under job group `g`, after draining. */
   def group(g: String): Totals = {
     drain(); Option(groups.get(g)).map(_.totals).getOrElse(Totals.Zero)
   }
 
-  /** Run `body` and return its result with the task metrics it added
-    * (peak memory is the largest single task's peak inside `body`). */
+  /** Run `body` and return its result with the task metrics of the jobs
+    * it started, on this thread or on threads it started (a stream's
+    * micro-batches too), and of no other thread's jobs. A nested body
+    * counts into every enclosing one. Peak memory is the largest single
+    * task's peak. The body's jobs carry a local property, not a job group
+    * of their own, so a watchdog can still cancel the caller's group. */
   def measure[T](body: => T): (T, Totals) = {
-    drain()
-    val before = all.totals
-    all.peakMem.set(0L)
-    val r = body
-    drain()
-    (r, all.totals - before)
+    val outer = Option(sc.getLocalProperty(Tag))
+    val id = s"measure-${bodies.incrementAndGet()}"
+    sc.setLocalProperty(Tag, (outer.toSeq :+ id).mkString(","))
+    try (body, group(id))
+    finally {
+      sc.setLocalProperty(Tag, outer.orNull)
+      groups.remove(id)
+    }
   }
 
   private def drain(): Unit = Metrics.drain(sc)
 }
 
 object Metrics {
+  /** The local property naming the [[Metrics.measure]] bodies a job
+    * runs under, innermost last. */
+  private val Tag = "graft.measure"
+  private val bodies = new AtomicLong()
+
   final case class Totals(cpuNs: Long, shuffleWriteBytes: Long,
       memSpillBytes: Long, diskSpillBytes: Long, peakExecMem: Long) {
     def cpuSec: Double = cpuNs / 1e9
-    /** Additive counters as a delta; the peak is kept as measured. */
-    def -(o: Totals): Totals = Totals(cpuNs - o.cpuNs,
-      shuffleWriteBytes - o.shuffleWriteBytes, memSpillBytes - o.memSpillBytes,
-      diskSpillBytes - o.diskSpillBytes, peakExecMem)
   }
   object Totals { val Zero: Totals = Totals(0L, 0L, 0L, 0L, 0L) }
 

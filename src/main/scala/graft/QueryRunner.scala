@@ -2,10 +2,10 @@ package graft
 
 import java.util.concurrent.{FutureTask, TimeUnit, TimeoutException}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** How the registry mains pick and run queries: one `GRAFT_ONLY`
-  * selector and one per-query watchdog. */
+  * selector, one per-query watchdog and one result sink. */
 object QueryRunner {
   val OnlyEnv = "GRAFT_ONLY"
 
@@ -52,4 +52,9 @@ object QueryRunner {
       case e: Throwable => Left(if (e.getCause != null) e.getCause else e)
     } finally spark.catalog.clearCache()
   }
+
+  /** Materialise the whole result of `df`, every column and the final
+    * order, into the `noop` sink: the plan Verify checks. A `count()`
+    * lets Catalyst prune columns, sorts, joins and whole scans. */
+  def result(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Materialize
@@ -170,14 +172,12 @@ object StreamResume {
     // invisible through the sink manifest — report the physical count
     val physB = new java.io.File(outB).listFiles()
       .count(_.getName.startsWith("part-"))
-    def r2(v: Double) = math.round(v * 100) / 100.0
-    println(s"""{"metric":"stream_resume","n_events":$nEvents,""" +
-      s""""commits_at_kill":$commitsAtKill,"child_killed":$childKilled,""" +
-      s""""batches_a":$batchesA,"batches_b_total":$batchesB,""" +
-      s""""rows_a":${csA._1},"rows_b":${csB._1},""" +
-      s""""parity":${csA == csB},""" +
-      s""""physical_part_files_b":$physB,""" +
-      s""""sec_a":${r2(secA)},"sec_b_to_kill":${r2(secBMain)},"sec_b_resume":${r2(secBResume)}}""")
+    println(Json(ListMap("metric" -> "stream_resume", "n_events" -> nEvents,
+      "commits_at_kill" -> commitsAtKill, "child_killed" -> childKilled,
+      "batches_a" -> batchesA, "batches_b_total" -> batchesB,
+      "rows_a" -> csA._1, "rows_b" -> csB._1, "parity" -> (csA == csB),
+      "physical_part_files_b" -> physB,
+      "sec_a" -> secA, "sec_b_to_kill" -> secBMain, "sec_b_resume" -> secBResume)))
     spark.stop()
     if (csA != csB) sys.exit(1)
   }

@@ -31,8 +31,9 @@ import graft.streaming.EventsStream
   *     EXACT parity.
   *  2. `nearDupGate` — dropDuplicatesWithinWatermark ingestion dedup
   *     over `docs` docs (default 3.3M ≈ 1 GB text; ~3% planted dups of a
-  *     doc ≤ 1000 ids earlier ≈ 11 simulated seconds — well inside the
-  *     10-minute watermark). Parity vs batch Dedup.sigDedupBatch is on
+  *     doc ≤ 1000 ids earlier ≈ 11 simulated seconds at that size and
+  *     at most 5 minutes at any size — inside the 10-minute watermark,
+  *     see [[DocStepMs]]). Parity vs batch Dedup.sigDedupBatch is on
   *     the SURVIVOR SIGNATURE SET: the gate's contract is one survivor
   *     per signature, and which member survives an intra-batch tie is
   *     task-order-dependent by design (the keeper-id match is reported,
@@ -53,6 +54,9 @@ object StreamReplay {
   val EvSpanMs: Long = 30L * 86400 * 1000 // 30 simulated days
   val EvT0: Long = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
   val EvSchema = "user_id LONG, ts TIMESTAMP, value DOUBLE"
+  /** Largest simulated gap between consecutive docs of the gate's
+    * backlog: 1000 docs span at most 5 minutes, half the watermark. */
+  val DocStepMs = 300L
 
   /** One generator slice [lo, hi): event time strictly increasing with
     * id → slice order = event-time order → watermark-safe replay. */
@@ -193,17 +197,17 @@ object StreamReplay {
         Temporal.sessionize(spark.read.parquet(evDir).filter(col("user_id") >= 0))))
       val csStream = sessionChecksum(spark.read.parquet(sessOut))
 
-      // stage 2: nearDupGate over the doc backlog
-      val docDir = c.cached("stream_docs", nDocs)(d => c.stage("gen_docs")(writeSlices(d, nDocs) {
+      // stage 2: nearDupGate over the doc backlog: 10 simulated hours,
+      // or DocStepMs per doc below 120 000 docs
+      val spanMs = math.min(10L * 3600 * 1000, DocStepMs * nDocs)
+      val docDir = c.cached("stream_docs", nDocs, spanMs)(d => c.stage("gen_docs")(writeSlices(d, nDocs) {
         (lo, hi) => spark.range(lo, hi)
           .selectExpr("id",
-            // ~3% of docs duplicate a doc ≤ 1000 ids earlier (≈ 11
-            // simulated seconds — inside the 10-min watermark)
+            // ~3% of docs duplicate a doc ≤ 1000 ids earlier
             s"CASE WHEN pmod(xxhash64(id, 5), 100) < 3 AND id >= 1000 " +
               s"THEN id - 1 - pmod(xxhash64(id, 6), 1000) ELSE id END AS tseed")
           .selectExpr("id AS doc_id",
-            // 10 simulated hours
-            s"timestamp_millis($EvT0 + CAST(id * ${10.0 * 3600 * 1000} / $nDocs AS BIGINT)) AS ts",
+            s"timestamp_millis($EvT0 + CAST(id * ${spanMs.toDouble} / $nDocs AS BIGINT)) AS ts",
             // 15..60 words from a 17,576-word ALPHABETIC vocab (3
             // base-26 letters — the index tokenizer keeps only [a-z']+
             // runs, so digit-suffixed words would all collapse to one

@@ -93,8 +93,7 @@ object WordCount1G {
 
     // timed: the reference's O1→O13 dataflow
     val files = c.stage("extract") {
-      val cached = TextIngest.fetchCached(s"file://$zipDir/corpus.zip",
-        s"$work/cache/${Paths.get(zipDir).getFileName}")
+      val cached = TextIngest.fetchCached(s"file://$zipDir/corpus.zip", s"$work/cache")
       // files[0]: the reference processes the first archive member only
       TextIngest.extractZipRaw(Files.newInputStream(cached), s"$work/extract_raw")
     }

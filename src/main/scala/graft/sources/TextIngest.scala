@@ -37,13 +37,17 @@ object TextIngest {
     * reference's fetch step (coordinator/coordinator.py:17-55: download
     * once, reuse the cached copy). Uses java.net.http so file:// and
     * http(s):// both work; unit-tested against file:// (this build
-    * environment is zero-egress, so no live-HTTP test is possible). */
+    * environment is zero-egress, so no live-HTTP test is possible). The
+    * copy is keyed by the whole URL (`destDir/<url hash>/<file name>`):
+    * two URLs with the same file name never serve each other's bytes. */
   def fetchCached(url: String, destDir: String): Path = {
-    Files.createDirectories(Paths.get(destDir))
+    val key = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(url.getBytes(StandardCharsets.UTF_8)).take(8).map("%02x".format(_)).mkString
+    val dir = Files.createDirectories(Paths.get(destDir, key))
     val name = Paths.get(new java.net.URI(url).getPath).getFileName.toString
-    val dest = Paths.get(destDir, name)
+    val dest = dir.resolve(name)
     if (!Files.exists(dest)) {
-      val tmp = Paths.get(destDir, name + ".part")
+      val tmp = dir.resolve(name + ".part")
       val in = new java.net.URI(url).toURL.openStream()
       try Files.copy(in, tmp, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       finally in.close()

@@ -2,7 +2,7 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.TimeoutException
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit, TimeoutException}
 
 import org.apache.spark.JobExecutionStatus
 
@@ -106,6 +106,35 @@ class SessionSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(m)
   }
 
+  test("metrics: a measured body counts its own jobs, not another thread's") {
+    val m = Metrics.install(spark)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val (idleIn, spinDone) = (new CountDownLatch(1), new CountDownLatch(1))
+      // the idle body is open from before the spinner starts until after it ends
+      val idle = pool.submit(() => m.measure {
+        idleIn.countDown()
+        spark.range(1).count()
+        spinDone.await()
+      }._2)
+      idleIn.await()
+      val spin = pool.submit(() => try m.measure {
+        spark.sparkContext.parallelize(1 to 4, 4).map { i =>
+          var x = i.toLong
+          var j = 0
+          while (j < 200000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; j += 1 }
+          x
+        }.filter(_ != 0L).count()
+      }._2 finally spinDone.countDown())
+      val (s, i) = (spin.get(300, TimeUnit.SECONDS), idle.get(300, TimeUnit.SECONDS))
+      assert(s.cpuNs > 200000000L, s)
+      assert(i.cpuNs < s.cpuNs / 10, s"idle $i, spinner $s")
+    } finally {
+      pool.shutdown()
+      spark.sparkContext.removeSparkListener(m)
+    }
+  }
+
   test("GRAFT_ONLY selector: unknown names rejected by name, blank means all") {
     val all = SparkEntry.queries
     assert(QueryRunner.only(all, None) == Right(all))
@@ -137,10 +166,18 @@ class SessionSpec extends SparkSpec {
     // env knobs retired as constants (their evidence: BENCH_r03_aqe.json,
     // BENCH_r04_aqe.json, BENCH_r05_noaqe.json, BENCH_r07_noaqe.json) and
     // before/after knobs whose "before" is frozen in ANN_1M.md (OPQ),
-    // DEDUP_1GB.md (MD5_BANDS) and BASELINE_1GB.md (SERIAL_DECODE)
-    Seq("AQE", "WARM_PASS", "KILL_STALE", "OPQ", "MD5_BANDS", "SERIAL_DECODE")
-        .map("GRAFT_" + _).foreach { knob =>
+    // DEDUP_1GB.md (MD5_BANDS) and BASELINE_1GB.md (SERIAL_DECODE); the
+    // bench reads one baseline file (PREV_BENCH) at one log level (LOG)
+    Seq("AQE", "WARM_PASS", "KILL_STALE", "OPQ", "MD5_BANDS", "SERIAL_DECODE", "PREV_BENCH",
+        "LOG").map("GRAFT_" + _).foreach { knob =>
       assert(offenders(knob, "").isEmpty, knob)
+    }
+  }
+
+  test("tooling guard: one result sink, one JSON writer") {
+    assert(offenders("format(\"noop\")", "graft/QueryRunner.scala").isEmpty)
+    Seq("{\"metric\"", "{\\\"metric\\\"").foreach { literal =>
+      assert(offenders(literal, "graft/Json.scala").isEmpty, literal)
     }
   }
 

@@ -23,6 +23,18 @@ class SourcesSpec extends SparkSpec {
     assert(p1 == p2 && Files.readString(p2) == "hello ingest")
   }
 
+  test("fetchCached keys its copy by the whole URL, not the file name") {
+    val dirs = Seq("first", "second").map { body =>
+      val d = Files.createTempDirectory("graft-src")
+      Files.writeString(d.resolve("corpus.zip"), body)
+      d
+    }
+    val dest = Files.createTempDirectory("graft-fetch").toString
+    val Seq(p1, p2) = dirs.map(d => TextIngest.fetchCached(d.resolve("corpus.zip").toUri.toString, dest))
+    assert(p1 != p2)
+    assert(Files.readString(p1) == "first" && Files.readString(p2) == "second")
+  }
+
   test("gzip-compressed text reads transparently with line splits intact") {
     // 100 TB corpora ship compressed; Spark's text source decompresses
     // .gz per file (not splittable — one task per file, the spread()

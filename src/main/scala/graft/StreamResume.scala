@@ -3,7 +3,6 @@ package graft
 import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.Materialize
 import graft.streaming.EventsStream
 
@@ -14,11 +13,13 @@ import graft.streaming.EventsStream
   * run, at the same ~1 GB event volume as the `stream` scenario of
   * [[Flagship]].
   *
-  * Protocol (per run, the `stream` scenario's shape): a 16M-event parquet
-  * backlog replayed through `sessionizeStateful` as real micro-batches
-  * (file source + maxFilesPerTrigger + Trigger.AvailableNow), then one
-  * far-future sentinel event + a second AvailableNow run on the same
-  * checkpoint to flush the open tail sessions.
+  * Protocol (per run, the `stream` scenario's own calls): a 16M-event
+  * parquet backlog replayed through `sessionizeStateful` as real
+  * micro-batches ([[flagship.StreamReplay.sessionReplay]]: file source
+  * + maxFilesPerTrigger + Trigger.AvailableNow), then
+  * [[flagship.StreamReplay.sentinelFlush]]: one far-future sentinel
+  * event + a second run on the same checkpoint to flush the open tail
+  * sessions.
   *
   *  - Run A (control): the protocol uninterrupted.
   *  - Run B (crash): the main replay runs in a FORKED CHILD JVM; the
@@ -44,35 +45,14 @@ import graft.streaming.EventsStream
   *        (--child <evDir> <out> <ckpt> is the forked entry point)
   */
 object StreamResume {
-  // generator formula, sentinel, schema, slice writer and parity
-  // projection are the stream scenario's OWN members (not copies) — the
-  // two results stay comparable by construction
-  import flagship.StreamReplay.{EvSchema, eventSlice, flushSentinel, linkDir, sessionChecksum,
-    wipe, writeSlices}
+  // generator formula, slice writer, session replay, sentinel flush and
+  // parity projection are the stream scenario's OWN members (not
+  // copies) — the two results stay comparable by construction
+  import flagship.StreamReplay.{eventSlice, linkDir, sentinelFlush, sessionChecksum,
+    sessionReplay, writeSlices}
 
   private def session(app: String): SparkSession =
     Session.build(app, Session.streaming: _*)
-
-  /** One main-replay leg: the sessionize query over the backlog as
-    * ~32 micro-batches, AvailableNow, parquet sink + checkpoint. */
-  private def runMain(spark: SparkSession, evDir: String, out: String,
-      ckpt: String): Unit = {
-    val q = EventsStream.sessionizeStateful(spark,
-        spark.readStream.schema(EvSchema)
-          .option("maxFilesPerTrigger", 8).parquet(evDir))
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
-  /** Sentinel + flush: one far-future event, second AvailableNow run on
-    * the same checkpoint fires every open session's timeout. */
-  private def flush(spark: SparkSession, evDir: String, out: String,
-      ckpt: String): Unit = {
-    flushSentinel(spark).coalesce(1).write.mode("append").parquet(evDir)
-    runMain(spark, evDir, out, ckpt)
-  }
 
   private def commitCount(ckpt: String): Int = {
     val d = new java.io.File(s"$ckpt/commits")
@@ -84,7 +64,7 @@ object StreamResume {
     if (args.headOption.contains("--child")) {
       // forked main-replay leg — the parent SIGKILLs this JVM mid-run
       val spark = session("graft-stream-resume-child")
-      runMain(spark, args(1), args(2), args(3))
+      sessionReplay(spark, args(1), args(2), args(3))
       spark.stop()
       return
     }
@@ -103,16 +83,16 @@ object StreamResume {
 
     // ---- run A: uninterrupted control --------------------------------
     val (evA, outA, ckptA) = (s"$work/ev_a", s"$work/out_a", s"$work/ckpt_a")
-    linkDir(base, evA); wipe(outA, ckptA)
+    linkDir(base, evA); EventsStream.wipe(outA, ckptA)
     val tA = System.nanoTime()
-    runMain(spark, evA, outA, ckptA)
-    flush(spark, evA, outA, ckptA)
+    sessionReplay(spark, evA, outA, ckptA)
+    sentinelFlush(spark, evA, outA, ckptA)
     val secA = (System.nanoTime() - tA) / 1e9
     val batchesA = commitCount(ckptA)
 
     // ---- run B: child JVM SIGKILLed mid-replay, then resumed ---------
     val (evB, outB, ckptB) = (s"$work/ev_b", s"$work/out_b", s"$work/ckpt_b")
-    linkDir(base, evB); wipe(outB, ckptB)
+    linkDir(base, evB); EventsStream.wipe(outB, ckptB)
     // the child gets the SAME JDK17 --add-opens set every other forked
     // JVM in this repo gets — one maintained list (review finding: an
     // inline copy would drift when a Spark upgrade adds a module)
@@ -160,8 +140,8 @@ object StreamResume {
 
     // resume from the killed checkpoint in THIS JVM, then flush
     val tR = System.nanoTime()
-    runMain(spark, evB, outB, ckptB)
-    flush(spark, evB, outB, ckptB)
+    sessionReplay(spark, evB, outB, ckptB)
+    sentinelFlush(spark, evB, outB, ckptB)
     val secBResume = (System.nanoTime() - tR) / 1e9
     val batchesB = commitCount(ckptB)
 

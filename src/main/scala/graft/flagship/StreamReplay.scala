@@ -1,11 +1,10 @@
 package graft.flagship
 
 import scala.collection.immutable.ListMap
-import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Flagship.Ctx
 import graft.operators.{Dedup, Temporal}
@@ -44,9 +43,10 @@ import graft.streaming.EventsStream
   * signatures inside the delay window — both O(rate × window), never
   * O(history), which the max numRowsTotal shows. STREAM_1GB.md.
   *
-  * The event formula, sentinel, slice writer and parity projection are
-  * shared with [[graft.StreamResume]] (the crash-resume twin), so the
-  * two results stay comparable by construction.
+  * The event formula, slice writer, session replay, sentinel flush and
+  * parity projection are shared with [[graft.StreamResume]] (the
+  * crash-resume twin), so the two results stay comparable by
+  * construction.
   */
 object StreamReplay {
   val Slices = 64
@@ -75,14 +75,6 @@ object StreamReplay {
         .write.mode(if (i == 0) "overwrite" else "append").parquet(dir)
   }
 
-  /** One far-future event (user −1): appended after the backlog so a
-    * second AvailableNow run fires every open session's timeout. */
-  def flushSentinel(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq((-1L, new java.sql.Timestamp(EvT0 + EvSpanMs + 2L * 86400000), 0.0))
-      .toDF("user_id", "ts", "value")
-  }
-
   /** Order-independent table checksum: (row count, exact DECIMAL sum
     * of xxhash64 over the key columns — a LONG sum would overflow
     * under ANSI arithmetic). */
@@ -104,17 +96,12 @@ object StreamReplay {
     checksum(keyed, keyed.columns.toIndexedSeq)
   }
 
-  def wipe(paths: String*): Unit = paths.foreach { p =>
-    val f = new java.io.File(p)
-    if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
-  }
-
   /** Hardlink view of a committed backlog, so a run appends its own
     * sentinel without touching the shared source. (listFiles, not
     * Files.list — the stream variant leaks a directory fd unless
     * closed.) */
   def linkDir(src: String, dst: String): Unit = {
-    wipe(dst)
+    EventsStream.wipe(dst)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
     Option(new java.io.File(src).listFiles()).getOrElse(Array.empty)
       .filter(_.isFile).foreach { f =>
@@ -122,122 +109,95 @@ object StreamReplay {
       }
   }
 
-  final case class BatchStat(batchId: Long, rows: Long, triggerMs: Long, stateRows: Long)
+  /** [[EventsStream.sessionizeStateful]] over the backlog at `evDir`,
+    * replayed to its end at 8 files per trigger (~32 micro-batches over
+    * the 64-slice backlog). */
+  def sessionReplay(spark: SparkSession, evDir: String, out: String, ckpt: String): StreamingQuery =
+    EventsStream.replay(EventsStream.sessionizeStateful(spark, spark.readStream
+      .option("maxFilesPerTrigger", 8).schema(EvSchema).parquet(evDir)), out, ckpt)
 
-  private final class Recorder extends StreamingQueryListener {
-    val stats = ArrayBuffer[BatchStat]()
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      val p = e.progress
-      val state = if (p.stateOperators.nonEmpty) p.stateOperators.map(_.numRowsTotal).max else 0L
-      stats.synchronized {
-        stats += BatchStat(p.batchId, p.numInputRows,
-          p.durationMs.getOrDefault("triggerExecution", 0L), state)
-      }
-    }
-
-    /** The stats of query `q`, which has terminated: listener delivery is
-      * async with NO flush guarantee, and a fixed sleep can miss trailing
-      * QueryProgress events on a loaded host, so poll until the final
-      * batchId has been seen (bounded, for the no-batch edge). */
-    def statsOf(q: StreamingQuery): Seq[BatchStat] = {
-      val last = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
-      val deadline = System.nanoTime() + 10L * 1000000000L
-      while (last >= 0 && System.nanoTime() < deadline &&
-          stats.synchronized(!stats.exists(_.batchId >= last)))
-        Thread.sleep(50)
-      stats.synchronized { val s = stats.toSeq; stats.clear(); s }
-    }
+  /** Flush the open tail: one far-future event (user −1) appended to the
+    * backlog, and a second [[sessionReplay]] on the same checkpoint fires
+    * every open session's timeout. */
+  def sentinelFlush(spark: SparkSession, evDir: String, out: String, ckpt: String): Unit = {
+    import spark.implicits._
+    Seq((-1L, new java.sql.Timestamp(EvT0 + EvSpanMs + 2L * 86400000), 0.0))
+      .toDF("user_id", "ts", "value").coalesce(1).write.mode("append").parquet(evDir)
+    sessionReplay(spark, evDir, out, ckpt)
   }
 
-  /** One AvailableNow run of `stream` into a parquet sink, to its end. */
-  private def replay(stream: DataFrame, out: String, ckpt: String): StreamingQuery = {
-    val q = stream.writeStream.outputMode("append").format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q
-  }
-
-  private def stats(ss: Seq[BatchStat], sec: Double, rows: Long) = {
-    val lat = ss.map(_.triggerMs).sorted
+  /** The record of one replay, read off the terminated query's own
+    * progress (see [[EventsStream.replay]]). */
+  private def stats(q: StreamingQuery, sec: Double, rows: Long) = {
+    val ps = q.recentProgress.toSeq
+    val ids = ps.map(_.batchId).distinct
+    require(ids == (0L until ids.size), s"progress misses batches of the run: $ids")
+    val lat = ps.map(_.durationMs.getOrDefault("triggerExecution", 0L).longValue).sorted
     ListMap("rows" -> rows, "sec" -> sec, "rows_per_sec" -> math.round(rows / sec),
-      "batches" -> ss.size, "batch_ms_p50" -> lat.lift(lat.size / 2).getOrElse(0L),
+      "batches" -> ps.size, "batch_ms_p50" -> lat.lift(lat.size / 2).getOrElse(0L),
       "batch_ms_max" -> lat.lastOption.getOrElse(0L),
-      "max_state_rows" -> ss.map(_.stateRows).maxOption.getOrElse(0L))
+      "max_state_rows" -> ps.flatMap(_.stateOperators.map(_.numRowsTotal)).maxOption.getOrElse(0L))
   }
 
   def run(c: Ctx): Seq[(String, Any)] = {
     val (spark, work, nEvents, nDocs) = (c.spark, c.str("work"), c.long("events"), c.long("docs"))
-    val recorder = new Recorder
-    spark.streams.addListener(recorder)
-    try {
-      // stage 1: sessionizeStateful over the event backlog. The run reads
-      // a hardlink view, which takes the flush sentinel; the committed
-      // backlog is never written to. Output and checkpoint dirs are
-      // wiped: a leftover checkpoint would make the main run replay only
-      // the sentinel.
-      val evDir = s"$work/events_run"
-      linkDir(c.cached("stream_events", nEvents)(d => c.stage("gen_events")(
-        writeSlices(d, nEvents)(eventSlice(spark, _, _, nEvents)))), evDir)
-      val (sessOut, sessCkpt) = (s"$work/sessions_out", s"$work/sessions_ckpt")
-      wipe(sessOut, sessCkpt)
-      // 8 files per trigger: ~32 micro-batches over the 64-slice backlog
-      def sessions(maxFiles: Boolean) = EventsStream.sessionizeStateful(spark,
-        (if (maxFiles) spark.readStream.option("maxFilesPerTrigger", 8) else spark.readStream)
-          .schema(EvSchema).parquet(evDir))
-      val sessStats = recorder.statsOf(c.stage("sessionize")(replay(sessions(true), sessOut, sessCkpt)))
-      // flush the open tail: one far-future sentinel event, second
-      // AvailableNow run on the same checkpoint fires every timeout
-      flushSentinel(spark).coalesce(1).write.mode("append").parquet(evDir)
-      recorder.statsOf(replay(sessions(false), sessOut, sessCkpt))
-      // parity vs the batch twin, at full scale, order-independent
-      val csBatch = c.stage("batch_twin")(sessionChecksum(
-        Temporal.sessionize(spark.read.parquet(evDir).filter(col("user_id") >= 0))))
-      val csStream = sessionChecksum(spark.read.parquet(sessOut))
+    // stage 1: sessionizeStateful over the event backlog. The run reads
+    // a hardlink view, which takes the flush sentinel; the committed
+    // backlog is never written to. Output and checkpoint dirs are
+    // wiped: a leftover checkpoint would make the main run replay only
+    // the sentinel.
+    val evDir = s"$work/events_run"
+    linkDir(c.cached("stream_events", nEvents)(d => c.stage("gen_events")(
+      writeSlices(d, nEvents)(eventSlice(spark, _, _, nEvents)))), evDir)
+    val (sessOut, sessCkpt) = (s"$work/sessions_out", s"$work/sessions_ckpt")
+    EventsStream.wipe(sessOut, sessCkpt)
+    val sessQuery = c.stage("sessionize")(sessionReplay(spark, evDir, sessOut, sessCkpt))
+    sentinelFlush(spark, evDir, sessOut, sessCkpt)
+    // parity vs the batch twin, at full scale, order-independent
+    val csBatch = c.stage("batch_twin")(sessionChecksum(
+      Temporal.sessionize(spark.read.parquet(evDir).filter(col("user_id") >= 0))))
+    val csStream = sessionChecksum(spark.read.parquet(sessOut))
 
-      // stage 2: nearDupGate over the doc backlog: 10 simulated hours,
-      // or DocStepMs per doc below 120 000 docs
-      val spanMs = math.min(10L * 3600 * 1000, DocStepMs * nDocs)
-      val docDir = c.cached("stream_docs", nDocs, spanMs)(d => c.stage("gen_docs")(writeSlices(d, nDocs) {
-        (lo, hi) => spark.range(lo, hi)
-          .selectExpr("id",
-            // ~3% of docs duplicate a doc ≤ 1000 ids earlier
-            s"CASE WHEN pmod(xxhash64(id, 5), 100) < 3 AND id >= 1000 " +
-              s"THEN id - 1 - pmod(xxhash64(id, 6), 1000) ELSE id END AS tseed")
-          .selectExpr("id AS doc_id",
-            s"timestamp_millis($EvT0 + CAST(id * ${spanMs.toDouble} / $nDocs AS BIGINT)) AS ts",
-            // 15..60 words from a 17,576-word ALPHABETIC vocab (3
-            // base-26 letters — the index tokenizer keeps only [a-z']+
-            // runs, so digit-suffixed words would all collapse to one
-            // token); sig collisions only among planted dups
-            """array_join(transform(
-              |  sequence(1, CAST(15 + pmod(xxhash64(tseed, 7), 46) AS INT)),
-              |  i -> concat(char(97 + pmod(xxhash64(tseed, i, 8), 26)),
-              |              char(97 + pmod(xxhash64(tseed, i, 9), 26)),
-              |              char(97 + pmod(xxhash64(tseed, i, 10), 26)))), ' ') AS text""".stripMargin)
-      }))
-      val (gateOut, gateCkpt) = (s"$work/gate_out", s"$work/gate_ckpt")
-      wipe(gateOut, gateCkpt)
-      val gateStats = recorder.statsOf(c.stage("near_dup_gate")(replay(EventsStream.nearDupGate(
-        spark.readStream.schema("doc_id LONG, ts TIMESTAMP, text STRING")
-          .option("maxFilesPerTrigger", 8).parquet(docDir)), gateOut, gateCkpt)))
-      val survivors = spark.read.parquet(gateOut)
-      val batchKept = Dedup.sigDedupBatch(spark.read.parquet(docDir))
-      // semantic parity: one survivor per signature — compare the
-      // signature SETS; keeper-id agreement is informational
-      val sigCols = (0 until 8).map(j => s"m$j")
-      val csGateStream = checksum(Dedup.withMinhashSig(survivors), sigCols)
-      val csGateBatch = checksum(Dedup.withMinhashSig(batchKept), sigCols)
+    // stage 2: nearDupGate over the doc backlog: 10 simulated hours,
+    // or DocStepMs per doc below 120 000 docs
+    val spanMs = math.min(10L * 3600 * 1000, DocStepMs * nDocs)
+    val docDir = c.cached("stream_docs", nDocs, spanMs)(d => c.stage("gen_docs")(writeSlices(d, nDocs) {
+      (lo, hi) => spark.range(lo, hi)
+        .selectExpr("id",
+          // ~3% of docs duplicate a doc ≤ 1000 ids earlier
+          s"CASE WHEN pmod(xxhash64(id, 5), 100) < 3 AND id >= 1000 " +
+            s"THEN id - 1 - pmod(xxhash64(id, 6), 1000) ELSE id END AS tseed")
+        .selectExpr("id AS doc_id",
+          s"timestamp_millis($EvT0 + CAST(id * ${spanMs.toDouble} / $nDocs AS BIGINT)) AS ts",
+          // 15..60 words from a 17,576-word ALPHABETIC vocab (3
+          // base-26 letters — the index tokenizer keeps only [a-z']+
+          // runs, so digit-suffixed words would all collapse to one
+          // token); sig collisions only among planted dups
+          """array_join(transform(
+            |  sequence(1, CAST(15 + pmod(xxhash64(tseed, 7), 46) AS INT)),
+            |  i -> concat(char(97 + pmod(xxhash64(tseed, i, 8), 26)),
+            |              char(97 + pmod(xxhash64(tseed, i, 9), 26)),
+            |              char(97 + pmod(xxhash64(tseed, i, 10), 26)))), ' ') AS text""".stripMargin)
+    }))
+    val (gateOut, gateCkpt) = (s"$work/gate_out", s"$work/gate_ckpt")
+    EventsStream.wipe(gateOut, gateCkpt)
+    val gateQuery = c.stage("near_dup_gate")(EventsStream.replay(EventsStream.nearDupGate(
+      spark.readStream.schema("doc_id LONG, ts TIMESTAMP, text STRING")
+        .option("maxFilesPerTrigger", 8).parquet(docDir)), gateOut, gateCkpt))
+    val survivors = spark.read.parquet(gateOut)
+    val batchKept = Dedup.sigDedupBatch(spark.read.parquet(docDir))
+    // semantic parity: one survivor per signature — compare the
+    // signature SETS; keeper-id agreement is informational
+    val sigCols = (0 until 8).map(j => s"m$j")
+    val csGateStream = checksum(Dedup.withMinhashSig(survivors), sigCols)
+    val csGateBatch = checksum(Dedup.withMinhashSig(batchKept), sigCols)
 
-      Seq("sessionize" -> stats(sessStats, c.wall("sessionize"), nEvents),
-        "sessionize_out_rows" -> csStream._1, "sessionize_parity" -> (csStream == csBatch),
-        "batch_twin_sec" -> c.wall("batch_twin"),
-        "near_dup_gate" -> stats(gateStats, c.wall("near_dup_gate"), nDocs),
-        "gate_survivors" -> csGateStream._1, "gate_parity" -> (csGateStream == csGateBatch),
-        "gate_keeper_match" -> survivors.select("doc_id")
-          .join(batchKept.select("doc_id"), "doc_id", "left_semi").count())
-    } finally spark.streams.removeListener(recorder)
+    Seq("sessionize" -> stats(sessQuery, c.wall("sessionize"), nEvents),
+      "sessionize_out_rows" -> csStream._1, "sessionize_parity" -> (csStream == csBatch),
+      "batch_twin_sec" -> c.wall("batch_twin"),
+      "near_dup_gate" -> stats(gateQuery, c.wall("near_dup_gate"), nDocs),
+      "gate_survivors" -> csGateStream._1, "gate_parity" -> (csGateStream == csGateBatch),
+      "gate_keeper_match" -> survivors.select("doc_id")
+        .join(batchKept.select("doc_id"), "doc_id", "left_semi").count())
   }
 }

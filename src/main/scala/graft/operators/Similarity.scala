@@ -312,13 +312,20 @@ object Similarity {
         expr("2097151 - (p % 2097152)").as("cell"),
         expr("CAST(p DIV 2097152 - 1000000 AS DOUBLE) / 1000000.0").as("ccos"))
 
-  /** Content key of an index over `emb`: tag, canonical-plan hash,
-    * parameters and the source-file fingerprint — the fingerprint is
-    * what stops a REGENERATED corpus under the same path from being
-    * served a stale durable index. */
-  private def indexKey(tag: String, emb: DataFrame, params: Any*): String =
-    s"$tag:${emb.queryExecution.logical.semanticHash()}${params.map(p => s":$p").mkString}" +
+  /** Content key of an index over `emb`: tag, a digest of the
+    * canonical plan's text, parameters and the source-file fingerprint
+    * — the fingerprint is what stops a REGENERATED corpus under the
+    * same path from being served a stale durable index. The digest is
+    * a SHA-256 of text, so two JVMs key the same frame alike (the
+    * plan's `semanticHash` mixes in identity hash codes and did not). */
+  private[graft] def indexKey(tag: String, emb: DataFrame, params: Any*): String = {
+    val plan = emb.queryExecution.analyzed.canonicalized
+      .treeString(verbose = true, maxFields = Int.MaxValue)
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(plan.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    s"$tag:$digest${params.map(p => s":$p").mkString}" +
       s"@${Materialize.sourceFingerprint(emb.sparkSession, emb.inputFiles.toSeq)}"
+  }
 
   private def ivfKey(tag: String, emb: DataFrame, minCentroids: Int,
       corpusCount: Option[Long]): String =

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, GroupState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 
@@ -188,8 +189,7 @@ object EventsStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(stateDir).getFileSystem(hconf)
+        val fs = fsOf(spark, stateDir)
         val marker = new org.apache.hadoop.fs.Path(s"$stateDir/_merged_$batchId")
         if (!fs.exists(marker)) {
           val delta = batch
@@ -197,17 +197,7 @@ object EventsStream {
             .agg(count(lit(1)).as("d_n"),
               sum(col("value").cast(DecimalType(18, 2))).as("d_total"))
           val zero = lit(0).cast(DecimalType(18, 2))
-          val committed = committedVersions(fs, stateDir)
-          val cur = committed.lastOption match {
-            case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-            case None => spark.createDataFrame(
-              spark.sparkContext.emptyRDD[Row],
-              StructType(Seq(
-                StructField("user_id", LongType),
-                StructField("n_events", LongType),
-                StructField("total_value", DecimalType(18, 2)))))
-          }
-          val merged = cur.join(delta, Seq("user_id"), "full_outer")
+          val merged = mergeState(spark, stateDir).join(delta, Seq("user_id"), "full_outer")
             .select(col("user_id"),
               (coalesce(col("n_events"), lit(0L)) + coalesce(col("d_n"), lit(0L)))
                 .as("n_events"),
@@ -233,31 +223,23 @@ object EventsStream {
         }
       }
 
-  /** Marker ids present in `stateDir`, ascending — the commit log of
-    * [[toMergeSink]]. */
-  private def committedVersions(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String): Seq[Long] = {
-    val base = new org.apache.hadoop.fs.Path(stateDir)
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).map(_.getPath.getName)
-      .filter(_.startsWith("_merged_"))
-      .map(_.stripPrefix("_merged_").toLong).toSeq.sorted
-  }
+  private def fsOf(spark: SparkSession, dir: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Read [[toMergeSink]]'s current state: the newest COMMITTED version
-    * (uncommitted orphans from a crashed batch are invisible). Empty-state
-    * schema if no batch has committed yet. */
+  /** Read [[toMergeSink]]'s current state: the newest COMMITTED version,
+    * the highest `_merged_<id>` marker (uncommitted orphans from a
+    * crashed batch are invisible). Empty-state schema if no batch has
+    * committed yet. */
   def mergeState(spark: SparkSession, stateDir: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(stateDir).getFileSystem(hconf)
-    committedVersions(fs, stateDir).lastOption match {
+    val fs = fsOf(spark, stateDir)
+    val base = new org.apache.hadoop.fs.Path(stateDir)
+    val committed = if (!fs.exists(base)) Seq.empty[Long]
+      else fs.listStatus(base).map(_.getPath.getName)
+        .filter(_.startsWith("_merged_")).map(_.stripPrefix("_merged_").toLong).toSeq
+    committed.maxOption match {
       case Some(v) => spark.read.parquet(s"$stateDir/v$v")
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(
-          StructField("user_id", LongType),
-          StructField("n_events", LongType),
-          StructField("total_value", DecimalType(18, 2)))))
+      case None => spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType.fromDDL("user_id LONG, n_events LONG, total_value DECIMAL(18, 2)"))
     }
   }
 
@@ -481,37 +463,47 @@ object EventsStream {
 
   private val streamRunSeq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Work dirs created by [[sessionizeStreamedQuery]], deleted on JVM
-    * exit (the returned DataFrame reads the sink lazily, so in-call
-    * cleanup would race the consumer; a shutdown hook bounds the leak
-    * to one process lifetime — review finding). */
+  /** Delete each path and everything under it, if it exists. */
+  def wipe(paths: String*): Unit = paths.foreach { p =>
+    val f = new java.io.File(p)
+    if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
+  }
+
+  /** Work dirs created by the streamed gates, deleted on JVM exit (the
+    * returned DataFrame reads the sink lazily, so in-call cleanup would
+    * race the consumer; a shutdown hook bounds the leak to one process
+    * lifetime — review finding). */
   private val streamWorkDirs =
     java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
   private lazy val streamCleanupHook: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      streamWorkDirs.forEach { d =>
-        try {
-          import java.nio.file.{Files, Paths, Path}
-          import java.util.Comparator
-          val p = Paths.get(d)
-          if (Files.exists(p))
-            Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-              .forEach(f => Files.deleteIfExists(f))
-        } catch { case _: Throwable => () }
-      }))
+      streamWorkDirs.forEach(d => try wipe(d) catch { case _: Throwable => () })))
+
+  /** Run `stream` to the end of its available input (Trigger.AvailableNow)
+    * into a parquet sink at `path` with its checkpoint at `ckpt`, and
+    * return the terminated query. Its `recentProgress` then holds every
+    * batch of the run: each progress is recorded before its trigger
+    * finishes (the session keeps the last 100). */
+  def replay(stream: DataFrame, path: String, ckpt: String): StreamingQuery = {
+    val q = stream.writeStream.outputMode("append").format("parquet")
+      .option("path", path).option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
 
   /** Shared scaffold of the streamed registry gates — the hard-won
-    * pieces live ONCE here (review finding: the two gates had copied
+    * pieces live ONCE here (review finding: the gates had copied
     * them): a per-run work dir under GRAFT_STREAM_WORK_DIR (defaults to
     * the driver-local tmpdir; on a MULTI-NODE cluster this MUST be a
     * shared filesystem — source, checkpoint, and sink are read by
     * executors AND the driver's read-back; driver-local paths only work
     * when executors share the host, the local/local-cluster topologies
     * this repo tests), shutdown-hook cleanup registration, and the
-    * single-file backlog write (the whole corpus lands in micro-batch 0
-    * where the watermark is still unset, so no parquet row order can
-    * late-drop events — multi-batch replay discipline is the 1 GB
-    * flagship's subject, not these gates'). */
+    * backlog write (the whole corpus lands in micro-batch 0 where the
+    * watermark is still unset, so no parquet row order can late-drop
+    * events — multi-batch replay discipline is the 1 GB flagship's
+    * subject, not these gates'). */
   private final class StreamedGate(spark: SparkSession, prefix: String,
       backlog: DataFrame, inSchema: String,
       stream: DataFrame => DataFrame) {
@@ -525,19 +517,12 @@ object EventsStream {
     // left alone (they may be live).
     private val pidPrefix =
       s"graft_${prefix}_${ProcessHandle.current().pid()}_"
-    locally {
-      val old = Option(root.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith(pidPrefix))
-      old.foreach { f =>
-        try {
-          import java.nio.file.{Files, Path}
-          import java.util.Comparator
-          Files.walk(f.toPath).sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
-          streamWorkDirs.remove(f.getAbsolutePath)
-        } catch { case _: Throwable => () }
+    Option(root.toFile.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith(pidPrefix))
+      .foreach { f =>
+        try { wipe(f.getPath); streamWorkDirs.remove(f.getAbsolutePath) }
+        catch { case _: Throwable => () }
       }
-    }
     private val base = root.resolve(
       s"$pidPrefix${streamRunSeq.incrementAndGet()}").toString
     streamCleanupHook
@@ -558,7 +543,6 @@ object EventsStream {
       df.write.mode("append").parquet(inDir)
 
     def runOnce(): Unit = {
-      import org.apache.spark.sql.streaming.Trigger
       // State-store sizing (r14 optimization round, guide §2.2): the
       // state-partition count is PINNED into the checkpoint at first
       // batch, so it is a deliberate capacity decision, not an
@@ -566,50 +550,63 @@ object EventsStream {
       // provider instance plus one delta file + fsync PER BATCH.
       // Sized to the backlog (one partition per 32 MB of input — the
       // reference's chunk size), clamped to the session's shuffle
-      // partitions; GRAFT_STREAM_SHUFFLE overrides for deployments
-      // that size to stream rate instead. At sf0.1 the floor gives 4
-      // partitions instead of the session's 32 (the five gates' wall
-      // is checkpoint machinery, not compute — measurements in
-      // OPTIMIZATION_r14.md). Scale-adaptive by construction: a
-      // 100 TB backlog derives thousands of partitions.
+      // partitions. At sf0.1 the floor gives 4 partitions instead of
+      // the session's 32 (the five gates' wall is checkpoint
+      // machinery, not compute — measurements in OPTIMIZATION_r14.md;
+      // per-batch splits in OPTIMIZATION_r15.md). Scale-adaptive by
+      // construction: a 100 TB backlog derives thousands of partitions.
       val sessParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val parts = sys.env.get("GRAFT_STREAM_SHUFFLE")
-        .map(_.trim.toInt).filter(_ > 0).getOrElse {
-          val bytes =
-            Option(new java.io.File(inDir).listFiles()).getOrElse(Array.empty)
-              .filter(f => f.isFile && !f.getName.startsWith("_") &&
-                !f.getName.startsWith("."))
-              .map(_.length).sum
-          val per = 32L << 20
-          // parallelism floor min(4, session): a 1-partition stateful
-          // batch serializes addBatch (measured 1.48 s of the 2 s
-          // batch-0 trigger); 2–8 partitions measured equal within
-          // noise and ~1 s better than 1 across the five gates
-          math.max(math.min(4L, sessParts.toLong), math.min(sessParts.toLong,
-            (bytes + per - 1) / per)).toInt
-        }
+      val bytes = Option(new java.io.File(inDir).listFiles()).getOrElse(Array.empty)
+        .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        .map(_.length).sum
+      val per = 32L << 20
+      // parallelism floor min(4, session): a 1-partition stateful
+      // batch serializes addBatch (measured 1.48 s of the 2 s
+      // batch-0 trigger); 2–8 partitions measured equal within
+      // noise and ~1 s better than 1 across the five gates
+      val parts = math.max(math.min(4L, sessParts.toLong),
+        math.min(sessParts.toLong, (bytes + per - 1) / per))
       spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      try {
-        val q = stream(spark.readStream.schema(inSchema).parquet(inDir))
-          .writeStream.outputMode("append").format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        // dev-only attribution of the per-gate fixed floor (r15 round):
-        // per-batch durationMs split (addBatch / walCommit / stateStore
-        // commit / queryPlanning) — the evidence for what of the gate
-        // wall is real streaming machinery vs cuttable work
-        if (sys.env.contains("GRAFT_STREAM_PROFILE"))
-          q.recentProgress.foreach(p =>
-            System.err.println(s"[stream-profile] $prefix ${p.json}"))
-      } finally
-        spark.conf.set("spark.sql.shuffle.partitions", sessParts)
+      try replay(stream(spark.readStream.schema(inSchema).parquet(inDir)), outDir, ckpt)
+      finally spark.conf.set("spark.sql.shuffle.partitions", sessParts)
     }
 
     /** Explicit schema: a zero-row run leaves the sink with no part
       * files and a schemaless read would fail. */
     def sink(outSchema: String): DataFrame =
       spark.read.schema(outSchema).parquet(outDir)
+  }
+
+  private object StreamedGate {
+    /** The flush protocol of the timer gates (intervals, sessionize,
+      * tumbling), in one run: the backlog's max(ts) is observed on its
+      * own write (r15 optimization round — no second events scan), one
+      * `sentinel` row 2 days past it is appended, and batch 0 takes both
+      * (no maxFilesPerTrigger, watermark unset: no event can be
+      * late-dropped whatever the file row order). The post-batch-0
+      * watermark (sentinel − delay) passes every open state's end, so
+      * the engine's trailing no-data batch fires every event-time
+      * timeout (r14 optimization round: one query lifecycle, not two).
+      * `rollUp` turns the sink (read as `sinkSchema`) into the result;
+      * an empty backlog has no max(ts), so no run: the result is
+      * `rollUp` of an empty sink. */
+    def flushed(spark: SparkSession, prefix: String, backlog: DataFrame,
+        inSchema: String, stream: DataFrame => DataFrame, sinkSchema: String)(
+        sentinel: java.sql.Timestamp => Row)(rollUp: DataFrame => DataFrame): DataFrame = {
+      val obs = org.apache.spark.sql.Observation()
+      val gate = new StreamedGate(spark, prefix,
+        backlog.observe(obs, max(unix_millis(col("ts"))).as("max_ts")), inSchema, stream)
+      obs.get("max_ts") match {
+        case maxTs: Long =>
+          gate.append(spark.createDataFrame(
+            java.util.List.of(sentinel(new java.sql.Timestamp(maxTs + 2L * 86400000))),
+            StructType.fromDDL(inSchema)))
+          gate.runOnce()
+          rollUp(gate.sink(sinkSchema))
+        case _ => rollUp(spark.createDataFrame(
+          new java.util.ArrayList[Row](), StructType.fromDDL(sinkSchema)))
+      }
+    }
   }
 
   /** The [[sessionizeStreamedQuery]] pattern applied to
@@ -640,122 +637,62 @@ object EventsStream {
   }
 
   /** The third streamed registry gate: [[intervalsStream]] run as a
-    * REAL AvailableNow stream, its emitted closed intervals rolled up
-    * into the batch `activity_intervals` output shape and held to the
-    * SAME DuckDB oracle. Open intervals at backlog end need the flush
-    * protocol (a far-future sentinel in the backlog advances the
-    * watermark after batch 0 and the trailing no-data batch fires every
-    * event-time timeout — the sessionize_streamed single-run pattern);
-    * micros survive end-to-end because the state machine
+    * REAL AvailableNow stream under the [[StreamedGate.flushed]]
+    * protocol, its emitted closed intervals rolled up into the batch
+    * `activity_intervals` output shape and held to the SAME DuckDB
+    * oracle. Micros survive end-to-end because the state machine
     * carries longs, so the oracle is the batch operator's, unchanged. */
-  def intervalsStreamedQuery(spark: SparkSession, dir: String): DataFrame = {
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("user_id"), col("ts"), col("event_id"))
-    val outSchema = "user_id LONG, n_intervals LONG, covered_us LONG, " +
-      "max_interval_us LONG, n_events LONG"
-    import spark.implicits._
-    // Sentinel IN the backlog (r14 optimization round): batch 0 runs
-    // with the watermark still unset, so no event can be late-dropped
-    // regardless of file row order; the engine's trailing no-data
-    // batch — the same mechanism the former second run relied on to
-    // fire timers after its sentinel batch — fires every event-time
-    // timeout once the post-batch-0 watermark (sentinel − delay)
-    // passes each open interval's end. ONE streaming query startup +
-    // checkpoint lifecycle instead of two; identical sink rows.
-    // maxTs folded INTO the backlog write (r15 optimization round,
-    // guide §1.2 "don't compute things twice"): the former
-    // ev.agg(max).head() pre-pass was a second full events scan per
-    // gate; Dataset.observe rides the write job, and the sentinel
-    // lands as one appended file — batch 0 still takes EVERY listed
-    // file (no maxFilesPerTrigger, watermark unset), so appended-
-    // sentinel ≡ unioned-sentinel.
-    val obs = org.apache.spark.sql.Observation()
-    val gate = new StreamedGate(spark, "iv_stream",
-      ev.observe(obs, max(unix_millis(col("ts"))).as("max_ts")),
-      "user_id LONG, ts TIMESTAMP, event_id LONG",
-      intervalsStream(spark, _))
-    val maxTsAny = obs.get("max_ts")
-    if (maxTsAny == null)
-      // empty backlog: nothing to roll up and no sentinel ts to derive
-      return spark.createDataFrame(
-        new java.util.ArrayList[Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(outSchema))
-    val maxTs = maxTsAny.asInstanceOf[Long]
-    gate.append(Seq((-1L, new java.sql.Timestamp(maxTs + 2L * 86400000),
-      -1L)).toDF("user_id", "ts", "event_id"))
-    gate.runOnce()
-    gate.sink("user_id LONG, iv_s_us LONG, iv_e_us LONG, n_ev LONG")
-      .filter(col("user_id") >= 0)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_intervals"),
-        sum(col("iv_e_us") - col("iv_s_us")).as("covered_us"),
-        max(col("iv_e_us") - col("iv_s_us")).as("max_interval_us"),
-        sum(col("n_ev")).as("n_events"))
-      .orderBy("user_id")
-  }
+  def intervalsStreamedQuery(spark: SparkSession, dir: String): DataFrame =
+    StreamedGate.flushed(spark, "iv_stream",
+      graft.Tables.events(spark, dir).select(col("user_id"), col("ts"), col("event_id")),
+      "user_id LONG, ts TIMESTAMP, event_id LONG", intervalsStream(spark, _),
+      "user_id LONG, iv_s_us LONG, iv_e_us LONG, n_ev LONG")(Row(-1L, _, -1L)) {
+      _.filter(col("user_id") >= 0)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n_intervals"),
+          sum(col("iv_e_us") - col("iv_s_us")).as("covered_us"),
+          max(col("iv_e_us") - col("iv_s_us")).as("max_interval_us"),
+          sum(col("n_ev")).as("n_events"))
+        .orderBy("user_id")
+    }
 
   /** STREAMING EXECUTION UNDER THE BATCH ORACLE — the first registry
     * entry whose Spark side actually runs Structured Streaming
     * end-to-end: the corpus events replayed through
     * [[sessionizeStateful]] under Trigger.AvailableNow (real checkpoint,
-    * real state store, real parquet sink), a far-future sentinel in the
-    * backlog whose post-batch-0 watermark advance makes the trailing
-    * no-data batch fire every open session's event-time timeout (the
-    * `stream` scenario flush protocol, single-run form since the r14
-    * optimization round), and the sink read back into the
-    * batch `sessionize` output shape. The DuckDB oracle is the BATCH
-    * gap-sessionization — the driver hash gate pins streaming ≡ batch
-    * semantics, the parity the 1 GB flagship asserts, as a per-round
-    * oracle check. session_id is reconstructed as the per-user
-    * session_start rank; sum_value is emitted quantized to integer
-    * thousandths (state accumulates in arrival order, the oracle in
-    * scan order — the values are 2-decimal, so the milli-quantization
+    * real state store, real parquet sink) and the
+    * [[StreamedGate.flushed]] protocol (the `stream` scenario's sentinel
+    * flush, single-run form since the r14 optimization round), and the
+    * sink read back into the batch `sessionize` output shape. The DuckDB
+    * oracle is the BATCH gap-sessionization — the driver hash gate pins
+    * streaming ≡ batch semantics, the parity the 1 GB flagship asserts,
+    * as a per-round oracle check. session_id is reconstructed as the
+    * per-user session_start rank; sum_value is emitted quantized to
+    * integer thousandths (state accumulates in arrival order, the oracle
+    * in scan order — the values are 2-decimal, so the milli-quantization
     * is exact for both). */
   def sessionizeStreamedQuery(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("user_id"), col("ts"), col("value"))
-    val outSchema = "user_id LONG, session_id LONG, n_events LONG, " +
-      "session_start_ms LONG, session_end_ms LONG, sum_value_milli LONG, " +
-      "duration_ms LONG"
-    import spark.implicits._
-    // sentinel folded into batch 0, maxTs folded into the backlog write
-    // via Dataset.observe — see intervalsStreamedQuery: the trailing
-    // no-data batch fires the timers the second run used to; one
-    // streaming query lifecycle AND one events scan instead of two each
-    val obs = org.apache.spark.sql.Observation()
-    val gate = new StreamedGate(spark, "sess_stream",
-      ev.observe(obs, max(unix_millis(col("ts"))).as("max_ts")),
-      "user_id LONG, ts TIMESTAMP, value DOUBLE",
-      sessionizeStateful(spark, _))
-    val maxTsAny = obs.get("max_ts")
-    // empty backlog: nothing to sessionize and no sentinel timestamp to
-    // derive — return the empty result directly (review finding: the
-    // observed max is NULL on an empty table)
-    if (maxTsAny == null)
-      return spark.createDataFrame(
-        new java.util.ArrayList[Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(outSchema))
-    val maxTs = maxTsAny.asInstanceOf[Long]
-    gate.append(Seq((-1L, new java.sql.Timestamp(maxTs + 2L * 86400000),
-      0.0)).toDF("user_id", "ts", "value"))
-    gate.runOnce()
     // the state machine floors event times to epoch millis (SessionRow
     // carries java.sql.Timestamp ms) while the corpus has microsecond
     // timestamps — so the output exposes the ms values it actually
     // computed with, and the oracle floors identically via epoch_ms()
     val w = Window.partitionBy(col("user_id")).orderBy(col("session_start"))
-    gate.sink("user_id LONG, session_start TIMESTAMP, " +
-        "session_end TIMESTAMP, n_events LONG, sum_value DOUBLE")
-      .filter(col("user_id") >= 0)
-      .withColumn("session_id", row_number().over(w).cast("long"))
-      .select(col("user_id"), col("session_id"), col("n_events"),
-        unix_millis(col("session_start")).as("session_start_ms"),
-        unix_millis(col("session_end")).as("session_end_ms"),
-        round(col("sum_value") * 1000).cast("long").as("sum_value_milli"),
-        (unix_millis(col("session_end")) - unix_millis(col("session_start")))
-          .as("duration_ms"))
-      .orderBy("user_id", "session_id")
+    StreamedGate.flushed(spark, "sess_stream",
+      graft.Tables.events(spark, dir).select(col("user_id"), col("ts"), col("value")),
+      "user_id LONG, ts TIMESTAMP, value DOUBLE", sessionizeStateful(spark, _),
+      "user_id LONG, session_start TIMESTAMP, session_end TIMESTAMP, n_events LONG, " +
+        "sum_value DOUBLE")(Row(-1L, _, 0.0)) {
+      _.filter(col("user_id") >= 0)
+        .withColumn("session_id", row_number().over(w).cast("long"))
+        .select(col("user_id"), col("session_id"), col("n_events"),
+          unix_millis(col("session_start")).as("session_start_ms"),
+          unix_millis(col("session_end")).as("session_end_ms"),
+          round(col("sum_value") * 1000).cast("long").as("sum_value_milli"),
+          (unix_millis(col("session_end")) - unix_millis(col("session_start")))
+            .as("duration_ms"))
+        .orderBy("user_id", "session_id")
+    }
   }
 
   /** The FIFTH streamed gate — the canonical streaming operation,
@@ -763,51 +700,30 @@ object EventsStream {
     * held to the batch `window_tumbling` oracle shape: hourly windows
     * × event_type with counts and exact milli-quantized value sums
     * accumulate in the state store and flush append-mode once the
-    * watermark passes each window's end (the sentinel advances it
-    * past the last real window; the sentinel's own still-open window
-    * never reaches the sink, and its type is filtered belt-and-
-    * braces). Values are 2-decimal, so per-event milli quantization
-    * makes the state-store accumulation order-independent — the same
-    * reason sessionize_streamed emits millis. */
-  def tumblingStreamedQuery(spark: SparkSession, dir: String): DataFrame = {
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("ts"), col("event_type"),
-        round(col("value") * 1000).cast("long").as("value_milli"))
-    val outSchema = "ws TIMESTAMP, event_type STRING, n_events LONG, " +
-      "sum_value_milli LONG"
-    import spark.implicits._
-    // sentinel folded into batch 0, maxTs folded into the backlog write
-    // via Dataset.observe — see intervalsStreamedQuery: the trailing
-    // no-data batch flushes every closed window once the post-batch-0
-    // watermark passes it; the sentinel's own still-open window never
-    // reaches the sink (and stays filtered besides)
-    val obs = org.apache.spark.sql.Observation()
-    val gate = new StreamedGate(spark, "tumb_stream",
-      ev.observe(obs, max(unix_millis(col("ts"))).as("max_ts")),
+    * watermark passes each window's end (the [[StreamedGate.flushed]]
+    * sentinel advances it past the last real window; the sentinel's own
+    * still-open window never reaches the sink, and its type is filtered
+    * belt-and-braces). Values are 2-decimal, so per-event milli
+    * quantization makes the state-store accumulation order-independent —
+    * the same reason sessionize_streamed emits millis. */
+  def tumblingStreamedQuery(spark: SparkSession, dir: String): DataFrame =
+    StreamedGate.flushed(spark, "tumb_stream",
+      graft.Tables.events(spark, dir).select(col("ts"), col("event_type"),
+        round(col("value") * 1000).cast("long").as("value_milli")),
       "ts TIMESTAMP, event_type STRING, value_milli LONG",
-      s => s.withWatermark("ts", "10 minutes")
+      _.withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value_milli")).as("sum_value_milli"))
         .select(col("w.start").as("ws"), col("event_type"),
-          col("n_events"), col("sum_value_milli")))
-    val maxTsAny = obs.get("max_ts")
-    if (maxTsAny == null)
-      return spark.createDataFrame(
-        new java.util.ArrayList[Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "ws_ms LONG, event_type STRING, n_events LONG, " +
-            "sum_value_milli LONG"))
-    val maxTs = maxTsAny.asInstanceOf[Long]
-    gate.append(Seq((new java.sql.Timestamp(maxTs + 2L * 86400000),
-      "zzz_sentinel", 0L)).toDF("ts", "event_type", "value_milli"))
-    gate.runOnce()
-    gate.sink(outSchema)
-      .filter(col("event_type") =!= "zzz_sentinel")
-      .select(unix_millis(col("ws")).as("ws_ms"), col("event_type"),
-        col("n_events"), col("sum_value_milli"))
-      .orderBy("ws_ms", "event_type")
-  }
+          col("n_events"), col("sum_value_milli")),
+      "ws TIMESTAMP, event_type STRING, n_events LONG, sum_value_milli LONG")(
+      Row(_, "zzz_sentinel", 0L)) {
+      _.filter(col("event_type") =!= "zzz_sentinel")
+        .select(unix_millis(col("ws")).as("ws_ms"), col("event_type"),
+          col("n_events"), col("sum_value_milli"))
+        .orderBy("ws_ms", "event_type")
+    }
 
   /** The FOURTH streamed gate — streaming DEDUPLICATION executed for
     * real: exact-duplicate events are PLANTED (every 7th event appears

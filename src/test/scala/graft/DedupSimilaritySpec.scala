@@ -879,6 +879,20 @@ class DedupSimilaritySpec extends SparkSpec {
         s"mean distortion implausible for JL: $row")
     }
   }
+
+  test("index key: one key per embedding frame, whichever session reads it") {
+    // the key names the durable index dir and the bench's build baseline,
+    // so it must not depend on anything a fresh JVM or session changes
+    def key(df: org.apache.spark.sql.DataFrame) = Similarity.indexKey("ivfCentroids", df, 8, -1L)
+    val a = key(Tables.embeddings(spark.newSession(), sf0001))
+    assert(a == key(Tables.embeddings(spark.newSession(), sf0001)))
+    assert(a.startsWith("ivfCentroids:") && a.contains(":8:-1@"), a)
+    val projected = key(emb.drop("label"))
+    val filtered = key(emb.filter($"vec_id" % 2 === 0))
+    assert(Set(a, projected, filtered).size == 3, Seq(a, projected, filtered))
+    assert(Set(a, projected, filtered).map(_.split("@").last).size == 1,
+      "same files, same fingerprint")
+  }
 }
 
 /** Single-shot failure injector for the O16 dedup retry spec — a static

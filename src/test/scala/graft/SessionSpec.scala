@@ -167,11 +167,21 @@ class SessionSpec extends SparkSpec {
     // BENCH_r04_aqe.json, BENCH_r05_noaqe.json, BENCH_r07_noaqe.json) and
     // before/after knobs whose "before" is frozen in ANN_1M.md (OPQ),
     // DEDUP_1GB.md (MD5_BANDS) and BASELINE_1GB.md (SERIAL_DECODE); the
-    // bench reads one baseline file (PREV_BENCH) at one log level (LOG)
+    // bench reads one baseline file (PREV_BENCH) at one log level (LOG);
+    // the streamed gates size state partitions from the backlog alone
+    // (STREAM_SHUFFLE) and their per-batch splits are frozen in
+    // OPTIMIZATION_r15.md (STREAM_PROFILE)
     Seq("AQE", "WARM_PASS", "KILL_STALE", "OPQ", "MD5_BANDS", "SERIAL_DECODE", "PREV_BENCH",
-        "LOG").map("GRAFT_" + _).foreach { knob =>
+        "LOG", "STREAM_SHUFFLE", "STREAM_PROFILE").map("GRAFT_" + _).foreach { knob =>
       assert(offenders(knob, "").isEmpty, knob)
     }
+  }
+
+  test("tooling guard: one AvailableNow replay, stream progress read off the query") {
+    val trigger = scala.util.matching.Regex.quote("Trigger.AvailableNow()").r
+    val replays = sources.flatMap { case (n, s) => Seq.fill(trigger.findAllIn(s).length)(n) }
+    assert(replays == Seq("graft/streaming/EventsStream.scala"), replays)
+    assert(offenders("StreamingQueryListener", "").isEmpty)
   }
 
   test("tooling guard: one result sink, one JSON writer") {

@@ -815,4 +815,26 @@ class TemporalStreamingSpec extends SparkSpec {
     assert(streamed.nonEmpty && streamed == batch,
       s"stream/batch session tables differ: ${streamed.size} vs ${batch.size}")
   }
+
+  test("streamed gates on an empty events table: zero rows under the registry columns") {
+    // the sf0.001 events layout with no rows: the flush gates have no
+    // max(ts) to place a sentinel at, so they return the rolled-up
+    // empty sink without a run
+    val dir = Files.createTempDirectory("graft-empty-events").toString
+    spark.read.parquet(s"$sf0001/events.parquet").limit(0)
+      .write.parquet(s"$dir/events.parquet")
+    Seq(
+      EventsStream.transitionsStreamedQuery _ -> "from_type to_type n p",
+      EventsStream.intervalsStreamedQuery _ ->
+        "user_id n_intervals covered_us max_interval_us n_events",
+      EventsStream.sessionizeStreamedQuery _ -> ("user_id session_id n_events " +
+        "session_start_ms session_end_ms sum_value_milli duration_ms"),
+      EventsStream.tumblingStreamedQuery _ -> "ws_ms event_type n_events sum_value_milli",
+      EventsStream.dedupStreamedQuery _ -> "event_type n_events n_users sum_value_milli"
+    ).foreach { case (gate, cols) =>
+      val out = gate(spark, dir)
+      assert(out.columns.mkString(" ") == cols)
+      assert(out.collect().isEmpty, cols)
+    }
+  }
 }

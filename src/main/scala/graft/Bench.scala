@@ -202,11 +202,17 @@ object Bench {
     val regressions = flag(cpu.toMap, base.cpu, ratio, 0.25)
     val regressionsWall = flag(wall, base.wall, 1.0, 0.25)
     val regressionsBoth = regressions.filter { case (k, _) => regressionsWall.contains(k) }
+    // only a run over the whole registry (a blank GRAFT_ONLY counts) is a
+    // baseline: a subset would shrink the next full run's diff
+    val fullRun = selected.size == SparkEntry.queries.size
     // one-time index builds: the warm pass pays them, the timed pass
     // serves the memo, so their price is reported on its own and flagged
-    // with a higher floor (sub-second builds are JVM noise)
+    // with a higher floor (sub-second builds are JVM noise). Only a full
+    // run is comparable: a subset builds in a cold JVM, slower with no
+    // code change
     val builds = Materialize.buildTimes
-    val buildRegressions = flag(buildTotals(builds), base.builds, ratio, 0.5)
+    val buildRegressions =
+      flag(buildTotals(builds), if (fullRun) base.builds else Map.empty, ratio, 0.5)
 
     val head = ListMap("metric" -> "cpu_total", "value" -> cpu.values.sum, "unit" -> "sec",
       "wall_total" -> wall.values.filter(_ >= 0).sum)
@@ -218,9 +224,7 @@ object Bench {
       "regressions_both" -> regressionsBoth,
       "index_build" -> ListMap(builds.toSeq.sortBy(-_._2): _*), buildTotal,
       "index_build_regressions" -> buildRegressions) ++ tail)
-    // only a run over the whole registry (a blank GRAFT_ONLY counts) is a
-    // baseline: a subset would shrink the next full run's diff
-    if (selected.size == SparkEntry.queries.size)
+    if (fullRun)
       try Files.writeString(Paths.get(DetailFile), detail + "\n")
       catch { case e: IOException => System.err.println(s"[bench] detail write failed: $e") }
     println(detail)

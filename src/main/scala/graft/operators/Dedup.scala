@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Exact.{hexNibble, splitOf}
 
 /** Deduplication operators for a large-scale training-data pipeline:
   * exact (hash-groupBy), MinHash+LSH near-dup (word and character
@@ -758,11 +759,7 @@ object Dedup {
     val tokens = docs.select(col("doc_id"),
       explode(WordCount.tokenArray(col("text"))).as("word"))
     val hex = md5(col("word"))
-    def nibble(d: Int): Column = {
-      val a = ascii(substring(hex, d + 1, 1))
-      a - when(a >= 97, lit(87)).otherwise(lit(48))
-    }
-    val withNib = tokens.select(Seq(col("doc_id")) ++ (0 until 4).map(d => nibble(d).as(s"n$d")): _*)
+    val withNib = tokens.select(Seq(col("doc_id")) ++ (0 until 4).map(d => hexNibble(hex, d).as(s"n$d")): _*)
     val sums = (0 until 16).map { b =>
       sum(shiftright(col(s"n${b / 4}"), b % 4).bitwiseAND(lit(1)) * 2 - 1).as(s"s$b")
     }
@@ -783,8 +780,8 @@ object Dedup {
     * Emits every leaking cluster with its per-split membership. Scale
     * shape: the cluster table is already tiny relative to the corpus
     * (clustered docs only), the split label is a map-side md5 of the
-    * id ([[TextAnalysis.splitOf]] — no corpus scan, no join), and the
-    * audit is one cluster-keyed partial-aggregated groupBy. The fix-up
+    * id ([[graft.functions.Exact.splitOf]] — no corpus scan, no join),
+    * and the audit is one cluster-keyed partial-aggregated groupBy. The fix-up
     * this feeds (move whole clusters into one split) is the standard
     * remedy: split by CLUSTER id, not doc id. */
   /** DEDUP-SAVINGS REPORT: the one-row corpus-impact rollup the dedup
@@ -915,14 +912,14 @@ object Dedup {
       .join(clusters.select(col("doc_id"), col("cluster_id")),
         Seq("doc_id"), "left")
       .select(col("doc_id"), rep.as("cluster_rep"),
-        TextAnalysis.splitOfKey(rep).as("split"),
-        (TextAnalysis.splitOfKey(rep) =!= TextAnalysis.splitOf).as("moved"))
+        splitOf(rep).as("split"),
+        (splitOf(rep) =!= splitOf()).as("moved"))
       .orderBy("doc_id")
   }
 
   def splitLeakage(clusters: DataFrame): DataFrame =
     clusters
-      .withColumn("split", TextAnalysis.splitOf)
+      .withColumn("split", splitOf())
       .groupBy(col("cluster_id"), col("cluster_size"))
       .agg(
         countDistinct(col("split")).as("n_splits"),

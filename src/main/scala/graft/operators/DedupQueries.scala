@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.functions.Exact.nibSql
 
 /** Driver-contract wiring for the dedup family. The oracle SQL for the
   * hash-based operators is generated programmatically so the DuckDB side
@@ -573,7 +574,7 @@ object DedupQueries {
       Some {
         def splitSql(idExpr: String) = {
           val bucket =
-            s"(${TextAnalysisQueries.nibSql(0, idExpr)} * 16 + ${TextAnalysisQueries.nibSql(1, idExpr)})"
+            s"(${nibSql(0, idExpr)} * 16 + ${nibSql(1, idExpr)})"
           s"CASE WHEN $bucket < 204 THEN 'train' WHEN $bucket < 230 THEN 'val' ELSE 'test' END"
         }
         s"""WITH RECURSIVE $clustersCtes,
@@ -591,7 +592,7 @@ object DedupQueries {
     QueryDef("split_leakage",
       (s, d) => Dedup.splitLeakage(SharedIntermediates.textClusters(s, d)),
       Some {
-        val bucket = s"(${TextAnalysisQueries.nibSql(0)} * 16 + ${TextAnalysisQueries.nibSql(1)})"
+        val bucket = s"(${nibSql(0)} * 16 + ${nibSql(1)})"
         s"""WITH RECURSIVE $clustersCtes,
            |cl AS (SELECT doc_id, cluster_id, cluster_size
            |       FROM lab JOIN sz USING (cluster_id)),

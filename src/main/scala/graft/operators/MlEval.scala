@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.WordCount.tokenArray
-import graft.functions.Exact.{ln4, ln4Sql}
+import graft.functions.Exact.{ln4, ln4Sql, nibSql, splitOf}
 
 /** MODEL-EVALUATION operators — the classifier-diagnostics layer a
   * training-data pipeline runs NEXT TO its corpus filters: train a
@@ -36,17 +36,16 @@ import graft.functions.Exact.{ln4, ln4Sql}
   */
 object MlEval {
 
-  import TextAnalysis.{splitOfKey, EnStopwords}
+  import TextAnalysis.EnStopwords
 
   private val Dec = org.apache.spark.sql.types.DecimalType(38, 0)
 
   /** Shared md5-bucket split SQL for the oracles — COMPOSED from the
-    * one [[TextAnalysisQueries.nibSql]] ascii-arithmetic helper (the
+    * one [[graft.functions.Exact.nibSql]] ascii-arithmetic helper (the
     * shared-literal rule: a nibble-convention edit must not need a
     * second touch point here). */
   private[operators] def splitSql(key: String): String = {
-    val b = s"(${TextAnalysisQueries.nibSql(0, key)} * 16 + " +
-      s"${TextAnalysisQueries.nibSql(1, key)})"
+    val b = s"(${nibSql(0, key)} * 16 + ${nibSql(1, key)})"
     s"CASE WHEN $b < 204 THEN 'train' WHEN $b < 230 THEN 'val' " +
       "ELSE 'test' END"
   }
@@ -83,7 +82,7 @@ object MlEval {
   private def hourSplitGrid(events: DataFrame): DataFrame = {
     val base = events.select(hour(col("ts")).cast("long").as("h"),
       (col("event_type") === "purchase").cast("long").as("y"),
-      splitOfKey(col("event_id")).as("split"))
+      splitOf(col("event_id")).as("split"))
     val train = base.filter(col("split") === "train")
       .groupBy(col("h"))
       .agg(count(lit(1)).as("nh"), sum(col("y")).as("ph"))
@@ -120,7 +119,7 @@ object MlEval {
     // the tokenCooccurrence stage-or-not lesson, re-measured here)
     val base = docs
       .select(col("doc_id"), col("lang"), tokenArray(col("text")).as("w"),
-        splitOfKey(col("doc_id")).as("split"))
+        splitOf(col("doc_id")).as("split"))
       .filter(size(col("w")) > 0)
     val trainTok = base.filter(col("split") === "train")
       .select(col("doc_id"), col("lang"), explode(col("w")).as("t"))

@@ -13,7 +13,6 @@ import graft.functions.Exact.ln4Sql
   * shared-literal rule applied to whole subqueries). */
 object MlEvalQueries {
 
-  private def ln4(e: String) = ln4Sql(e)
   private def stopList = TextAnalysisQueries.stopList
 
   /** (y, n_tokens, en_hits) per tokenized doc — mirror of
@@ -81,8 +80,8 @@ object MlEvalQueries {
            |dt AS (SELECT CAST(sum(dl) AS BIGINT) AS dd FROM pr),
            |lc AS (
            |  SELECT lt.lang,
-           |         ${ln4("dl")} - ${ln4("dd")} AS prior,
-           |         ${ln4("tl + v")} AS lnz
+           |         ${ln4Sql("dl")} - ${ln4Sql("dd")} AS prior,
+           |         ${ln4Sql("tl + v")} AS lnz
            |  FROM lt JOIN pr ON lt.lang = pr.lang
            |  CROSS JOIN vv CROSS JOIN dt),
            |tf AS (
@@ -92,7 +91,7 @@ object MlEvalQueries {
            |  GROUP BY 1, 2, 3),
            |sc AS (
            |  SELECT tf.doc_id, tf.gold_lang, lc2.lang,
-           |         CAST(sum(tf.n * ${ln4("coalesce(model.c, 0) + 1")})
+           |         CAST(sum(tf.n * ${ln4Sql("coalesce(model.c, 0) + 1")})
            |              AS BIGINT) AS s_tok,
            |         CAST(sum(tf.n) AS BIGINT) AS n_tok
            |  FROM tf CROSS JOIN (SELECT lang FROM lc) lc2
@@ -171,8 +170,8 @@ object MlEvalQueries {
            |    AS mcc_sign,
            |  CASE WHEN tp * tn <> fp * fn AND (tp + fp) > 0 AND
            |      (tp + fn) > 0 AND (tn + fp) > 0 AND (tn + fn) > 0 THEN
-           |    100 * (2 * ${ln4("abs(tp * tn - fp * fn)")}
-           |      - ${ln4("(tp + fp) * (tp + fn) * (tn + fp) * (tn + fn)")})
+           |    100 * (2 * ${ln4Sql("abs(tp * tn - fp * fn)")}
+           |      - ${ln4Sql("(tp + fp) * (tp + fn) * (tn + fp) * (tn + fn)")})
            |  END AS ln_mcc2_micro
            |FROM a""".stripMargin)),
 
@@ -272,7 +271,7 @@ object MlEvalQueries {
            |  CAST(CASE WHEN 100 * (n_a - n_b) * (n_a - n_b) >
            |       384 * (n_a + n_b) THEN 1 ELSE 0 END AS BIGINT) AS srm_flag,
            |  CASE WHEN n_a + n_b > 0 AND n_a <> n_b THEN
-           |    100 * (2 * ${ln4("abs(n_a - n_b)")} - ${ln4("n_a + n_b")})
+           |    100 * (2 * ${ln4Sql("abs(n_a - n_b)")} - ${ln4Sql("n_a + n_b")})
            |  END AS ln_chi2_micro
            |FROM a""".stripMargin)),
 
@@ -297,10 +296,10 @@ object MlEvalQueries {
            |SELECT n_a, n_b, n_converted,
            |  CASE WHEN n_a > 0 AND n_b > 0 AND n_converted > 0 AND
            |      n_converted < n_a + n_b THEN
-           |    100 * (${ln4(MlEval.MdeZ2E4.toString)} - ${ln4("10000")}
-           |      + ${ln4("CAST(n_converted AS HUGEINT) * " +
+           |    100 * (${ln4Sql(MlEval.MdeZ2E4.toString)} - ${ln4Sql("10000")}
+           |      + ${ln4Sql("CAST(n_converted AS HUGEINT) * " +
                   "(n_a + n_b - n_converted)")}
-           |      - ${ln4("CAST(n_a + n_b AS HUGEINT) * n_a * n_b")})
+           |      - ${ln4Sql("CAST(n_a + n_b AS HUGEINT) * n_a * n_b")})
            |  END AS ln_mde2_micro
            |FROM a""".stripMargin)),
 
@@ -333,11 +332,11 @@ object MlEvalQueries {
            |  CAST(CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1
            |       ELSE 0 END AS BIGINT) AS theta_sign,
            |  CASE WHEN num <> 0 AND denx > 0 THEN
-           |    100 * (2 * ${ln4("abs(num)")} - 2 * ${ln4("denx")})
+           |    100 * (2 * ${ln4Sql("abs(num)")} - 2 * ${ln4Sql("denx")})
            |  END AS ln_theta2_micro,
            |  CASE WHEN num <> 0 AND denx > 0 AND deny > 0 THEN
-           |    100 * (2 * ${ln4("abs(num)")} - ${ln4("denx")}
-           |      - ${ln4("deny")}) END AS ln_rho2_micro
+           |    100 * (2 * ${ln4Sql("abs(num)")} - ${ln4Sql("denx")}
+           |      - ${ln4Sql("deny")}) END AS ln_rho2_micro
            |FROM t""".stripMargin)),
 
     // expected calibration error of the per-hour purchase-rate

@@ -316,8 +316,8 @@ object Pipeline {
         sum(col("dm").cast(DecimalType38) * col("t4")).as("s"))
       .select(col("event_type"), col("n"), col("n_ref"),
         col("n_bins_used"), col("n_bins_skipped"),
-        expr("CAST(CASE WHEN s < 0 THEN -1 ELSE 1 END * " +
-          "((100 * abs(s)) div (n * n_ref)) AS BIGINT)").as("psi_micro"))
+        expr("CAST(" + signedDivSql("s", "n * n_ref", 100) + " AS BIGINT)")
+          .as("psi_micro"))
       .orderBy("event_type")
   }
 
@@ -901,7 +901,7 @@ object Pipeline {
   private[operators] def md5RankUnsorted(docs: DataFrame): DataFrame = {
     val hashed = docs.select(col("doc_id"),
       md5(col("doc_id").cast("string")).as("h"),
-      TextAnalysis.md5Bucket.as("bkt"))
+      md5Bucket().as("bkt"))
     val ranked = hashed.withColumn("rb",
       row_number().over(
         Window.partitionBy(col("bkt")).orderBy(col("h"), col("doc_id"))).cast("long"))
@@ -942,7 +942,7 @@ object Pipeline {
     // their EOD separator (n = 1), same as an empty-token doc.
     val lens = docs.select(col("doc_id"),
       md5(col("doc_id").cast("string")).as("h"),
-      TextAnalysis.md5Bucket.as("bkt"),
+      md5Bucket().as("bkt"),
       (greatest(size(tokenArray(col("text"))), lit(0)) + 1).cast("long").as("n"))
     val inBkt = lens.withColumn("run",
       coalesce(sum(col("n")).over(

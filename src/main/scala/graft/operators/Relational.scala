@@ -1061,18 +1061,11 @@ object Relational {
       .select(col("n_name"), col("n_custs_total"), col("n_pos"), col("s")
           .as("total_cents"),
         expr("CAST(CASE WHEN s > 0 AND n_pos > 0 THEN " +
-          "CASE WHEN xl4 + CAST(s AS DECIMAL(38,0)) * (" + lnq4("n_pos") +
-          " - " + lnq4("s") + ") < 0 THEN -1 ELSE 1 END * " +
-          "((100 * abs(xl4 + CAST(s AS DECIMAL(38,0)) * (" + lnq4("n_pos") +
-          " - " + lnq4("s") + "))) div s) END AS BIGINT)")
+          signedDivSql("xl4 + CAST(s AS DECIMAL(38,0)) * (" + ln4Sql("n_pos") +
+            " - " + ln4Sql("s") + ")", "s", 100) + " END AS BIGINT)")
           .as("theil_micro"))
       .orderBy("n_name")
   }
-
-  /** Quantized-ln SQL fragment (expression-string form of
-    * [[graft.functions.Exact.ln4]], for expr() call sites). */
-  private def lnq4(e: String): String =
-    graft.functions.Exact.ln4Sql(e)
 
   /** SUPPLIER REVENUE CONCENTRATION (HHI) per region — the
     * market-structure audit: Herfindahl–Hirschman index of supplier

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.functions.Exact.ln4Sql
 
 /** Driver-contract wiring for the relational suite (SURVEY.md §2.2). */
 object RelationalQueries {
@@ -536,8 +537,6 @@ object RelationalQueries {
     // quantized-ln ladder over positive spends
     QueryDef("revenue_theil",
       (s, d) => Relational.revenueTheil(s, d), Some {
-        def ln4(e: String) =
-          graft.functions.Exact.ln4Sql(e)
         s"""WITH oc AS (
            |  SELECT o_custkey,
            |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
@@ -551,15 +550,15 @@ object RelationalQueries {
            |    CAST(sum(CASE WHEN x > 0 THEN 1 ELSE 0 END) AS BIGINT)
            |      AS n_pos,
            |    CAST(sum(x) AS BIGINT) AS s,
-           |    sum(CASE WHEN x > 0 THEN CAST(x AS HUGEINT) * ${ln4("x")}
+           |    sum(CASE WHEN x > 0 THEN CAST(x AS HUGEINT) * ${ln4Sql("x")}
            |        ELSE 0 END) AS xl4
            |  FROM x GROUP BY 1)
            |SELECT n.n_name, a.n_custs_total, a.n_pos, a.s AS total_cents,
            |  CAST(CASE WHEN s > 0 AND n_pos > 0 THEN
            |    (CASE WHEN xl4 + CAST(s AS HUGEINT) *
-           |       (${ln4("n_pos")} - ${ln4("s")}) < 0 THEN -1 ELSE 1 END) *
+           |       (${ln4Sql("n_pos")} - ${ln4Sql("s")}) < 0 THEN -1 ELSE 1 END) *
            |    ((100 * abs(xl4 + CAST(s AS HUGEINT) *
-           |       (${ln4("n_pos")} - ${ln4("s")}))) // s) END AS BIGINT)
+           |       (${ln4Sql("n_pos")} - ${ln4Sql("s")}))) // s) END AS BIGINT)
            |    AS theil_micro
            |FROM a JOIN nation n ON n.n_nationkey = a.c_nationkey
            |ORDER BY n.n_name""".stripMargin

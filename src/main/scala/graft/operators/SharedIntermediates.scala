@@ -106,13 +106,25 @@ object SharedIntermediates {
     * postings(A ∪ B) = postings(A) ∪ postings(B) in the driver gate
     * itself; [[Search.servePostings]] documents the compaction policy. */
   def postingsIncremental(s: SparkSession, d: String): DataFrame = {
+    val (base, deltaDocs) = postingsBaseDelta(s, d)
+    Search.servePostings(base, Search.postingsDelta(deltaDocs))
+  }
+
+  /** The incremental entries' 90/10 split: the durable BASE postings
+    * over pmod(doc_id, 10) < 9 and the DELTA documents (= 9). */
+  private def postingsBaseDelta(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions.{col, pmod, lit}
     val docs = Tables.documents(s, d)
-    val base = Materialize.index(s, keyOf(s, "postingsBase", d))(
-      Search.postings(docs.filter(pmod(col("doc_id"), lit(10)) < 9)))
-    Search.servePostings(base,
-      Search.postingsDelta(docs.filter(pmod(col("doc_id"), lit(10)) === 9)))
+    (Materialize.index(s, keyOf(s, "postingsBase", d))(
+      Search.postings(docs.filter(pmod(col("doc_id"), lit(10)) < 9))),
+      docs.filter(pmod(col("doc_id"), lit(10)) === 9))
   }
+
+  /** Doc lengths of the base postings, durable beside them. */
+  private def postingsBaseDl(s: SparkSession, d: String, base: DataFrame)
+      : DataFrame =
+    Materialize.index(s, keyOf(s, "postingsBaseDl", d))(Search.docLengths(base))
 
   /** The PRODUCTION incremental serving shape (r10 verdict item 3):
     * durable base postings + durable base doc-lengths, with only the
@@ -125,14 +137,9 @@ object SharedIntermediates {
     * Returns (postings view, doc-length view). */
   def postingsIncrementalServed(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions.{col, pmod, lit}
-    val docs = Tables.documents(s, d)
-    val base = Materialize.index(s, keyOf(s, "postingsBase", d))(
-      Search.postings(docs.filter(pmod(col("doc_id"), lit(10)) < 9)))
-    val baseDl = Materialize.index(s, keyOf(s, "postingsBaseDl", d))(
-      Search.docLengths(base))
-    val delta = Search.postingsDelta(
-      docs.filter(pmod(col("doc_id"), lit(10)) === 9))
+    val (base, deltaDocs) = postingsBaseDelta(s, d)
+    val baseDl = postingsBaseDl(s, d, base)
+    val delta = Search.postingsDelta(deltaDocs)
     (Search.servePostings(base, delta),
       baseDl.unionByName(Search.docLengths(delta)))
   }
@@ -149,15 +156,11 @@ object SharedIntermediates {
   def postingsTombstoned(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions.{col, pmod, lit}
-    val docs = Tables.documents(s, d)
-    val base = Materialize.index(s, keyOf(s, "postingsBase", d))(
-      Search.postings(docs.filter(pmod(col("doc_id"), lit(10)) < 9)))
-    val baseDl = Materialize.index(s, keyOf(s, "postingsBaseDl", d))(
-      Search.docLengths(base))
-    val tombs = docs.filter(pmod(col("doc_id"), lit(7)) === 3)
-      .select(col("doc_id"))
-    val delta = Search.postingsDelta(
-      docs.filter(pmod(col("doc_id"), lit(10)) === 9))
+    val (base, deltaDocs) = postingsBaseDelta(s, d)
+    val baseDl = postingsBaseDl(s, d, base)
+    val tombs = Tables.documents(s, d)
+      .filter(pmod(col("doc_id"), lit(7)) === 3).select(col("doc_id"))
+    val delta = Search.postingsDelta(deltaDocs)
     (Search.applyTombstones(base, tombs).unionByName(delta),
       Search.applyTombstones(baseDl, tombs)
         .unionByName(Search.docLengths(delta)))

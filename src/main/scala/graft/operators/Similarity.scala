@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.functions.Exact.{hexNibble, signedDivSql, splitOf}
 
 /** Similarity search over the embeddings table (ArrayType(FloatType), 64
   * dims): brute-force cosine top-k as the correctness baseline and a
@@ -1014,7 +1015,7 @@ object Similarity {
     // the ONE shared split definition, keyed on vec_id (review finding:
     // an inline copy of the nibble/threshold arithmetic could silently
     // diverge from the document split if either changed)
-    val split = TextAnalysis.splitOfKey(col("vec_id"))
+    val split = splitOf(col("vec_id"))
     val sums = (1 to Dim).map(i =>
       sum(floor(element_at(col("embedding"), i).cast("double") * lit(1000000.0)
         + lit(0.5)).cast("long")).as(s"s$i"))
@@ -1148,7 +1149,7 @@ object Similarity {
       v = Materialize.stage(w.crossJoin(broadcast(m))
         .select(col("p"),
           expr("CAST(CASE WHEN m = 0 THEN 0 ELSE " +
-            "CASE WHEN w < 0 THEN -1 ELSE 1 END * ((1000000 * abs(w)) div m)" +
+            signedDivSql("w", "m") +
             " END AS BIGINT)").as("vj"))
         .agg(expr("transform(array_sort(collect_list(struct(p, vj))), " +
           "s -> s.vj)").as("v")))
@@ -1186,10 +1187,8 @@ object Similarity {
     val spark = emb.sparkSession
     val signs = spark.range(outDims * 64L)
       .select(expr("id div 64").as("i"), expr("id % 64").as("j"))
-      .withColumn("a",
-        ascii(substring(md5(concat(lit("rp:"), col("i"), lit(":"), col("j"))), 1, 1)))
       .withColumn("s",
-        ((col("a") - when(col("a") >= 97, lit(87)).otherwise(lit(48)))
+        (hexNibble(md5(concat(lit("rp:"), col("i"), lit(":"), col("j"))), 0)
           .bitwiseAND(lit(1)) * 2 - 1).cast("long"))
       .select(col("i"), col("j"), col("s"))
     val xq = Materialize.stage(emb.select(col("vec_id"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.functions.Exact.{ln4Sql, signedDivSql}
 
 /** Classical statistics as exact-arithmetic Spark plans — the
   * hypothesis-test/correlation readouts an experimentation or data-QA
@@ -21,10 +22,6 @@ import org.apache.spark.sql.types.DecimalType
   * its per-key SUM reduce (worker.py exposed_reduce) to the moment/
   * rank aggregates the same shuffle shape supports. */
 object Stats {
-
-  /** Quantized-ln SQL fragment (the lang_source_mi ladder). */
-  private def ln4(e: String): String =
-    graft.functions.Exact.ln4Sql(e)
 
   private val Dec = DecimalType(38, 0)
 
@@ -114,7 +111,7 @@ object Stats {
         expr("CAST(CASE WHEN num < 0 THEN -1 WHEN num > 0 THEN 1 ELSE 0 END" +
           " AS BIGINT)").as("rho_sign"),
         expr("CASE WHEN num <> 0 AND dx > 0 AND dy > 0 THEN " +
-          s"100 * (2 * ${ln4("abs(num)")} - ${ln4("dx")} - ${ln4("dy")})" +
+          s"100 * (2 * ${ln4Sql("abs(num)")} - ${ln4Sql("dx")} - ${ln4Sql("dy")})" +
           " END").as("ln_rho2_micro"))
       .orderBy("flag")
   }
@@ -210,9 +207,9 @@ object Stats {
         expr("CASE WHEN n1 > 1 AND n2 > 1 AND s1 * n2 <> s2 * n1 AND " +
           "n2 * n2 * (n1 * q1 - s1 * s1) * (n2 - 1) + " +
           "n1 * n1 * (n2 * q2 - s2 * s2) * (n1 - 1) > 0 THEN " +
-          s"100 * (2 * ${ln4("abs(s1 * n2 - s2 * n1)")}" +
-          s" + ${ln4("(n1 - 1) * (n2 - 1)")}" +
-          s" - ${ln4("n2 * n2 * (n1 * q1 - s1 * s1) * (n2 - 1) + " +
+          s"100 * (2 * ${ln4Sql("abs(s1 * n2 - s2 * n1)")}" +
+          s" + ${ln4Sql("(n1 - 1) * (n2 - 1)")}" +
+          s" - ${ln4Sql("n2 * n2 * (n1 * q1 - s1 * s1) * (n2 - 1) + " +
             "n1 * n1 * (n2 * q2 - s2 * s2) * (n1 - 1)")})" +
           " END").as("ln_t2_micro"))
   }
@@ -289,9 +286,9 @@ object Stats {
           .as("z_sign"),
         expr("CASE WHEN n1 > 0 AND n2 > 0 AND u1_x2 <> n1 * n2 AND " +
           "CAST(nn AS DECIMAL(38,0)) * nn * nn - nn - t3 > 0 THEN " +
-          s"100 * (2 * ${ln4("abs(u1_x2 - n1 * n2)")} + ${ln4("3")}" +
-          s" + ${ln4("nn * (nn - 1)")} - ${ln4("n1 * n2")}" +
-          s" - ${ln4("CAST(nn AS DECIMAL(38,0)) * nn * nn - nn - t3")})" +
+          s"100 * (2 * ${ln4Sql("abs(u1_x2 - n1 * n2)")} + ${ln4Sql("3")}" +
+          s" + ${ln4Sql("nn * (nn - 1)")} - ${ln4Sql("n1 * n2")}" +
+          s" - ${ln4Sql("CAST(nn AS DECIMAL(38,0)) * nn * nn - nn - t3")})" +
           " END").as("ln_z2_micro"))
   }
 
@@ -340,8 +337,7 @@ object Stats {
       .crossJoin(den)
       .select(col("lag"), col("n_days"), col("n_pairs"),
         expr("CAST(CASE WHEN den > 0 AND n_pairs > 0 THEN " +
-          "CASE WHEN num < 0 THEN -1 ELSE 1 END * " +
-          "((1000 * abs(num)) div den) END AS BIGINT)").as("r_permille"))
+          signedDivSql("num", "den", 1000) + " END AS BIGINT)").as("r_permille"))
       .orderBy("lag")
   }
 
@@ -384,8 +380,7 @@ object Stats {
         expr("n_months * sxx - sx * sx").as("den"))
       .select(col("n_name"), col("n_months"), col("total_cents"),
         expr("CAST(CASE WHEN den > 0 THEN " +
-          "CASE WHEN num < 0 THEN -1 ELSE 1 END * " +
-          "((1000000 * abs(num)) div den) END AS BIGINT)")
+          signedDivSql("num", "den") + " END AS BIGINT)")
           .as("slope_microcents_per_month"))
       .orderBy("n_name")
   }
@@ -420,8 +415,7 @@ object Stats {
         col("day").as("peak_day"),
         expr("CAST(ns AS BIGINT)").as("peak_cusum_n"),
         expr("CAST(CASE WHEN s > 0 THEN " +
-          "CASE WHEN ns < 0 THEN -1 ELSE 1 END * " +
-          "((1000 * abs(ns)) div (n * CAST(s AS DECIMAL(38,0)))) END" +
+          signedDivSql("ns", "n * CAST(s AS DECIMAL(38,0))", 1000) + " END" +
           " AS BIGINT)").as("peak_permille"))
   }
 
@@ -478,8 +472,8 @@ object Stats {
           "WHEN n_conc < n_disc THEN -1 ELSE 0 END AS BIGINT)")
           .as("tau_sign"),
         expr("CASE WHEN n_conc <> n_disc AND n0 > n1 AND n0 > n2 THEN " +
-          s"100 * (2 * ${ln4("abs(n_conc - n_disc)")}" +
-          s" - ${ln4("n0 - n1")} - ${ln4("n0 - n2")}) END")
+          s"100 * (2 * ${ln4Sql("abs(n_conc - n_disc)")}" +
+          s" - ${ln4Sql("n0 - n1")} - ${ln4Sql("n0 - n2")}) END")
           .as("ln_tau2_micro"))
   }
 

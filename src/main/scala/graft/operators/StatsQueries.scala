@@ -1,16 +1,13 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.functions.Exact.ln4Sql
 
 /** Driver-contract wiring for the classical-statistics suite
   * ([[Stats]]). Every oracle mirrors the plan's integer reduction
   * term-for-term — rank windows, floor-div quantizations, and the
   * quantized-ln ladder — so each test statistic hash-matches exactly. */
 object StatsQueries {
-
-  /** The lang_source_mi quantized-ln ladder, shared by every oracle. */
-  private def ln4(e: String) =
-    graft.functions.Exact.ln4Sql(e)
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -56,7 +53,7 @@ object StatsQueries {
            |  CAST(CASE WHEN num < 0 THEN -1 WHEN num > 0 THEN 1 ELSE 0 END
            |       AS BIGINT) AS rho_sign,
            |  CASE WHEN num <> 0 AND dx > 0 AND dy > 0 THEN
-           |    100 * (2 * ${ln4("abs(num)")} - ${ln4("dx")} - ${ln4("dy")})
+           |    100 * (2 * ${ln4Sql("abs(num)")} - ${ln4Sql("dx")} - ${ln4Sql("dy")})
            |  END AS ln_rho2_micro
            |FROM t ORDER BY flag""".stripMargin)),
 
@@ -116,9 +113,9 @@ object StatsQueries {
            |  CASE WHEN n1 > 1 AND n2 > 1 AND s1 * n2 <> s2 * n1 AND
            |    n2 * n2 * (n1 * q1 - s1 * s1) * (n2 - 1) +
            |    n1 * n1 * (n2 * q2 - s2 * s2) * (n1 - 1) > 0 THEN
-           |    100 * (2 * ${ln4("abs(s1 * n2 - s2 * n1)")}
-           |      + ${ln4("(n1 - 1) * (n2 - 1)")}
-           |      - ${ln4("n2 * n2 * (n1 * q1 - s1 * s1) * (n2 - 1) + " +
+           |    100 * (2 * ${ln4Sql("abs(s1 * n2 - s2 * n1)")}
+           |      + ${ln4Sql("(n1 - 1) * (n2 - 1)")}
+           |      - ${ln4Sql("n2 * n2 * (n1 * q1 - s1 * s1) * (n2 - 1) + " +
                           "n1 * n1 * (n2 * q2 - s2 * s2) * (n1 - 1)")})
            |  END AS ln_t2_micro
            |FROM a""".stripMargin)),
@@ -155,9 +152,9 @@ object StatsQueries {
            |    AS z_sign,
            |  CASE WHEN n1 > 0 AND n2 > 0 AND u1_x2 <> n1 * n2 AND
            |    CAST(nn AS HUGEINT) * nn * nn - nn - t3 > 0 THEN
-           |    100 * (2 * ${ln4("abs(u1_x2 - n1 * n2)")} + ${ln4("3")}
-           |      + ${ln4("nn * (nn - 1)")} - ${ln4("n1 * n2")}
-           |      - ${ln4("CAST(nn AS HUGEINT) * nn * nn - nn - t3")})
+           |    100 * (2 * ${ln4Sql("abs(u1_x2 - n1 * n2)")} + ${ln4Sql("3")}
+           |      + ${ln4Sql("nn * (nn - 1)")} - ${ln4Sql("n1 * n2")}
+           |      - ${ln4Sql("CAST(nn AS HUGEINT) * nn * nn - nn - t3")})
            |  END AS ln_z2_micro
            |FROM u""".stripMargin)),
 
@@ -276,8 +273,8 @@ object StatsQueries {
            |  CAST(CASE WHEN nc > nd THEN 1 WHEN nc < nd THEN -1 ELSE 0 END
            |       AS BIGINT) AS tau_sign,
            |  CASE WHEN nc <> nd AND n0 > n1 AND n0 > n2 THEN
-           |    100 * (2 * ${ln4("abs(nc - nd)")} - ${ln4("n0 - n1")}
-           |      - ${ln4("n0 - n2")}) END AS ln_tau2_micro
+           |    100 * (2 * ${ln4Sql("abs(nc - nd)")} - ${ln4Sql("n0 - n1")}
+           |      - ${ln4Sql("n0 - n2")}) END AS ln_tau2_micro
            |FROM t""".stripMargin)),
 
     // decision-stump split curve: weighted-Gini score of every

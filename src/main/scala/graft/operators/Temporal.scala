@@ -473,15 +473,10 @@ object Temporal {
           "WHEN 1000000 * o1 < e1m THEN -1 ELSE 0 END AS BIGINT)")
           .as("z_sign"),
         expr("CASE WHEN vm > 0 AND 1000000 * o1 <> e1m THEN " +
-          s"100 * (2 * ${exprLn4("abs(1000000 * o1 - e1m)")}" +
-          s" - ${exprLn4("vm")} - ${exprLn4("1000000")}) END")
+          s"100 * (2 * ${ln4Sql("abs(1000000 * o1 - e1m)")}" +
+          s" - ${ln4Sql("vm")} - ${ln4Sql("1000000")}) END")
           .as("ln_z2_micro"))
   }
-
-  /** The lang_source_mi quantized-ln SQL fragment (string-expression
-    * form — the Column ln4 lives in functions.Exact). */
-  private def exprLn4(e: String): String =
-    graft.functions.Exact.ln4Sql(e)
 
   /** COHORT RETENTION MATRIX — the signup-week × week-offset triangle
     * every growth dashboard opens with: of the users who signed up in
@@ -580,8 +575,6 @@ object Temporal {
     * the ≤ |types|²-row cell table; marginals are windows over that
     * bounded table; one-row report. */
   def entropyRate(events: DataFrame): DataFrame = {
-    def ln4c(c: org.apache.spark.sql.Column) =
-      graft.functions.Exact.ln4(c)
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     val cells = events
@@ -596,19 +589,16 @@ object Temporal {
       .withColumn("cb", sum(col("c")).over(Window.partitionBy(col("to_t"))))
       .agg(sum(col("c")).as("n_transitions"),
         countDistinct(col("from_t")).as("n_states"),
-        sum((col("c") * (ln4c(col("ca")) - ln4c(col("c")))).cast(Dec))
+        sum((col("c") * (ln4(col("ca")) - ln4(col("c")))).cast(Dec))
           .as("hc4"),
-        sum((col("c") * ln4c(col("cb"))).cast(Dec)).as("sb4"))
+        sum((col("c") * ln4(col("cb"))).cast(Dec)).as("sb4"))
       .select(col("n_transitions"), col("n_states"),
         expr("CAST((100 * hc4) div n_transitions AS BIGINT)")
           .as("h_cond_micro"),
         expr("CAST((100 * (CAST(n_transitions AS DECIMAL(38,0)) * " +
-          s"${lnq4x("n_transitions")} - sb4)) div n_transitions AS BIGINT)")
+          s"${ln4Sql("n_transitions")} - sb4)) div n_transitions AS BIGINT)")
           .as("h_next_micro"))
   }
-
-  private def lnq4x(e: String): String =
-    graft.functions.Exact.ln4Sql(e)
 
   /** HOUR-OF-DAY SEASONALITY AUDIT — per event type, the 24-bin
     * hour-of-day profile reduced to the three numbers a scheduler or
@@ -799,8 +789,6 @@ object Temporal {
     * partition key) — then a 2-row variant table and a 1-row report.
     * No window, no cross join. */
   def abConversionZtest(events: DataFrame): DataFrame = {
-    def ln4(e: String): String =
-      graft.functions.Exact.ln4Sql(e)
     val perUser = events
       .groupBy((col("user_id") % 2).as("variant"), col("user_id"))
       .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -819,8 +807,8 @@ object Temporal {
           "1000000 * x1 div n1 - 1000000 * x0 div n0 END").as("diff_ppm"),
         expr("CASE WHEN n0 > 0 AND n1 > 0 AND x0 + x1 > 0 " +
           "AND x0 + x1 < n0 + n1 AND x1 * n0 <> x0 * n1 THEN " +
-          s"100 * (2 * ${ln4("abs(x1 * n0 - x0 * n1)")} + ${ln4("n0 + n1")}" +
-          s" - ${ln4("n0")} - ${ln4("n1")} - ${ln4("x0 + x1")}" +
-          s" - ${ln4("n0 + n1 - x0 - x1")}) END").as("ln_z2_micro"))
+          s"100 * (2 * ${ln4Sql("abs(x1 * n0 - x0 * n1)")} + ${ln4Sql("n0 + n1")}" +
+          s" - ${ln4Sql("n0")} - ${ln4Sql("n1")} - ${ln4Sql("x0 + x1")}" +
+          s" - ${ln4Sql("n0 + n1 - x0 - x1")}) END").as("ln_z2_micro"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.functions.Exact.ln4Sql
 
 /** Driver-contract wiring for the temporal suite. */
 object TemporalQueries {
@@ -313,8 +314,6 @@ object TemporalQueries {
     // so ln z² is a ±sum of integer lns — no sqrt/exp anywhere)
     QueryDef("ab_conversion_ztest",
       (s, d) => Temporal.abConversionZtest(Tables.events(s, d)), Some {
-        def ln4(e: String) =
-          graft.functions.Exact.ln4Sql(e)
         s"""WITH pu AS (
            |  SELECT user_id % 2 AS variant, user_id,
            |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
@@ -335,9 +334,9 @@ object TemporalQueries {
            |    THEN (1000000 * x1) // n1 - (1000000 * x0) // n0 END AS diff_ppm,
            |  CASE WHEN n0 > 0 AND n1 > 0 AND x0 + x1 > 0
            |    AND x0 + x1 < n0 + n1 AND x1 * n0 <> x0 * n1 THEN
-           |    100 * (2 * ${ln4("abs(x1 * n0 - x0 * n1)")} + ${ln4("n0 + n1")}
-           |      - ${ln4("n0")} - ${ln4("n1")} - ${ln4("x0 + x1")}
-           |      - ${ln4("n0 + n1 - x0 - x1")}) END AS ln_z2_micro
+           |    100 * (2 * ${ln4Sql("abs(x1 * n0 - x0 * n1)")} + ${ln4Sql("n0 + n1")}
+           |      - ${ln4Sql("n0")} - ${ln4Sql("n1")} - ${ln4Sql("x0 + x1")}
+           |      - ${ln4Sql("n0 + n1 - x0 - x1")}) END AS ln_z2_micro
            |FROM a""".stripMargin
       }),
 
@@ -539,8 +538,6 @@ object TemporalQueries {
     // floor-div expectation/variance terms per event day, z^2 ladder
     QueryDef("logrank_conversion",
       (s, d) => Temporal.logrankConversion(Tables.events(s, d)), Some {
-        def ln4(e: String) =
-          graft.functions.Exact.ln4Sql(e)
         s"""WITH su AS (SELECT user_id, min(ts) AS s_ts FROM events
            |            WHERE event_type = 'signup' GROUP BY 1),
            |pu AS (SELECT user_id AS p_user, ts AS p_ts FROM events
@@ -593,8 +590,8 @@ object TemporalQueries {
            |       WHEN 1000000 * o1 < e1m THEN -1 ELSE 0 END AS BIGINT)
            |    AS z_sign,
            |  CASE WHEN vm > 0 AND 1000000 * o1 <> e1m THEN
-           |    100 * (2 * ${ln4("abs(1000000 * o1 - e1m)")}
-           |      - ${ln4("vm")} - ${ln4("1000000")}) END AS ln_z2_micro
+           |    100 * (2 * ${ln4Sql("abs(1000000 * o1 - e1m)")}
+           |      - ${ln4Sql("vm")} - ${ln4Sql("1000000")}) END AS ln_z2_micro
            |FROM a""".stripMargin
       }),
 
@@ -659,8 +656,6 @@ object TemporalQueries {
     // ln4(ca) >= ln4(c)), so no sign-split is needed
     QueryDef("entropy_rate",
       (s, d) => Temporal.entropyRate(Tables.events(s, d)), Some {
-        def ln4(e: String) =
-          graft.functions.Exact.ln4Sql(e)
         s"""WITH g0 AS (
            |  SELECT event_type AS to_t,
            |    lag(event_type) OVER (PARTITION BY user_id
@@ -674,14 +669,14 @@ object TemporalQueries {
            |      FROM cells),
            |a AS (SELECT CAST(sum(c) AS BIGINT) AS n_transitions,
            |        CAST(count(DISTINCT from_t) AS BIGINT) AS n_states,
-           |        sum(CAST(c AS HUGEINT) * (${ln4("ca")} - ${ln4("c")}))
+           |        sum(CAST(c AS HUGEINT) * (${ln4Sql("ca")} - ${ln4Sql("c")}))
            |          AS hc4,
-           |        sum(CAST(c AS HUGEINT) * ${ln4("cb")}) AS sb4
+           |        sum(CAST(c AS HUGEINT) * ${ln4Sql("cb")}) AS sb4
            |      FROM m)
            |SELECT n_transitions, n_states,
            |  CAST((100 * hc4) // n_transitions AS BIGINT) AS h_cond_micro,
            |  CAST((100 * (CAST(n_transitions AS HUGEINT) *
-           |    ${ln4("n_transitions")} - sb4)) // n_transitions AS BIGINT)
+           |    ${ln4Sql("n_transitions")} - sb4)) // n_transitions AS BIGINT)
            |    AS h_next_micro
            |FROM a""".stripMargin
       }),

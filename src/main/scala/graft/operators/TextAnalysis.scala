@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Exact.ln4
+import graft.functions.Exact.{hexNibble, ln4, ln4Sql, md5Bucket, md5U20, signedDivSql, splitOf}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,31 +19,6 @@ object TextAnalysis {
 
   /** GPT2-ish token pattern (no lookarounds → portable to RE2). */
   val BpePattern = "'(?:s|t|re|ve|m|ll|d)| ?[a-z]+| ?[0-9]+| ?[^a-z0-9\\s']+"
-
-  /** Hex nibble `i` (0-based) of md5(doc_id) as an integer — the shared
-    * engine-portable uniform-hash building block behind every
-    * deterministic split/sampling decision here (the oracles mirror it
-    * with the same ascii arithmetic). */
-  private[operators] def md5Nibble(i: Int, key: Column = col("doc_id")): Column = {
-    val a = ascii(substring(md5(key.cast("string")), i + 1, 1))
-    a - when(a >= 97, lit(87)).otherwise(lit(48))
-  }
-
-  /** Uniform 0-255 md5 bucket of the key (doc_id by default — pass the
-    * key column so non-document tables share ONE copy of the nibble
-    * arithmetic and the 8/1/1 thresholds). */
-  private[operators] def md5Bucket: Column = md5BucketOf(col("doc_id"))
-
-  private[operators] def md5BucketOf(key: Column): Column =
-    (md5Nibble(0, key) * 16 + md5Nibble(1, key)).cast("long")
-
-  /** The deterministic 8/1/1 train/val/test label (204/26/26 of 256). */
-  private[operators] def splitOf: Column = splitOfKey(col("doc_id"))
-
-  private[operators] def splitOfKey(key: Column): Column = {
-    val b = md5BucketOf(key)
-    when(b < 204, lit("train")).when(b < 230, lit("val")).otherwise(lit("test"))
-  }
 
   /** N-gram-heuristic language ID: stopword hit ratio → {en, other}. */
   def langId(docs: DataFrame): DataFrame =
@@ -95,9 +70,8 @@ object TextAnalysis {
         "CAST((1000000 * agree) div n AS BIGINT) AS po_micro",
         "CAST((1000000 * chance) div nsq AS BIGINT) AS pe_micro",
         """CASE WHEN nsq - chance = 0 THEN CAST(NULL AS BIGINT) ELSE
-           CAST(CASE WHEN n * agree - chance < 0 THEN -1 ELSE 1 END *
-                ((1000000 * abs(n * agree - chance)) div (nsq - chance))
-             AS BIGINT) END AS kappa_micro""")
+           CAST(""" + signedDivSql("n * agree - chance", "nsq - chance") +
+          """ AS BIGINT) END AS kappa_micro""")
   }
 
   /** MULTI-CLASS Cohen's κ over an (annotator_a, annotator_b) pair
@@ -138,9 +112,8 @@ object TextAnalysis {
         "CAST((1000000 * agree) div n AS BIGINT) AS po_micro",
         "CAST((1000000 * chance) div (n * n) AS BIGINT) AS pe_micro",
         """CASE WHEN n * n - chance = 0 THEN CAST(NULL AS BIGINT) ELSE
-           CAST(CASE WHEN n * agree - chance < 0 THEN -1 ELSE 1 END *
-                ((1000000 * abs(n * agree - chance)) div (n * n - chance))
-             AS BIGINT) END AS kappa_micro""")
+           CAST(""" + signedDivSql("n * agree - chance", "n * n - chance") +
+          """ AS BIGINT) END AS kappa_micro""")
   }
 
   /** κ between the labeled `lang` column (5 classes) and a 4-class
@@ -292,10 +265,8 @@ object TextAnalysis {
       docs.select(explode(tokenArray(col("text"))).as("t"))
         .groupBy("t").agg(count(lit(1)).as("c"))))
       .select(
-        floor(log(col("rank").cast("double")) * lit(10000.0) + lit(0.5))
-          .cast("decimal(38,0)").as("x"),
-        floor(log(col("c").cast("double")) * lit(10000.0) + lit(0.5))
-          .cast("decimal(38,0)").as("y"))
+        ln4(col("rank")).cast("decimal(38,0)").as("x"),
+        ln4(col("c")).cast("decimal(38,0)").as("y"))
     pts.agg(
         count(lit(1)).cast("decimal(38,0)").as("n"),
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
@@ -308,8 +279,8 @@ object TextAnalysis {
       .selectExpr(
         "CAST(n AS BIGINT) AS n_types",
         """CASE WHEN den = 0 THEN CAST(NULL AS BIGINT) ELSE
-           CAST(CASE WHEN num > 0 THEN -1 ELSE 1 END *
-                ((1000000 * abs(num)) div den) AS BIGINT) END AS alpha_micro""",
+           CAST(""" + signedDivSql("num", "den", negate = true) +
+          """ AS BIGINT) END AS alpha_micro""",
         // intercept magnitude guard (advisor r10): |sy·den − num·sx| ≤
         // 1e14·3e17 + 3e17·1e14 = 6e31 under these bounds (|num| ≤
         // √(den·deny) ≤ 3e17 by Cauchy–Schwarz), so ×10⁶ stays inside
@@ -321,8 +292,8 @@ object TextAnalysis {
                   OR den > 300000000000000000 OR deny > 300000000000000000
                   OR abs(sx) > 100000000000000 OR abs(sy) > 100000000000000
              THEN CAST(NULL AS BIGINT) ELSE
-           CAST(CASE WHEN sy*den - num*sx < 0 THEN -1 ELSE 1 END *
-                ((1000000 * abs(sy*den - num*sx)) div (n*den)) AS BIGINT)
+           CAST(""" + signedDivSql("sy*den - num*sx", "n*den") +
+          """ AS BIGINT)
            END AS intercept_micro""",
         """CASE WHEN den = 0 OR deny = 0
                   OR den > 300000000000000000 OR deny > 300000000000000000
@@ -424,8 +395,8 @@ object TextAnalysis {
         "n*syy - sy*sy AS deny", "sx", "sy", "n")
       .selectExpr("feature", "n_docs",
         """CASE WHEN den = 0 THEN CAST(NULL AS BIGINT) ELSE
-           CAST(CASE WHEN num < 0 THEN -1 ELSE 1 END *
-                ((1000000 * abs(num)) div den) AS BIGINT) END AS slope_micro""",
+           CAST(""" + signedDivSql("num", "den") +
+          """ AS BIGINT) END AS slope_micro""",
         // intercept guard: same bounds as zipfAlpha's (see there) —
         // without them Spark NULLs on decimal overflow where DuckDB
         // computes (advisor r10)
@@ -433,8 +404,8 @@ object TextAnalysis {
                   OR den > 300000000000000000 OR deny > 300000000000000000
                   OR abs(sx) > 100000000000000 OR abs(sy) > 100000000000000
              THEN CAST(NULL AS BIGINT) ELSE
-           CAST(CASE WHEN sy*den - num*sx < 0 THEN -1 ELSE 1 END *
-                ((1000000 * abs(sy*den - num*sx)) div (n*den)) AS BIGINT)
+           CAST(""" + signedDivSql("sy*den - num*sx", "n*den") +
+          """ AS BIGINT)
            END AS intercept_micro""",
         // magnitude guard (mirrored in the oracle): 1000·num² and
         // den·deny must stay under the 38-digit budget. |num| ≤
@@ -506,20 +477,17 @@ object TextAnalysis {
         sum(col("c")).as("n_tokens"),
         count(lit(1)).as("n_types"),
         max(col("c")).as("cmax"),
-        sum(col("c") *
-          floor(log(col("c").cast("double")) * lit(10000.0) + lit(0.5)))
-          .as("s4"))
+        sum(col("c") * ln4(col("c"))).as("s4"))
       // entropy in EXACT 1e-6 units: H_micro = 100·(n·lnq(n) − s4) div n
       // with every ln pre-quantized — the bigram_lm_score r12 fix
       // (round(double, 6) tie-flips between engines at large SF; the
       // sf1 sweep caught 2 rows here)
-      .withColumn("ln4",
-        floor(log(col("n_tokens").cast("double")) * lit(10000.0) + lit(0.5)))
+      .withColumn("ln4", ln4(col("n_tokens")))
       .select(col("doc_id"), col("n_tokens"), col("n_types"),
         expr("1000 * n_types div n_tokens").as("ttr_permille"),
         expr("1000 * cmax div n_tokens").as("top_frac_permille"),
-        expr("CAST(CASE WHEN n_tokens * ln4 - s4 < 0 THEN -1 ELSE 1 END * " +
-          "((100 * abs(n_tokens * ln4 - s4)) div n_tokens) AS BIGINT)")
+        expr("CAST(" + signedDivSql("n_tokens * ln4 - s4", "n_tokens", 100) +
+          " AS BIGINT)")
           .as("entropy_micro"))
       .orderBy("doc_id")
   }
@@ -724,7 +692,7 @@ object TextAnalysis {
     * append, trivially parallel). ascii-nibble math keeps the oracle
     * bit-identical (same trick as SimHash). */
   def trainValTestSplit(docs: DataFrame): DataFrame = {
-    val bucket = md5Bucket
+    val bucket = md5Bucket()
     docs.select(col("doc_id"), bucket.as("bucket"))
       .withColumn("split",
         when(col("bucket") < 204, lit("train"))        // 204/256 ≈ 80%
@@ -800,7 +768,7 @@ object TextAnalysis {
     * per-stratum audit row (totals, sampled count, id range) — one
     * map-side-combined groupBy, no second pass. */
   def stratifiedSample(docs: DataFrame, rate256: Int = 51): DataFrame = {
-    val sampled = md5Bucket < rate256
+    val sampled = md5Bucket() < rate256
     docs.select(col("lang"), col("doc_id"), sampled.as("s"))
       .groupBy("lang")
       .agg(
@@ -820,7 +788,7 @@ object TextAnalysis {
     * join, one for the audit groupBy. */
   def qualityWeightedSample(docs: DataFrame): DataFrame = {
     val q = qualityScore(docs).select(col("doc_id"), col("quality"))
-    val u = md5Bucket.cast("double")
+    val u = md5Bucket().cast("double")
     docs.select(col("doc_id"), col("lang")).join(q, "doc_id")
       .withColumn("kept", u < col("quality") * 256.0)
       .groupBy(col("lang"))
@@ -896,7 +864,7 @@ object TextAnalysis {
       .select(col("source"), col("n_docs"),
         least(lit(1.0), col("total").cast("double") / col("n_sources").cast("double")
           / col("n_docs").cast("double")).as("keep_rate"))
-    val u = md5Bucket.cast("double")
+    val u = md5Bucket().cast("double")
     docs.select(col("doc_id"), col("source"))
       .join(broadcast(rates), "source")
       .withColumn("kept", u < col("keep_rate") * 256.0)
@@ -969,12 +937,9 @@ object TextAnalysis {
         floor(lit(1048576.0) * col("k_target").cast("double") * col("w").cast("double")
           / (col("w_total").cast("double") * col("n_docs").cast("double")))
           .cast("long").as("keep_thresh"))
-    // 20-bit md5-uniform draw: five hex nibbles
-    val u = (0 until 5).map(i => md5Nibble(i) * (1 << (4 * (4 - i))))
-      .reduce(_ + _).cast("long")
     docs.select(col("doc_id"), col("source"))
       .join(broadcast(rates), "source")
-      .withColumn("kept", u < col("keep_thresh"))
+      .withColumn("kept", md5U20 < col("keep_thresh"))
       .groupBy(col("source"), col("n_docs"), col("keep_thresh"))
       .agg(sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"))
       .orderBy("source")
@@ -1103,11 +1068,9 @@ object TextAnalysis {
     * sample is TakeOrderedAndProject (k per partition, k at the
     * driver — the [[fixedSizeSample]] shape, no global sort). */
   def weightedSampleAes(docs: DataFrame, k: Int = AesSampleK): DataFrame = {
-    val u = (0 until 5).map(i => md5Nibble(i) * (1 << (4 * (4 - i))))
-      .reduce(_ + _).cast("long")
     docs
       .select(col("doc_id"), size(tokenArray(col("text"))).cast("long").as("n_tokens"),
-        u.as("u20"))
+        md5U20.as("u20"))
       .filter(col("n_tokens") > 0)
       .withColumn("pen", lit(AesLnMax) - ln4(col("u20") + 1).cast("long"))
       .withColumn("key_q", expr("(1000000 * pen) div n_tokens"))
@@ -1135,7 +1098,7 @@ object TextAnalysis {
     // <query>` audit, r12, the bm25-family finding); staged it is a vocabulary-sized
     // table read four times
     val tokSplit = Materialize.stage(
-      docs.select(splitOf.as("split"), explode(tokenArray(col("text"))).as("tok"))
+      docs.select(splitOf().as("split"), explode(tokenArray(col("text"))).as("tok"))
         .groupBy(col("split"), col("tok")).agg(count(lit(1)).as("c")))
     val globalTok = tokSplit.groupBy(col("tok")).agg(sum(col("c")).as("c_all"))
     val splitTotals = tokSplit.groupBy(col("split")).agg(sum(col("c")).as("n_split"))
@@ -1145,9 +1108,8 @@ object TextAnalysis {
       .join(broadcast(splitTotals), "split")
       .crossJoin(broadcast(grand))
       .withColumn("lp4",
-        floor(log(col("c").cast("double") * col("n_all").cast("double") /
-          (col("n_split").cast("double") * col("c_all").cast("double"))) *
-          lit(10000.0) + lit(0.5)).cast("long"))
+        ln4(col("c").cast("double") * col("n_all").cast("double") /
+          (col("n_split").cast("double") * col("c_all").cast("double"))).cast("long"))
     // KL in EXACT 1e-6 units (sign-split truncating division) — same
     // fix as bigramLmScore's avg_logp_micro: round(double, 6) can flip
     // on representation-boundary ties between engines at large SF
@@ -1160,9 +1122,8 @@ object TextAnalysis {
         col("n_distinct_tokens"),
         // ×100 lift in DECIMAL: kl_units is a corpus-sized Σc·lp4
         // (overflows BIGINT·100 past ~10¹⁷ token-units); 3 output rows
-        expr("CAST(CASE WHEN kl_units < 0 THEN -1 ELSE 1 END * " +
-          "((100 * abs(CAST(kl_units AS DECIMAL(38,0)))) div n_split) " +
-          "AS BIGINT)").as("kl_micro"))
+        expr("CAST(" + signedDivSql("CAST(kl_units AS DECIMAL(38,0))", "n_split", 100) +
+          " AS BIGINT)").as("kl_micro"))
       .orderBy("split")
   }
 
@@ -1201,12 +1162,11 @@ object TextAnalysis {
     val grand = bucketTotals.agg(
       sum(col("cr")).as("nr"), sum(col("ct")).as("nt"))
     val llr = bucketTotals.crossJoin(broadcast(grand))
-      .withColumn("llr4", floor(
-        log((col("ct").cast("double") + lit(1.0)) *
-            (col("nr").cast("double") + lit(256.0)) /
-            ((col("cr").cast("double") + lit(1.0)) *
-             (col("nt").cast("double") + lit(256.0)))) *
-        lit(10000.0) + lit(0.5)).cast("long"))
+      .withColumn("llr4", ln4(
+        (col("ct").cast("double") + lit(1.0)) *
+          (col("nr").cast("double") + lit(256.0)) /
+          ((col("cr").cast("double") + lit(1.0)) *
+           (col("nt").cast("double") + lit(256.0)))).cast("long"))
       .select("bucket", "llr4")
     val weights = docBucket.join(broadcast(llr), "bucket")
       .groupBy("doc_id")
@@ -1492,17 +1452,12 @@ object TextAnalysis {
   val CmsDepth = 4
   val CmsWidth = 4096
 
-  private def cmsNib(h: Column, i: Int): Column = {
-    val a = ascii(substring(h, i + 1, 1))
-    a - when(a >= 97, lit(87)).otherwise(lit(48))
-  }
-
   /** The d bucket indexes of a token — md5-nibble arithmetic the DuckDB
     * oracle reproduces digit-for-digit. */
   private def cmsBuckets(tok: Column): Column = {
     val h = md5(tok)
     array((0 until CmsDepth).map { j =>
-      (cmsNib(h, 3 * j) * 256 + cmsNib(h, 3 * j + 1) * 16 + cmsNib(h, 3 * j + 2))
+      (hexNibble(h, 3 * j) * 256 + hexNibble(h, 3 * j + 1) * 16 + hexNibble(h, 3 * j + 2))
         .cast("long")
     }: _*)
   }
@@ -1589,9 +1544,8 @@ object TextAnalysis {
     val scored = big.join(c2.select("g", "c2"), "g").join(c1, "w1")
       .crossJoin(broadcast(v))
       .select(col("doc_id"),
-        floor(log((col("c2") + 1).cast("double") /
-          (col("c1") + col("v")).cast("double")) * lit(10000.0) + lit(0.5))
-          .cast("long").as("lp4"))
+        ln4((col("c2") + 1).cast("double") /
+          (col("c1") + col("v")).cast("double")).cast("long").as("lp4"))
     // mean log-prob in EXACT 1e-6 units via sign-split truncating
     // division — the r12 sf1 sweep caught round(double, 6) flipping on
     // representation-boundary ties between engines (36 of 50k rows at
@@ -1599,8 +1553,8 @@ object TextAnalysis {
     scored.groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum(col("lp4")).as("s4"))
       .select(col("doc_id"), col("n_bigrams"),
-        expr("CAST(CASE WHEN s4 < 0 THEN -1 ELSE 1 END * " +
-          "((100 * abs(s4)) div n_bigrams) AS BIGINT)").as("avg_logp_micro"))
+        expr("CAST(" + signedDivSql("s4", "n_bigrams", 100) + " AS BIGINT)")
+          .as("avg_logp_micro"))
       .orderBy("doc_id")
   }
 
@@ -1698,9 +1652,8 @@ object TextAnalysis {
         // the ×100 micro lift rides DECIMAL(38,0) — the langSourceMi
         // convention (advisor r12): an INT64 lift would overflow ~100×
         // earlier (at ~2·10¹¹ docs/source) and silently wrap
-        expr("CAST(CASE WHEN n_docs * ln4n - s4 < 0 THEN -1 ELSE 1 END * " +
-          "((100 * CAST(abs(n_docs * ln4n - s4) AS DECIMAL(38,0))) div n_docs)" +
-          " AS BIGINT)").as("entropy_micro"))
+        expr("CAST(" + signedDivSql("CAST(n_docs * ln4n - s4 AS DECIMAL(38,0))",
+          "n_docs", 100) + " AS BIGINT)").as("entropy_micro"))
       .orderBy("source")
   }
 
@@ -1748,8 +1701,8 @@ object TextAnalysis {
           " div n_docs AS BIGINT)").as("h_lang_micro"),
         expr("CAST(100 * CAST(n_docs * lnn4 - ss4 AS DECIMAL(38,0))" +
           " div n_docs AS BIGINT)").as("h_source_micro"),
-        expr("CAST(CASE WHEN n_docs * lnn4 + sj4 - sl4 - ss4 < 0 THEN -1 ELSE 1 END * " +
-          "(100 * CAST(abs(n_docs * lnn4 + sj4 - sl4 - ss4) AS DECIMAL(38,0)) div n_docs)" +
+        expr("CAST(" + signedDivSql(
+          "CAST(n_docs * lnn4 + sj4 - sl4 - ss4 AS DECIMAL(38,0))", "n_docs", 100) +
           " AS BIGINT)").as("mi_micro"))
   }
 
@@ -1792,7 +1745,7 @@ object TextAnalysis {
       .withColumn("a", coalesce(col("a"), lit(0L)))
       .crossJoin(broadcast(nTot))
     def f(e: String): String = s"CASE WHEN ($e) > 0 THEN ($e) * " +
-      graft.functions.Exact.ln4Sql(e) +
+      ln4Sql(e) +
       " ELSE 0 END"
     // x·ln4(x) stays INT64 to N ≈ 10¹³ token occurrences (the
     // langSourceMi bound — binding here too); the ×200 lift and the
@@ -1966,8 +1919,7 @@ object TextAnalysis {
       .select(col("k").as("n_points"), col("total_tokens"),
         col("vocab_total"),
         expr("CAST(CASE WHEN k * sxx - sx * sx > 0 THEN " +
-          "CASE WHEN k * sxy - sx * sy < 0 THEN -1 ELSE 1 END * " +
-          "((1000000 * abs(k * sxy - sx * sy)) div (k * sxx - sx * sx))" +
+          signedDivSql("k * sxy - sx * sy", "k * sxx - sx * sx") +
           " END AS BIGINT)").as("alpha_micro"))
   }
 }

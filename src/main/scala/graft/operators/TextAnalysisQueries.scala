@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.functions.Exact.{ln4Sql, nibSql}
 
 /** Driver-contract wiring for the text-analysis family. */
 object TextAnalysisQueries {
@@ -10,17 +11,11 @@ object TextAnalysisQueries {
   private[operators] val stopList =
     TextAnalysis.EnStopwords.map(w => s"'$w'").mkString(", ")
 
-  /** SQL for hex-nibble i (0-based) of md5(doc_id) as an integer —
-    * the ascii-arithmetic trick shared with the split/sampling oracles. */
-  private[operators] def nibSql(i: Int, idCol: String = "doc_id"): String = {
-    val a = s"ascii(substr(md5(CAST($idCol AS VARCHAR)), ${i + 1}, 1))"
-    s"($a - CASE WHEN $a >= 97 THEN 87 ELSE 48 END)"
-  }
-
   /** BIGINT from the first `nNib` hex nibbles of a stored hex column —
-    * the general form of [[nibSql]], shared by the minhash-estimator,
-    * fingerprint, and skew oracles (one definition; review finding:
-    * three copies of the ladder had accreted). */
+    * the general form of [[graft.functions.Exact.nibSql]], shared by
+    * the minhash-estimator, fingerprint, and skew oracles (one
+    * definition; review finding: three copies of the ladder had
+    * accreted). */
   private[operators] def hexBigSql(nNib: Int, col: String = "hex"): String =
     (0 until nNib).map { k =>
       val a = s"ascii(substr($col, ${k + 1}, 1))"
@@ -1073,7 +1068,7 @@ object TextAnalysisQueries {
     QueryDef("token_keyness_g2",
       (s, d) => TextAnalysis.tokenKeynessG2(Tables.documents(s, d)), Some {
         def f(e: String) = s"CASE WHEN ($e) > 0 THEN ($e) * " +
-          graft.functions.Exact.ln4Sql(e) +
+          ln4Sql(e) +
           " ELSE 0 END"
         s"""WITH occ AS (
            |  SELECT source, t AS token, CAST(count(*) AS BIGINT) AS a
@@ -1175,7 +1170,6 @@ object TextAnalysisQueries {
     // corpus-scaling twin of zipf_alpha
     QueryDef("heaps_exponent",
       (s, d) => TextAnalysis.heapsExponent(Tables.documents(s, d)), Some {
-        def ln4(e: String) = graft.functions.Exact.ln4Sql(e)
         s"""WITH b AS (SELECT CAST(min(doc_id) AS BIGINT) AS d0,
            |  CAST(max(doc_id) - min(doc_id) + 1 AS BIGINT) AS span
            |  FROM documents),
@@ -1205,7 +1199,7 @@ object TextAnalysisQueries {
            |  FROM (SELECT unnest(range(1, 11)) AS decile) d
            |  LEFT JOIN vd ON vd.decile = d.decile
            |  LEFT JOIN nd ON nd.decile = d.decile),
-           |p AS (SELECT ${ln4("nn")} AS x, ${ln4("v")} AS y, v, nn
+           |p AS (SELECT ${ln4Sql("nn")} AS x, ${ln4Sql("v")} AS y, v, nn
            |      FROM g WHERE v > 0 AND nn > 0),
            |a AS (SELECT CAST(count(*) AS BIGINT) AS k,
            |  CAST(max(nn) AS BIGINT) AS total_tokens,

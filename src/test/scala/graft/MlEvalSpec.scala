@@ -14,7 +14,7 @@ class MlEvalSpec extends SparkSpec {
       rows.toDF("user_id", "event_type")
   }
 
-  /** The 0-255 md5 bucket of a key — the TextAnalysis.md5BucketOf
+  /** The 0-255 md5 bucket of a key — the Exact.md5Bucket
     * arithmetic, recomputed independently. */
   private def bucket(id: Long): Int = {
     val md = java.security.MessageDigest.getInstance("MD5")

@@ -205,6 +205,22 @@ class SessionSpec extends SparkSpec {
     assert(ranker.r.findAllIn(similarity).length == 1)
   }
 
+  test("tooling guard: one home for the exact-arithmetic conventions") {
+    // the plan side reads the division, the ln ladder and the nibble
+    // arithmetic from functions/Exact.scala; DuckDB oracle SQL in
+    // *Queries.scala spells them on its own
+    val plans = sources.filter { case (n, _) =>
+      n.startsWith("graft/operators/") && !n.endsWith("Queries.scala")
+    }
+    Seq("THEN -1 ELSE 1 END", "lit(10000.0) + lit(0.5)", ">= 97").foreach { copy =>
+      assert(plans.collect { case (n, s) if s.contains(copy) => n }.isEmpty, copy)
+    }
+    Seq("ln4", "lnq4", "lnq4x", "exprLn4", "ln4c").foreach { alias =>
+      val homes = sources.collect { case (n, s) if s"def $alias\\b".r.findFirstIn(s).nonEmpty => n }
+      assert(homes.forall(_ == "graft/functions/Exact.scala"), s"def $alias in $homes")
+    }
+  }
+
   test("tooling guard: one commit protocol, one runner for the at-scale scenarios") {
     // every cached or durable directory goes through Materialize.commit
     assert(offenders("_SUCCESS", "graft/operators/Materialize.scala").isEmpty)

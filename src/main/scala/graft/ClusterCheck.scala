@@ -127,7 +127,7 @@ object ClusterCheck {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val clusterMaster =
       sys.env.getOrElse("GRAFT_CLUSTER_MASTER", "local-cluster[2,8,4096]")
-    val timeoutSec = sys.env.getOrElse("GRAFT_QUERY_TIMEOUT", "300").toLong
+    val timeoutSec = QueryRunner.timeoutSec(default = 300)
     val chainN = sys.env.getOrElse("GRAFT_CHAIN_N", "200000").toLong
     val selected = QueryRunner.selected(SparkEntry.queries)
     val indexDir =

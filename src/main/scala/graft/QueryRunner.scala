@@ -5,9 +5,11 @@ import java.util.concurrent.{FutureTask, TimeUnit, TimeoutException}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** How the registry mains pick and run queries: one `GRAFT_ONLY`
-  * selector, one per-query watchdog and one result sink. */
+  * selector, one per-query watchdog (`GRAFT_QUERY_TIMEOUT` seconds) and
+  * one result sink. */
 object QueryRunner {
   val OnlyEnv = "GRAFT_ONLY"
+  val TimeoutEnv = "GRAFT_QUERY_TIMEOUT"
 
   /** The entries of `all` named by `only` (`a,b,c`), or Left(the names
     * `all` lacks). Unset or blank means every entry. */
@@ -26,6 +28,25 @@ object QueryRunner {
       case Right(picked) => picked
       case Left(unknown) =>
         System.err.println(s"$OnlyEnv names not in the registry: ${unknown.mkString(",")}")
+        sys.exit(2)
+    }
+
+  /** `value` as watchdog seconds: `default` when unset or blank,
+    * Left(value) when it is not a positive whole number. */
+  def timeout(value: Option[String], default: Long): Either[String, Long] =
+    value.map(_.trim).filter(_.nonEmpty) match {
+      case None => Right(default)
+      case Some(v) => v.toLongOption.filter(_ > 0).toRight(v)
+    }
+
+  /** [[timeout]] over `GRAFT_QUERY_TIMEOUT` with the caller's default; a
+    * bad value ends the JVM with status 2, naming the variable, as
+    * [[selected]] does. */
+  def timeoutSec(default: Long): Long =
+    timeout(sys.env.get(TimeoutEnv), default) match {
+      case Right(sec) => sec
+      case Left(v) =>
+        System.err.println(s"$TimeoutEnv is not a positive whole number of seconds: $v")
         sys.exit(2)
     }
 

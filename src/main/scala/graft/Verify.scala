@@ -8,7 +8,7 @@ object Verify {
     // GRAFT_ONLY=a,b,c: dump (and emit oracle SQL for) just those
     // queries — local builder iteration; the driver never sets it
     val selected = QueryRunner.selected(SparkEntry.queries)
-    val timeoutSec = sys.env.getOrElse("GRAFT_QUERY_TIMEOUT", "240").toLong
+    val timeoutSec = QueryRunner.timeoutSec(default = 240)
     // GRAFT_MASTER=local-cluster[2,8,4096] runs the whole correctness
     // dump across real forked executor JVMs (see Cluster.scala)
     val spark = Session.build("graft-verify")

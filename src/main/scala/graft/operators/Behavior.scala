@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Behavioral / graph analytics over the star schema — market-basket
   * rules, co-purchase graph structure, customer segmentation, and
@@ -11,8 +10,6 @@ import org.apache.spark.sql.types.DecimalType
   * integer counts, cent/ppm quantization by floor-div on non-negative
   * magnitudes, deterministic ties. */
 object Behavior {
-
-  private val Dec = DecimalType(38, 0)
 
   /** Shared plan/oracle literals (the Search.MmrLambdaPermille rule). */
   val BasketTopK = 20

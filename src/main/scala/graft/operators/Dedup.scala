@@ -197,13 +197,19 @@ object Dedup {
     * non-null by construction (concat of non-null md5 hex chunks), so
     * anti-join null-key semantics — a NULL key never matches, always
     * survives — can never diverge from the oracle's count-over-group
-    * drop. PlanShapeSpec pins both the shape and the no-hint rule. */
-  private[graft] def cappedBandsPlan(b: DataFrame, maxBand: Int): DataFrame = {
-    val viral = b.groupBy(col("band"))
+    * drop. PlanShapeSpec pins both the shape and the no-hint rule.
+    *
+    * `key` names the bucket column: `band` here, `bucket` for
+    * [[Similarity.embeddingNearDup]]'s hot-bucket cap, which is
+    * non-null by construction as well (LshBucket over a non-null
+    * embedding). */
+  private[graft] def cappedBandsPlan(b: DataFrame, maxBand: Int,
+      key: String = "band"): DataFrame = {
+    val viral = b.groupBy(col(key))
       .agg(count(lit(1)).as("bn"))
       .filter(col("bn") > maxBand)
-      .select(col("band"))
-    b.join(viral, Seq("band"), "left_anti")
+      .select(col(key))
+    b.join(viral, Seq(key), "left_anti")
   }
 
   /** Band table with the frequent-band cap applied — the persisted LSH
@@ -222,18 +228,21 @@ object Dedup {
     * the raw table's storage. The whole staging lives inside the thunk
     * the materializer receives: when a durable build already exists the
     * thunk is never evaluated and NOTHING upstream runs — reusing an
-    * index must not cost a corpus scan. */
-  private[graft] def cappedBands(grams: DataFrame, maxBand: Int,
+    * index must not cost a corpus scan. `table` builds the raw table
+    * from `src` and `key` names its bucket column
+    * ([[Similarity.embeddingNearDup]] stages its signature table here). */
+  private[graft] def cappedBands(src: DataFrame, maxBand: Int,
       materialize: (() => DataFrame) => DataFrame =
         t => t().localCheckpoint(),
-      table: DataFrame => DataFrame = bandTable): DataFrame = {
+      table: DataFrame => DataFrame = bandTable,
+      key: String = "band"): DataFrame = {
     var raw: Option[DataFrame] = None
     val capped = materialize { () =>
-      val b = table(grams)
+      val b = table(src)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       b.count() // materialize ONCE before the two consumers below scan it
       raw = Some(b)
-      cappedBandsPlan(b, maxBand)
+      cappedBandsPlan(b, maxBand, key)
     }
     // the materializer contract: the plan it was handed is fully
     // materialized before it returns — so the raw staging table can be
@@ -451,8 +460,7 @@ object Dedup {
   def withMinhashSig(docs: DataFrame): DataFrame = {
     val base = docs.withColumn("w",
       WordCount.tokenArray(col("text")))
-    val grams = when(size(col("w")) >= 3,
-        expr("transform(sequence(1, size(w) - 2), i -> concat_ws(' ', slice(w, i, 3)))"))
+    val grams = when(size(col("w")) >= 3, WordCount.tokenGrams(col("w"), 3))
       .otherwise(array(lower(col("text"))))
     val withG = base.withColumn("g", grams)
     (0 until 8).foldLeft(withG) { (df, j) =>
@@ -845,11 +853,7 @@ object Dedup {
       .select(col("doc_id"),
         WordCount.tokenArray(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
-      .select(col("doc_id"),
-        array_distinct(transform(sequence(lit(0), size(col("w")) - 3),
-          i => concat(element_at(col("w"), i + 1), lit(" "),
-            element_at(col("w"), i + 2), lit(" "),
-            element_at(col("w"), i + 3)))).as("sh")))
+      .select(col("doc_id"), array_distinct(WordCount.tokenGrams(col("w"), 3)).as("sh")))
     // min over the FIXED-WIDTH lowercase-hex prefix, conv hoisted OUTSIDE
     // the array_min (r15 optimization round): 8-char lowercase hex is
     // lexicographically ordered exactly as its numeric value (the

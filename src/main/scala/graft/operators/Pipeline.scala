@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.WordCount.tokenArray
+import graft.operators.WordCount.{tokenArray, tokenGrams}
 import graft.functions.Exact._
 
 /** Training-data pipeline operators beyond filtering/dedup: chunking
@@ -64,9 +64,7 @@ object Pipeline {
   def bigramNovelty(docs: DataFrame): DataFrame = {
     val grams = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(expr("size(w) >= 2"))
-      .select(col("doc_id"), explode(expr(
-        "array_distinct(transform(sequence(1, size(w) - 1), i -> concat_ws(' ', slice(w, i, 2))))"))
-        .as("g"))
+      .select(col("doc_id"), explode(array_distinct(tokenGrams(col("w"), 2))).as("g"))
     val df = grams.groupBy(col("g")).agg(count(lit(1)).as("gram_df"))
     grams.join(df, "g")
       .groupBy(col("doc_id"))

@@ -95,12 +95,6 @@ object SimJoin {
         row_number().over(wOrd).cast("long").as("r"))
   }
 
-  /** τ-prefix of every doc: the first n − ⌈τ·n⌉ + 1 grams under the
-    * canonical order — a map-only filter over the index (ranks kept for
-    * the positional filter). */
-  private def prefix(ranked: DataFrame, num: Int, den: Int): DataFrame =
-    ranked.filter(col("r") <= col("n") - ceilMul(col("n"), num, den) + 1)
-
   /** PPJoin POSITIONAL FILTER (Xiao et al., WWW'08 §3.2), relational
     * form: per candidate pair take the lexicographically FIRST matching
     * rank pair (i, j) = min(struct(rx, ry)). Every doc's grams follow
@@ -113,17 +107,41 @@ object SimJoin {
     * verification join — sound by the argument above, and the naive
     * oracle (no filters at all) re-proves it hash-equal every run.
     * The aggregation doubles as the candidate dedup (replaces a
-    * distinct — same shuffle, strictly more pruning). */
-  private def positionalCandidates(matched: DataFrame)
-      (accept: Column => Column,
-       minMatches: Column = lit(1L)): DataFrame =
-    matched
+    * distinct — same shuffle, strictly more pruning).
+    *
+    * This is the one AllPairs probe all three joins run: every probe
+    * doc's k-extended prefix ([[PrefixExt]]) joins the FULL index on the
+    * gram under `orient` (which docs probe which) and `lengthOk` (the
+    * measure's length filter), the matches carry (na, nb, rx, ry), and
+    * a candidate needs min(k, ⌈τ·na⌉) matches plus a positional bound
+    * passing `accept`. Output (doc_a, doc_b), doc_a the probe doc. */
+  private def probeCandidates(ranked: DataFrame, num: Int, den: Int)
+      (orient: Column, lengthOk: Column, accept: Column => Column): DataFrame = {
+    val pre = ranked.filter(
+      col("r") <= col("n") - ceilMul(col("n"), num, den) + PrefixExt)
+    pre.as("x").join(ranked.as("y"), col("x.g") === col("y.g") && orient && lengthOk)
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        col("x.n").as("na"), col("y.n").as("nb"),
+        col("x.r").as("rx"), col("y.r").as("ry"))
       .groupBy(col("doc_a"), col("doc_b"), col("na"), col("nb"))
       .agg(min(struct(col("rx"), col("ry"))).as("m"),
         count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= minMatches &&
+      .filter(col("cnt") >= least(lit(PrefixExt.toLong), ceilMul(col("na"), num, den)) &&
         accept(lit(1) + least(col("na") - col("m.rx"), col("nb") - col("m.ry"))))
       .select(col("doc_a"), col("doc_b"))
+  }
+
+  /** [[probeCandidates]] with the SMALLER doc of each pair (ties by id)
+    * probing, as jaccard and cosine need; the pair comes back in the
+    * registry's id order (probe orientation is by size). */
+  private def smallerProbeCandidates(ranked: DataFrame, num: Int, den: Int)
+      (lengthOk: Column, accept: Column => Column): DataFrame =
+    probeCandidates(ranked, num, den)(
+      col("x.n") < col("y.n") ||
+        (col("x.n") === col("y.n") && col("x.doc_id") < col("y.doc_id")),
+      lengthOk, accept)
+      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
 
   /** All document pairs with exact gram-set jaccard ≥ num/den, served
     * from a prebuilt [[rankedGramIndex]]. Output (doc_a, doc_b,
@@ -141,22 +159,9 @@ object SimJoin {
     // length filter na ≥ τ·nb prunes cross-size pairs at the join; the
     // positional filter drops pairs whose first shared rank proves the
     // required overlap ⌈num·(na+nb)/(num+den)⌉ unreachable.
-    val pre = ranked.filter(
-      col("r") <= col("n") - ceilMul(col("n"), num, den) + PrefixExt)
-    val matched = pre.as("x").join(ranked.as("y"),
-        col("x.g") === col("y.g") &&
-          (col("x.n") < col("y.n") ||
-            (col("x.n") === col("y.n") && col("x.doc_id") < col("y.doc_id"))) &&
-          col("x.n") * den >= col("y.n") * num)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.n").as("na"), col("y.n").as("nb"),
-        col("x.r").as("rx"), col("y.r").as("ry"))
-    val cand = positionalCandidates(matched)(
-      bound => bound * (num + den) >= (col("na") + col("nb")) * num,
-      minMatches = least(lit(PrefixExt.toLong), ceilMul(col("na"), num, den)))
-      // restore the registry's id ordering (probe orientation is by size)
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
+    val cand = smallerProbeCandidates(ranked, num, den)(
+      col("x.n") * den >= col("y.n") * num,
+      bound => bound * (num + den) >= (col("na") + col("nb")) * num)
     Dedup.acceptedPairs(verify(ranked, cand),
       Dedup.jaccardOfCounts >= num.toDouble / den, Dedup.jaccardOfCounts, "jaccard")
   }
@@ -190,20 +195,13 @@ object SimJoin {
   private val PrefixExt = 3
 
   def containmentJoinFromIndex(ranked: DataFrame, num: Int, den: Int): DataFrame = {
-    val pre = ranked.filter(
-      col("r") <= col("n") - ceilMul(col("n"), num, den) + PrefixExt)
-    val cand0 = pre.as("x").join(ranked.as("y"),
-        col("x.g") === col("y.g") && col("x.doc_id") =!= col("y.doc_id") &&
-          col("y.n") * den >= col("x.n") * num)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.n").as("na"), col("y.n").as("nb"),
-        col("x.r").as("rx"), col("y.r").as("ry"))
     // required overlap ⌈num·na/den⌉; the first-match positional bound
     // holds unchanged (the y side is the FULL index, so every shared
     // gram inside the considered ranks is a join match)
-    val cand = positionalCandidates(cand0)(
-      bound => bound * den >= col("na") * num,
-      minMatches = least(lit(PrefixExt.toLong), ceilMul(col("na"), num, den)))
+    val cand = probeCandidates(ranked, num, den)(
+      col("x.doc_id") =!= col("y.doc_id"),
+      col("y.n") * den >= col("x.n") * num,
+      bound => bound * den >= col("na") * num)
     val contained = col("ni").cast("double") / col("na").cast("double")
     Dedup.acceptedPairs(verify(ranked, cand),
       contained >= num.toDouble / den, contained, "containment")
@@ -228,24 +226,12 @@ object SimJoin {
     * lossless for the cosine geometry too. */
   def cosineJoinFromIndex(ranked: DataFrame, num: Int, den: Int): DataFrame = {
     val (n2, d2) = (num * num, den * den)
-    val pre = ranked.filter(
-      col("r") <= col("n") - ceilMul(col("n"), num, den) + PrefixExt)
-    val matched = pre.as("x").join(ranked.as("y"),
-        col("x.g") === col("y.g") &&
-          (col("x.n") < col("y.n") ||
-            (col("x.n") === col("y.n") && col("x.doc_id") < col("y.doc_id"))) &&
-          col("x.n") * d2 >= col("y.n") * n2)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.n").as("na"), col("y.n").as("nb"),
-        col("x.r").as("rx"), col("y.r").as("ry"))
     // the shared positional stage with the SQUARED acceptance bound
     // (cosine's required overlap τ·√(na·nb) is irrational, so the
     // sound integer test squares both sides)
-    val cand = positionalCandidates(matched)(
-      bound => bound * bound * d2 >= col("na") * col("nb") * n2,
-      minMatches = least(lit(PrefixExt.toLong), ceilMul(col("na"), num, den)))
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
+    val cand = smallerProbeCandidates(ranked, num, den)(
+      col("x.n") * d2 >= col("y.n") * n2,
+      bound => bound * bound * d2 >= col("na") * col("nb") * n2)
     // accept decision in exact integers (squared inequality); the
     // reported similarity is the one place a double appears, and it is
     // the same IEEE sqrt+divide+round both engines compute

@@ -853,27 +853,6 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** The hot-bucket-cap PLAN over a prebuilt signature table — the
-    * exact analogue of [[Dedup.cappedBandsPlan]]: bucket sizes from a
-    * partial-aggregated groupBy (skew-immune — a window over `bucket`
-    * would ship a viral bucket's full membership to one reducer before
-    * dropping it), over-cap rows dropped by a LEFT ANTI join against
-    * the viral-bucket key set. NO broadcast hint on the viral side: its
-    * |viral| < N/maxBucket bound is linear in corpus size, so forcing a
-    * driver-side broadcast is an OOM at scale — AQE broadcasts it at
-    * runtime when genuinely small and falls back to a shuffle anti-join
-    * when not. `bucket` is non-null by construction (LshBucket over a
-    * non-null embedding), so anti-join null-key semantics (NULL never
-    * matches → always survives) cannot diverge from the oracle's
-    * count-over-group drop. */
-  private[graft] def cappedBucketsPlan(sig0: DataFrame, maxBucket: Int): DataFrame = {
-    val viral = sig0.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > maxBucket)
-      .select(col("bucket"))
-    sig0.join(viral, Seq("bucket"), "left_anti")
-  }
-
   /** Embedding-cosine near-duplicates: same-LSH-bucket pairs with
     * rounded cosine >= threshold — completes the dedup taxonomy (exact,
     * MinHash+LSH, char-n-gram, SimHash, embedding-cosine). Scale shape:
@@ -881,31 +860,23 @@ object Similarity {
     * product (~64x candidate reduction); recall tunes via LshPlanes.
     * Approximate by design, like any LSH near-dup pass.
     *
-    * The capped signature table is an INDEX and is built EAGERLY, like
-    * [[Dedup.cappedBands]]: the raw signature table feeds the viral
-    * aggregate, the anti-join probe side, and (through the capped
-    * table) BOTH sides of the pair self-join — left lazy, the embedding
-    * scan + bucket computation re-runs per consumer. Materialize the
-    * raw signatures once, build the capped index through `materialize`
-    * (default eager localCheckpoint; durable parquet via
-    * [[Materialize.table]] in cluster mode), free the raw table. */
+    * The capped signature table is an INDEX, built EAGERLY by
+    * [[Dedup.cappedBands]] with the hot-bucket cap of
+    * [[Dedup.cappedBandsPlan]] on `bucket`: the raw signature table
+    * feeds the viral aggregate, the anti-join probe side, and (through
+    * the capped table) BOTH sides of the pair self-join — left lazy,
+    * the embedding scan + bucket computation re-runs per consumer. */
   def embeddingNearDup(emb: DataFrame, threshold: Double,
       maxBucket: Int = MaxLshBucket,
       corpusCount: Option[Long] = None,
       materialize: (() => DataFrame) => DataFrame =
         t => t().localCheckpoint()): DataFrame = {
     val spark = emb.sparkSession
-    var raw: Option[DataFrame] = None
-    val sig = materialize { () =>
-      val planes = planesFor(corpusCount.getOrElse(Materialize.count(emb)))
-      val sig0 = emb.select(col("vec_id"), col("embedding"),
-          lshBucketCol(spark, col("embedding"), planes).as("bucket"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sig0.count() // materialize ONCE before the consumers below scan it
-      raw = Some(sig0)
-      cappedBucketsPlan(sig0, maxBucket)
-    }
-    raw.foreach(_.unpersist(blocking = false))
+    val sig = Dedup.cappedBands(emb, maxBucket, materialize, table = { e =>
+      val planes = planesFor(corpusCount.getOrElse(Materialize.count(e)))
+      e.select(col("vec_id"), col("embedding"),
+        lshBucketCol(spark, col("embedding"), planes).as("bucket"))
+    }, key = "bucket")
     sig.as("x").join(sig.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),

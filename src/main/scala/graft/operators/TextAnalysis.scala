@@ -4,7 +4,7 @@ import graft.functions.Exact.{hexNibble, ln4, ln4Sql, md5Bucket, md5U20, signedD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.WordCount.tokenArray
+import graft.operators.WordCount.{tokenArray, tokenGrams}
 
 /** Text-analysis operators for a training-data pipeline: language-ID
   * heuristic, quality scoring, token counting (whitespace + BPE-ish
@@ -446,7 +446,7 @@ object TextAnalysis {
     docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"),
-        expr("transform(sequence(1, size(w) - 2), i -> concat_ws(' ', slice(w, i, 3)))").as("g3"))
+        tokenGrams(col("w"), 3).as("g3"))
       .select(col("doc_id"), col("n_tokens"),
         size(col("g3")).cast("long").as("n_grams"),
         size(array_distinct(col("g3"))).cast("long").as("n_distinct"))
@@ -500,16 +500,26 @@ object TextAnalysis {
     * relative to the corpus — runtime stats may broadcast it, but
     * nothing is forced (eval suites grow). */
   def contamination(docs: DataFrame, evalMaxId: Long = 25, n: Int = 8): DataFrame = {
+    val (evalGrams, corpusGrams) = evalSplit(docs, evalMaxId, n)
+    contaminationReport(docs, evalMaxId, corpusGrams.join(evalGrams, "g"))
+  }
+
+  /** The contamination pair's shared input: per-doc DISTINCT word-n-grams,
+    * split at `evalMaxId` into the eval slice's gram set (g) and the
+    * corpus side's (doc_id, g) stream. */
+  private def evalSplit(docs: DataFrame, evalMaxId: Long, n: Int): (DataFrame, DataFrame) = {
     val grams = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(size(col("w")) >= n)
-      .select(col("doc_id"), explode(expr(
-        s"array_distinct(transform(sequence(1, size(w) - ${n - 1}), i -> concat_ws(' ', slice(w, i, $n))))"))
-        .as("g"))
-    val evalGrams = grams.filter(col("doc_id") < evalMaxId)
-      .select(col("g")).distinct()
-    val hits = grams.filter(col("doc_id") >= evalMaxId)
-      .join(evalGrams, "g")
-      .groupBy("doc_id")
+      .select(col("doc_id"), explode(array_distinct(tokenGrams(col("w"), n))).as("g"))
+    (grams.filter(col("doc_id") < evalMaxId).select(col("g")).distinct(),
+      grams.filter(col("doc_id") >= evalMaxId))
+  }
+
+  /** Every doc past the eval slice, flagged, with its count of the
+    * corpus (doc_id, g) rows in `shared` (found in the eval set). */
+  private def contaminationReport(docs: DataFrame, evalMaxId: Long,
+      shared: DataFrame): DataFrame = {
+    val hits = shared.groupBy("doc_id")
       .agg(count(lit(1)).as("n_shared_grams")) // grams are per-doc distinct
     docs.filter(col("doc_id") >= evalMaxId).select(col("doc_id"))
       .join(hits, Seq("doc_id"), "left")
@@ -543,34 +553,20 @@ object TextAnalysis {
       docs: DataFrame, evalMaxId: Long = 25, n: Int = 8,
       bloomItems: Long = 1000000L, bloomBits: Long = 8388608L): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val grams = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
-      .filter(size(col("w")) >= n)
-      .select(col("doc_id"), explode(expr(
-        s"array_distinct(transform(sequence(1, size(w) - ${n - 1}), i -> concat_ws(' ', slice(w, i, $n))))"))
-        .as("g"))
-    val evalGrams = grams.filter(col("doc_id") < evalMaxId)
-      .select(col("g")).distinct()
+    val (evalGrams, corpusGrams) = evalSplit(docs, evalMaxId, n)
     // the eval gram set feeds BOTH the Bloom build subquery and the
     // exact verify join; views give the scalar subquery SQL something
     // to name. Eval suites are tiny relative to the corpus — the double
     // scan is of the small side only.
     evalGrams.createOrReplaceTempView("graft_bloom_eval_grams")
-    grams.filter(col("doc_id") >= evalMaxId)
-      .createOrReplaceTempView("graft_bloom_corpus_grams")
+    corpusGrams.createOrReplaceTempView("graft_bloom_corpus_grams")
     val cand = spark.sql(
       s"""SELECT doc_id, g FROM graft_bloom_corpus_grams
          |WHERE graft_might_contain(
          |  (SELECT graft_bloom_agg(xxhash64(g), ${bloomItems}L, ${bloomBits}L)
          |   FROM graft_bloom_eval_grams),
          |  xxhash64(g))""".stripMargin)
-    val hits = cand.join(evalGrams, "g")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_shared_grams")) // grams are per-doc distinct
-    docs.filter(col("doc_id") >= evalMaxId).select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .na.fill(0L, Seq("n_shared_grams"))
-      .withColumn("contaminated", col("n_shared_grams") > 0)
-      .orderBy("doc_id")
+    contaminationReport(docs, evalMaxId, cand.join(evalGrams, "g"))
   }
 
   /** EXACT SUBSTRING-SPAN DEDUP (the ExactSubstr operator of Lee et
@@ -594,11 +590,7 @@ object TextAnalysis {
     * row per maximal duplicated span, 1-based inclusive token bounds. */
   def substringDedup(docs: DataFrame, k: Int = 8,
       hashWindows: Boolean = false): DataFrame = {
-    val rawWins = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
-      .filter(size(col("w")) >= k)
-      .select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(1, size(w) - ${k - 1}), i -> concat_ws(' ', slice(w, i, $k)))"))
-        .as(Seq("p", "g")))
+    val rawWins = windows(docs.select(col("doc_id"), tokenArray(col("text")).as("w")), k)
     // production path: shuffle 8-byte xxhash64 keys instead of ~40-char
     // window strings — the window-count groupBy and the dup join move
     // ~5× fewer shuffle bytes and compare longs, not strings. A hash
@@ -615,14 +607,7 @@ object TextAnalysis {
       .filter(col("cnt") >= 2)
       .select(col("g"))
     val dup = wins.join(dupWins, "g").select(col("doc_id"), col("p"))
-    // islands: a window chains onto the previous one when their starts
-    // are ≤ k apart (overlap or touch); lag is null on the first row →
-    // the comparison is null → otherwise(1) opens a new span
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("p"))
-    dup
-      .withColumn("ns",
-        when(col("p") - lag(col("p"), 1).over(w) <= k, lit(0)).otherwise(lit(1)))
-      .withColumn("sid", sum(col("ns")).over(w))
+    islands(dup, k)
       .groupBy(col("doc_id"), col("sid"))
       .agg(
         (min(col("p")) + 1).cast("long").as("span_start"),
@@ -653,11 +638,7 @@ object TextAnalysis {
     * redundant content report 0 — the gate decision is explicit). */
   def substringDedupClean(docs: DataFrame, k: Int = 8): DataFrame = {
     val base = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
-    val wins = base
-      .filter(size(col("w")) >= k)
-      .select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(1, size(w) - ${k - 1}), i -> concat_ws(' ', slice(w, i, $k)))"))
-        .as(Seq("p", "g")))
+    val wins = windows(base, k)
     // per-window: occurrence count + globally-first occurrence, one
     // partial-aggregated shuffle on the window text
     val stats = wins.groupBy("g").agg(
@@ -668,11 +649,7 @@ object TextAnalysis {
       .filter(struct(col("doc_id"), col("p")) =!= col("first"))
       .select(col("doc_id"), col("p"))
     // union length of the covering windows per doc (islands over starts)
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("p"))
-    val dupTokens = redundant
-      .withColumn("ns",
-        when(col("p") - lag(col("p"), 1).over(w) <= k, lit(0)).otherwise(lit(1)))
-      .withColumn("sid", sum(col("ns")).over(w))
+    val dupTokens = islands(redundant, k)
       .groupBy(col("doc_id"), col("sid"))
       .agg((max(col("p")) - min(col("p")) + k).cast("long").as("len"))
       .groupBy("doc_id").agg(sum(col("len")).as("n_dup_tokens"))
@@ -683,6 +660,24 @@ object TextAnalysis {
         round(lit(1.0) - col("n_dup_tokens").cast("double") /
           greatest(col("n_tokens"), lit(1L)).cast("double"), 6).as("keep_ratio"))
       .orderBy("doc_id")
+  }
+
+  /** The k-token windows of every (doc_id, w) row with at least k
+    * tokens, as (doc_id, p, g) rows, `p` the 0-based window start. */
+  private def windows(base: DataFrame, k: Int): DataFrame =
+    base.filter(size(col("w")) >= k)
+      .select(col("doc_id"), posexplode(tokenGrams(col("w"), k)).as(Seq("p", "g")))
+
+  /** The islands pass over (doc_id, p) window starts: a window chains
+    * onto the previous one when their starts are ≤ k apart (overlap or
+    * touch); lag is null on a doc's first row → the comparison is null
+    * → otherwise(1) opens a new span. Adds the span id `sid`. */
+  private def islands(starts: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("p"))
+    starts
+      .withColumn("ns",
+        when(col("p") - lag(col("p"), 1).over(w) <= k, lit(0)).otherwise(lit(1)))
+      .withColumn("sid", sum(col("ns")).over(w))
   }
 
   /** Deterministic train/val/test split: the first two hex nibbles of
@@ -1429,9 +1424,7 @@ object TextAnalysis {
   def boilerplateCoverage(docs: DataFrame, n: Int = 5, minDocs: Int = 3): DataFrame = {
     val grams = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(size(col("w")) >= n)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(1, size(w) - ${n - 1}), i -> concat_ws(' ', slice(w, i, $n)))"))
-        .as("g"))
+      .select(col("doc_id"), explode(tokenGrams(col("w"), n)).as("g"))
     val boiler = grams.distinct()
       .groupBy("g").agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDocs)
@@ -1531,9 +1524,7 @@ object TextAnalysis {
   def bigramLmScore(docs: DataFrame): DataFrame = {
     val big = docs.select(col("doc_id"), tokenArray(col("text")).as("w"))
       .filter(size(col("w")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(w) - 1), i -> concat_ws(' ', slice(w, i, 2)))"))
-        .as("g"))
+      .select(col("doc_id"), explode(tokenGrams(col("w"), 2)).as("g"))
       .withColumn("w1", substring_index(col("g"), " ", 1))
     val c2 = big.groupBy("g").agg(count(lit(1)).as("c2"))
       .withColumn("w1", substring_index(col("g"), " ", 1))

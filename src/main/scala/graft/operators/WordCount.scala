@@ -47,6 +47,14 @@ object WordCount {
   def tokenArray(text: Column): Column =
     regexp_extract_all(lower(text), lit(TokenPattern), lit(0))
 
+  /** The word n-grams of a token array `w`, in order, each its `n`
+    * tokens joined by one space: every array-form n-gram in the engine
+    * is this one expression. Precondition: `size(w) >= n` — callers keep
+    * that filter or `when` guard, because below n − 1 tokens `sequence`
+    * counts down and `slice` rejects index 0. */
+  def tokenGrams(w: Column, n: Int): Column =
+    transform(sequence(lit(1), size(w) - (n - 1)), i => concat_ws(" ", slice(w, i, lit(n))))
+
   /** lines/docs → one row per token ("word"); the builtin reference form
     * of what [[combine]] counts. */
   def tokens(docs: DataFrame): DataFrame =

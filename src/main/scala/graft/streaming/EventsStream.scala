@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{DecimalType, StructType}
 import org.apache.spark.sql.Row
 
 /** Structured Streaming equivalents of the batch temporal operators.
@@ -18,14 +18,6 @@ import org.apache.spark.sql.Row
   * same operator library serves both.
   */
 object EventsStream {
-
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
 
   /** Watermarked tumbling-window counts — append-mode safe. */
   def windowedCounts(events: DataFrame): DataFrame =
@@ -96,10 +88,6 @@ object EventsStream {
         col("s_ts") >= col("p_ts") - expr("INTERVAL 7 DAYS"))
       .select(col("p_user").as("user_id"), col("p_ts"), col("s_ts"))
   }
-
-  /** File-source stream over a directory of event parquet. */
-  def readEvents(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(eventSchema).parquet(dir)
 
   /** Memory-sink writer for deterministic local smoke tests. */
   def toMemorySink(df: DataFrame, name: String): DataStreamWriter[Row] =

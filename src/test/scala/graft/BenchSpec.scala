@@ -63,6 +63,32 @@ class BenchSpec extends SparkSpec {
       Map("x:1" -> 1.5, "y" -> 2.0))
   }
 
+  test("both-axis flags are re-timed: a held slowdown still flags, a one-run spike does not") {
+    val prev = Map("held" -> 1.0, "spike" -> 0.3, "calm" -> 1.0)
+    val wall = Map("held" -> 2.0, "spike" -> 0.6, "calm" -> 1.0)
+    val cpu = Map("held" -> 2.1, "spike" -> 1.1, "calm" -> 1.0)
+    val both = Bench.flag(cpu, prev, 1.0, 0.25).keySet
+      .intersect(Bench.flag(wall, prev, 1.0, 0.25).keySet)
+    assert(both == Set("held", "spike"))
+    // stub re-timer: held stays slow on every rep, spike is back to its
+    // baseline from the first rep on; a failed rep (-1) is ignored
+    val reps = mutable.Map[String, Int]().withDefaultValue(0)
+    def retime(k: String): (Double, Double) = {
+      reps(k) += 1
+      k match {
+        case "held" => if (reps(k) == 1) (-1.0, -1.0) else (1.9, 2.0)
+        case "spike" => (0.31, 0.29)
+      }
+    }
+    val (w, c) = Bench.confirm(wall, cpu, both, retime)
+    assert(reps == Map("held" -> 2, "spike" -> 2), "two more runs per flagged entry only")
+    assert(w == Map("held" -> 1.9, "spike" -> 0.31, "calm" -> 1.0))
+    assert(c == Map("held" -> 2.0, "spike" -> 0.29, "calm" -> 1.0))
+    val after = Bench.flag(c, prev, 1.0, 0.25).keySet
+      .intersect(Bench.flag(w, prev, 1.0, 0.25).keySet)
+    assert(after == Set("held"))
+  }
+
   test("JSON writer: every escape round-trips through Jackson, NaN is null") {
     val nasty = "q\"b\\s\nn\tt\u0001u\re"
     val r = mapper.readTree(Json(ListMap("s" -> nasty, nasty -> 1, "nan" -> Double.NaN,

@@ -29,7 +29,7 @@ class PlanShapeSpec extends SparkSpec {
       org.apache.spark.sql.functions.col("embedding"),
       Similarity.lshBucketCol(spark,
         org.apache.spark.sql.functions.col("embedding")).as("bucket"))
-    val bucketPlan = Similarity.cappedBucketsPlan(sig0, Similarity.MaxLshBucket)
+    val bucketPlan = Dedup.cappedBandsPlan(sig0, Similarity.MaxLshBucket, "bucket")
       .queryExecution.analyzed.toString
     assert(!bucketPlan.toLowerCase.contains("hint"),
       s"hot-bucket cap must not force join strategies:\n$bucketPlan")

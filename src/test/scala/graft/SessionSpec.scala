@@ -146,6 +146,15 @@ class SessionSpec extends SparkSpec {
     assert(picked.map(_.keySet) == Right(Set("q1_pricing_summary", "spearman_corr")))
   }
 
+  test("GRAFT_QUERY_TIMEOUT reader: the caller's default when unset or blank, bad values by name") {
+    assert(QueryRunner.timeout(None, 240) == Right(240L))
+    assert(QueryRunner.timeout(Some("  "), 300) == Right(300L))
+    assert(QueryRunner.timeout(Some(" 90 "), 240) == Right(90L))
+    Seq("abc", "1.5", "0", "-3", "9223372036854775808").foreach { bad =>
+      assert(QueryRunner.timeout(Some(bad), 240) == Left(bad), bad)
+    }
+  }
+
   /** (path under src/main/scala, text) of every main source file. */
   private lazy val sources = {
     val root = new File("src/main/scala")
@@ -163,6 +172,7 @@ class SessionSpec extends SparkSpec {
     assert(offenders("listenerBus", "graft/Metrics.scala").isEmpty)
     assert(offenders("FutureTask", "graft/QueryRunner.scala").isEmpty)
     assert(offenders("\"GRAFT_ONLY\"", "graft/QueryRunner.scala").isEmpty)
+    assert(offenders("\"GRAFT_QUERY_TIMEOUT\"", "graft/QueryRunner.scala").isEmpty)
     // env knobs retired as constants (their evidence: BENCH_r03_aqe.json,
     // BENCH_r04_aqe.json, BENCH_r05_noaqe.json, BENCH_r07_noaqe.json) and
     // before/after knobs whose "before" is frozen in ANN_1M.md (OPQ),
@@ -219,6 +229,29 @@ class SessionSpec extends SparkSpec {
       val homes = sources.collect { case (n, s) if s"def $alias\\b".r.findFirstIn(s).nonEmpty => n }
       assert(homes.forall(_ == "graft/functions/Exact.scala"), s"def $alias in $homes")
     }
+  }
+
+  test("tooling guard: one definition per text-similarity core") {
+    // word n-grams are WordCount.tokenGrams; the frequent-bucket cap and
+    // its eager index staging are Dedup's; DuckDB oracle SQL in
+    // *Queries.scala spells its own
+    val plans = sources.filter { case (n, _) =>
+      n.startsWith("graft/operators/") && !n.endsWith("Queries.scala")
+    }
+    def homes(copy: String) = plans.collect { case (n, s) if s.contains(copy) => n }
+    Seq("concat_ws(' ', slice(", "concat_ws(\" \", slice(", "element_at(col(\"w\")").foreach { copy =>
+      assert(homes(copy).forall(_ == "graft/operators/WordCount.scala"), copy)
+    }
+    Seq("join(viral,", "raw = Some(").foreach { copy =>
+      assert(homes(copy) == Seq("graft/operators/Dedup.scala"), copy)
+    }
+    // one k-extended prefix filter and one probe join in SimJoin
+    val simJoin = sources.toMap.apply("graft/operators/SimJoin.scala")
+    Seq("+ PrefixExt)", "col(\"x.r\").as(\"rx\")", "least(col(\"doc_a\"), col(\"doc_b\"))")
+      .foreach { copy =>
+        val q = java.util.regex.Pattern.quote(copy)
+        assert(q.r.findAllIn(simJoin).length == 1, copy)
+      }
   }
 
   test("tooling guard: one commit protocol, one runner for the at-scale scenarios") {

@@ -5,7 +5,7 @@ import java.util.Locale
 import graft.operators.WordCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.functions.{count, explode, lit, spark_partition_id}
+import org.apache.spark.sql.functions.{array_distinct, count, explode, lit, spark_partition_id}
 import org.apache.spark.sql.types.LongType
 
 /** Reference-semantics unit tests for the word-count family:
@@ -120,5 +120,28 @@ class WordCountSpec extends SparkSpec {
     val out = WordCount.combine(lines.iterator).toSeq
     assert(out.size > want.size, "the table never reached its bound")
     assert(out.groupMapReduce(_._1)(_._2)(_ + _) == want)
+  }
+
+  test("tokenGrams: word n-grams match Scala's sliding join, array_distinct keeps first order") {
+    val vocab = Seq("don't", "the", "cat's", "the", "o'", "cat's", "the")
+    val rows = for (n <- 1 to 4; len <- n to n + 3) yield (n, vocab.take(len))
+    val df = rows.toDF("n", "w")
+    for (n <- 1 to 4) {
+      val got = df.filter($"n" === n)
+        .select($"w", WordCount.tokenGrams($"w", n).as("g"),
+          array_distinct(WordCount.tokenGrams($"w", n)).as("d"))
+        .as[(Seq[String], Seq[String], Seq[String])].collect()
+      assert(got.length == 4)
+      got.foreach { case (w, g, d) =>
+        val want = w.sliding(n).map(_.mkString(" ")).toSeq
+        assert(g == want, s"n=$n w=$w")
+        assert(d == want.distinct, s"n=$n w=$w")
+      }
+    }
+    // repeated grams survive in the plain form and collapse in the distinct one
+    val (g, d) = Seq(Seq("a", "b", "a", "b", "a")).toDF("w")
+      .select(WordCount.tokenGrams($"w", 2), array_distinct(WordCount.tokenGrams($"w", 2)))
+      .as[(Seq[String], Seq[String])].head()
+    assert(g == Seq("a b", "b a", "a b", "b a") && d == Seq("a b", "b a"))
   }
 }

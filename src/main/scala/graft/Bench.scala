@@ -19,10 +19,14 @@ import graft.operators.Materialize
   * `count()`) and prints one compact JSON line last:
   * `metric` "cpu_total", `value` (task CPU seconds), `wall_total`,
   * `timing` "result", `cpus`, the capped error and regression maps. The
-  * full record — per-query wall ("queries"), task CPU ("cpu"), index
-  * builds — is printed before it and written to [[DetailFile]] by a run
-  * over the whole registry; the next run at the same sf dir and cpus
-  * diffs against that file.
+  * full record — per-query wall ("queries") and task CPU ("cpu"), both
+  * from [[Metrics.measure]], and index builds ("index_build", each key's
+  * self seconds: its wall minus the builds nested in it) — is printed
+  * before it and written to [[DetailFile]] by a run over the whole
+  * registry; the next run at the same sf dir and cpus diffs against that
+  * file. A detail file written before builds reported self time holds
+  * inclusive build seconds, so against it `index_build_regressions` can
+  * only under-flag.
   *
   * One bad query or a busy host cannot zero the run: a loadavg gate
   * waits out CPU-steal bursts, and each query runs under the watchdog —
@@ -125,8 +129,8 @@ object Bench {
     * probe host speed (SMT contention and frequency scaling inflate task
     * CPU for identical work). It runs at bench start and end (min of 3
     * reps each; rep 1 absorbs JIT), and the regression rule scales the
-    * baseline's CPU by the clamped calibration ratio. Its job groups are
-    * not registry names, so it never counts into cpu_total. */
+    * baseline's CPU by the clamped calibration ratio. It is not a
+    * registry entry, so it never counts into cpu_total. */
   private val CalibTasks = 64
   private val CalibIters = 25000000
 
@@ -135,16 +139,16 @@ object Bench {
     import spark.implicits._
     val iters = CalibIters
     (1 to 3).map { _ =>
-      val before = metrics.group(tag).cpuNs
       QueryRunner.run(spark, tag, timeoutSec) {
-        spark.range(0, CalibTasks, 1, CalibTasks).as[Long].map { i =>
-          var x = i + 0x9e3779b97f4a7c15L
-          var j = 0
-          while (j < iters) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; j += 1 }
-          x
-        }.filter(_ != 0L).count()
+        metrics.measure {
+          spark.range(0, CalibTasks, 1, CalibTasks).as[Long].map { i =>
+            var x = i + 0x9e3779b97f4a7c15L
+            var j = 0
+            while (j < iters) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; j += 1 }
+            x
+          }.filter(_ != 0L).count()
+        }._2.cpuSec
       }.toTry.get
-      (metrics.group(tag).cpuNs - before) / 1e9
     }.min
   }
 
@@ -159,8 +163,8 @@ object Bench {
     waitForQuietHost(cores = math.max(4, Session.cpus / 2), maxWaitSec = 60)
     val spark = Session.build("graft-bench")
     val errors = mutable.LinkedHashMap[String, String]()
-    // executor task CPU per job group (= per query): host CPU-steal
-    // bursts inflate wall time but not task CPU
+    // wall and executor task CPU per query run: host CPU-steal bursts
+    // inflate wall time but not task CPU
     val metrics = Metrics.install(spark)
     val timedCpu = mutable.LinkedHashMap[String, Double]()
     // one run's (wall, task CPU) seconds, -1 when it failed; only the
@@ -168,23 +172,20 @@ object Bench {
     def runOnce(name: String, fn: (SparkSession, String) => DataFrame,
         pass: String): (Double, Double) = {
       val timed = pass == "timed"
-      val cpu0 = metrics.group(name).cpuNs
-      val dt = QueryRunner.run(spark, name, queryTimeoutSec) {
-        val t0 = System.nanoTime()
-        QueryRunner.result(fn(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
+      val (dt, cpu) = QueryRunner.run(spark, name, queryTimeoutSec) {
+        metrics.measure(QueryRunner.result(fn(spark, sfDir)))._2
       } match {
-        case Right(t) => t
+        case Right(m) => (m.wallSec, m.cpuSec)
         case Left(e) =>
           if (timed) errors(name) = e match {
             case _: TimeoutException => "Timeout"
             case c => c.getClass.getSimpleName
           }
-          -1.0
+          (-1.0, -1.0)
       }
       val tag = if (timed) "" else s" ($pass)"
       System.err.println(f"[bench] $name%-28s ${if (dt < 0) "FAIL" else f"$dt%.2fs"}$tag")
-      (dt, if (dt < 0) -1.0 else (metrics.group(name).cpuNs - cpu0) / 1e9)
+      (dt, cpu)
     }
     // Two passes. The warm pass triggers codegen and C2 compilation of
     // every query's generated methods (and pays the index builds);

@@ -1,17 +1,18 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 
 /** Dev tool, two modes.
   *
   * `Explain <query> [sfDir]` prints the formatted physical plan of one
   * registry query (default sf0.01), then runs it twice as a full result
   * ([[QueryRunner.result]], never a pruned `count()`) — once warm
-  * (codegen, index builds) and once audited, and prints the audited pass's wall time and per-stage table:
+  * (codegen, index builds) and once audited under [[Metrics.measure]],
+  * and prints the audited pass's wall time and per-stage table:
   * executor CPU, tasks, input records, shuffle read/write records and
   * the stage's name/callsite — the evidence a plan-shape claim needs
   * when per-query totals cannot localize cost (e.g. the same input
@@ -19,8 +20,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   *
   * `Explain [sfDir]` sweeps EVERY registry query's physical plan (AQE
   * off, default sf0.001) and prints the operator counts that localize
-  * duplicated-subtree waste — parquet scans, exchanges, generates,
-  * object/sort aggregates, sort-merge joins — sorted by scan count. A
+  * duplicated-subtree waste — parquet scans, exchanges (a reused one is
+  * not a second exchange), generates, object/sort aggregates, sort-merge
+  * joins, counted over the plan's nodes and its subqueries' — sorted by
+  * scan count. A
   * query whose plan scans a table far more often than its documented
   * pass count re-evaluates a shared subtree per consumer (the
   * naive_bayes_lang finding: 12 scans where 3 passes suffice).
@@ -36,38 +39,19 @@ object Explain {
       sys.exit(2)
   }
 
-  private final case class St(id: Int, name: String, cpuSec: Double, tasks: Int,
-      recordsIn: Long, shuffleReadRec: Long, shuffleWriteRec: Long)
-
   private def audit(name: String, sfDir: String): Unit = {
     val spark = Session.build("graft-explain")
     val fn = SparkEntry.queries(name)
     fn(spark, sfDir).explain("formatted")
     QueryRunner.result(fn(spark, sfDir)) // warm
-    val stages = new ConcurrentLinkedQueue[St]()
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val i = e.stageInfo
-        val m = i.taskMetrics
-        stages.add(St(i.stageId, i.name, m.executorCpuTime / 1e9, i.numTasks,
-          m.inputMetrics.recordsRead, m.shuffleReadMetrics.recordsRead,
-          m.shuffleWriteMetrics.recordsWritten))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    QueryRunner.result(fn(spark, sfDir))
-    val wall = (System.nanoTime() - t0) / 1e9
-    // stage events are posted async: drain the bus before reading
-    Metrics.drain(spark.sparkContext)
-    spark.sparkContext.removeSparkListener(listener)
-    val ss = stages.asScala.toSeq.sortBy(-_.cpuSec)
-    println(f"== $name: wall $wall%.2f s, stage CPU total ${ss.map(_.cpuSec).sum}%.2f s, " +
+    val (_, m) = Metrics.install(spark).measure(QueryRunner.result(fn(spark, sfDir)))
+    val ss = m.stages.sortBy(-_.cpuNs)
+    println(f"== $name: wall ${m.wallSec}%.2f s, stage CPU total ${m.cpuSec}%.2f s, " +
       s"${ss.size} stages")
     ss.foreach { s =>
       println(f"  stage ${s.id}%4d cpu=${s.cpuSec}%7.2f s tasks=${s.tasks}%3d " +
-        f"in=${s.recordsIn}%10d shufR=${s.shuffleReadRec}%9d " +
-        f"shufW=${s.shuffleWriteRec}%9d  ${s.name.linesIterator.next()}")
+        f"in=${s.recordsIn}%10d shufR=${s.shuffleReadRecords}%9d " +
+        f"shufW=${s.shuffleWriteRecords}%9d  ${s.name}")
     }
     spark.stop()
   }
@@ -77,10 +61,12 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     val rows = SparkEntry.registry.map { q =>
       val counts = try {
-        val plan = q.fn(spark, sfDir).queryExecution.executedPlan.toString
-        def c(p: String) = p.r.findAllIn(plan).length
-        (c("Scan parquet"), c("Exchange"), c("Generate"),
-          c("(?:ObjectHash|Sort)Aggregate"), c("SortMergeJoin"))
+        val plan = q.fn(spark, sfDir).queryExecution.executedPlan
+        def c(p: PartialFunction[SparkPlan, Unit]) = plan.collectWithSubqueries(p).size
+        (c { case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[ParquetFileFormat] => },
+          c { case _: Exchange => }, c { case _: GenerateExec => },
+          c { case _: ObjectHashAggregateExec | _: SortAggregateExec => },
+          c { case _: SortMergeJoinExec => })
       } catch { case _: Throwable => (-1, -1, -1, -1, -1) }
       (q.name, counts)
     }

@@ -8,8 +8,8 @@ import graft.flagship._
 import graft.operators.Materialize
 
 /** The one runner of the at-scale evidence scenarios: one `key=value`
-  * parser, one cached-corpus helper, one stage timer and one JSON
-  * record per run.
+  * parser, one cached-corpus helper, one stage timer ([[Metrics.measure]])
+  * and one JSON record per run.
   *
   * Usage: scripts/run.sh graft.Flagship <scenario> [key=value …]
   *
@@ -17,7 +17,8 @@ import graft.operators.Materialize
   * unknown scenario or key exits 2 naming it. The record is the last
   * stdout line: `metric`, the scenario's fields, `stages` (per stage
   * wall, executor CPU, shuffle write and spill), `index_build` (the
-  * [[Materialize.buildTimes]] this run added) and `cpus`.
+  * [[Materialize.buildTimes]] this run added: each build's self seconds,
+  * its wall minus the builds nested in it) and `cpus`.
   */
 object Flagship {
 
@@ -86,32 +87,25 @@ object Flagship {
         s"scenarios: ${scenarios.keys.mkString(", ")}")
     }
 
-  /** One stage: wall seconds and the task metrics its body added. */
-  final case class Stage(wall: Double, m: Metrics.Totals)
-
   /** What a scenario gets: its session, its keys, the corpus cache and
     * the stage timer. */
   final class Ctx(val spark: SparkSession, args: Map[String, String]) {
     private[Flagship] val metrics = Metrics.install(spark)
-    val stages = scala.collection.mutable.LinkedHashMap[String, Stage]()
+    val stages = scala.collection.mutable.LinkedHashMap[String, Metrics.Totals]()
 
     def str(k: String): String = args(k)
     def long(k: String): Long = args(k).toLong
     def int(k: String): Int = args(k).toInt
 
-    /** Run `body` as stage `name` (timed, its task metrics measured). */
+    /** Run `body` as stage `name` under [[Metrics.measure]]. */
     def stage[T](name: String)(body: => T): T = {
-      val ((r, wall), m) = metrics.measure {
-        val t0 = System.nanoTime()
-        val r = body
-        (r, (System.nanoTime() - t0) / 1e9)
-      }
-      stages(name) = Stage(wall, m)
-      println(f"stage $name%-22s wall $wall%8.2f s   cpu ${m.cpuSec}%8.2f s")
+      val (r, m) = metrics.measure(body)
+      stages(name) = m
+      println(f"stage $name%-22s wall ${m.wallSec}%8.2f s   cpu ${m.cpuSec}%8.2f s")
       r
     }
 
-    def wall(name: String): Double = stages(name).wall
+    def wall(name: String): Double = stages(name).wallSec
 
     /** `$work/<name>_<params…>`, written once by `write` (which gets the
       * temp dir to fill) through [[Materialize.commit]]. The name and
@@ -128,9 +122,9 @@ object Flagship {
     val c = new Ctx(spark, args)
     try {
       val fields = sc.run(c)
-      val stages = c.stages.map { case (n, s) => n -> ListMap("wall_s" -> s.wall,
-        "cpu_s" -> s.m.cpuSec, "shuffle_write_mb" -> s.m.shuffleWriteBytes / 1e6,
-        "spill_mb" -> (s.m.memSpillBytes + s.m.diskSpillBytes) / 1e6) }
+      val stages = c.stages.map { case (n, s) => n -> ListMap("wall_s" -> s.wallSec,
+        "cpu_s" -> s.cpuSec, "shuffle_write_mb" -> s.shuffleWriteBytes / 1e6,
+        "spill_mb" -> (s.memSpillBytes + s.diskSpillBytes) / 1e6) }
       val built = Materialize.buildTimes.filter { case (k, v) => !builtBefore.get(k).contains(v) }
       Json(ListMap("metric" -> sc.metric) ++ fields ++ ListMap("stages" -> stages,
         "index_build" -> ListMap(built.toSeq.sortBy(-_._2): _*), "cpus" -> Session.cpus))

@@ -148,7 +148,7 @@ object Ann {
     val rerun = c.stage("pca_iters_6_rerun")(Similarity.embeddingPcaPower(emb, iters = 6).collect())
     require(orbits.last.map(_.toSeq).toSeq == rerun.map(_.toSeq).toSeq,
       "PCA integer orbit must reproduce row-for-row across runs")
-    def marginal(f: graft.Flagship.Stage => Double) =
+    def marginal(f: graft.Metrics.Totals => Double) =
       (2 to 6).map(k => f(c.stages(s"pca_iters_$k")) - f(c.stages(s"pca_iters_${k - 1}")))
     val jl = c.stage("jl_audit")(Similarity.randomProjectionAudit(emb).collect()).map { r =>
       ListMap(Seq("stride", "n_pairs", "mean_ratio_ppm", "min", "max", "within20_permille")
@@ -168,8 +168,8 @@ object Ann {
         "(generate with scripts/run.sh graft.GenSf /tmp/sf1 10)")
       None
     }
-    Seq("n_vectors" -> c.long("n"), "pca_pass_wall_s" -> marginal(_.wall),
-      "pca_pass_cpu_s" -> marginal(_.m.cpuSec), "orbit_deterministic" -> true,
+    Seq("n_vectors" -> c.long("n"), "pca_pass_wall_s" -> marginal(_.wallSec),
+      "pca_pass_cpu_s" -> marginal(_.cpuSec), "orbit_deterministic" -> true,
       "jl" -> jl.toSeq, "split_drift_rows" -> splitDrift.length, "events" -> events)
   }
 }

@@ -42,7 +42,7 @@ object RankDim {
     val rows = c.stage("rank")(Behavior.rfmFrom(dim).collect())
     val total = rows.map(_.getLong(3)).sum
     require(total == n, s"segment counts must cover every row: $total != $n")
-    val m = c.stages("rank").m
+    val m = c.stages("rank")
     Seq("n_rows" -> n, "wall_sec" -> c.wall("rank"), "cpu_sec" -> m.cpuSec,
       "segments" -> rows.length, "mem_spill_mb" -> (m.memSpillBytes >> 20),
       "disk_spill_mb" -> (m.diskSpillBytes >> 20), "peak_task_mem_mb" -> (m.peakExecMem >> 20))

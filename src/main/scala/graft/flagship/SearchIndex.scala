@@ -80,7 +80,7 @@ object SearchIndex {
       .agg(count(lit(1)), sum(col("n_tokens")), sum(col("n_docs"))).head())
 
     Seq("n_docs" -> nDocs, "n_postings" -> nPost,
-      "index_build_sec" -> c.stages.get("index_build").map(_.wall),
+      "index_build_sec" -> c.stages.get("index_build").map(_.wallSec),
       "index_reused" -> !c.stages.contains("index_build"), "doc_lengths_sec" -> c.wall("doc_lengths"),
       "bm25" -> rowsSec(nBm, c.wall("bm25")), "keyword" -> rowsSec(nKw, c.wall("keyword")),
       "phrase" -> rowsSec(nPh, c.wall("phrase")),

@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Flagship.{Ctx, Stage}
+import graft.Flagship.Ctx
 import graft.operators.TextAnalysis
 
 /** The substring family at ~1 GB, on one seeded corpus.
@@ -69,8 +69,8 @@ object Substring {
   private def corpus(c: Ctx) = NearDup.corpus(c, "substr_corpus", genCorpus)
 
   /** A stage's wall, shuffle write and task CPU as record fields. */
-  private def cost(s: Stage) = Seq("sec" -> s.wall,
-    "shuffle_gb" -> s.m.shuffleWriteBytes / 1e9, "cpu_sec" -> s.m.cpuSec)
+  private def cost(s: graft.Metrics.Totals) = Seq("sec" -> s.wallSec,
+    "shuffle_gb" -> s.shuffleWriteBytes / 1e9, "cpu_sec" -> s.cpuSec)
 
   def substr(c: Ctx): Seq[(String, Any)] = {
     val (docs, nDocs, bytes) = corpus(c)

@@ -32,20 +32,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Materialize {
   val DirConf = "spark.graft.index.dir"
 
-  /** Wall-clock seconds spent building each index this JVM — the
-    * amortized-away cost the bench's warm pass would otherwise hide.
-    * Bench reports the snapshot as "index_build" so the one-time build
-    * price is visible next to the steady-state query times. */
+  /** Self seconds spent building each index this JVM: the build's wall
+    * minus the wall of the builds nested inside it, so the keys sum to
+    * the time spent building — the amortized-away cost the bench's warm
+    * pass would otherwise hide. Bench reports the snapshot as
+    * "index_build" so the one-time build price is visible next to the
+    * steady-state query times. */
   private val buildSecs =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
+
+  /** Wall seconds of the builds nested in the one running on this
+    * thread: a build forces the builds it reads on its own thread. */
+  private val nestedSecs = ThreadLocal.withInitial[Double](() => 0.0)
 
   /** Runs every build [[memo]] forces (the benchmark's probe tags a job
     * as an index build by this frame on its call site). */
   private[operators] def timedBuild[T](key: String)(f: => T): T = {
+    val outer = nestedSecs.get
+    nestedSecs.set(0.0)
     val t0 = System.nanoTime()
-    val r = f
-    buildSecs.put(key, (System.nanoTime() - t0) / 1e9)
-    r
+    try {
+      val r = f
+      buildSecs.put(key, (System.nanoTime() - t0) / 1e9 - nestedSecs.get)
+      r
+    } finally nestedSecs.set(outer + (System.nanoTime() - t0) / 1e9)
   }
 
   def buildTimes: Map[String, Double] = {
@@ -60,7 +70,7 @@ object Materialize {
   private val evictionHooked = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** The one in-JVM index memo: `build` runs at most once per
-    * (session, content key), its wall time lands in [[buildTimes]]
+    * (session, content key), its self time lands in [[buildTimes]]
     * under `key`, and every later call gets the same value.
     *
     * The map stores a lazy holder and the build is forced OUTSIDE

@@ -500,8 +500,8 @@ class DedupSimilaritySpec extends SparkSpec {
     try {
       assert(m.measure(Similarity.lshTopK(fresh, 4, 3))._2.cpuNs > 0,
         "the first build counts the corpus")
-      assert(m.measure(Similarity.lshTopK(fresh, 4, 3))._2 == Metrics.Totals.Zero,
-        "a second build ran a Spark job")
+      val again = m.measure(Similarity.lshTopK(fresh, 4, 3))._2
+      assert(again.cpuNs == 0L && again.stages.isEmpty, s"a second build ran a Spark job: $again")
     } finally spark.sparkContext.removeSparkListener(m)
   }
 
@@ -523,13 +523,19 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("index memo: builds nest to any depth, each key builds once per session") {
     var runs = 0
-    def build(depth: Int): Int = Materialize.memo(spark, s"memo-spec-nest:$depth") {
+    val session = spark // started before the clock
+    def build(depth: Int): Int = Materialize.memo(session, s"memo-spec-self:$depth") {
       runs += 1
-      if (depth == 0) 0 else build(depth - 1) + 1
+      if (depth == 0) { Thread.sleep(50); 0 } else build(depth - 1) + 1
     }
+    val t0 = System.nanoTime()
     assert(build(64) == 64 && runs == 65)
+    val wall = (System.nanoTime() - t0) / 1e9
     val snapshot = Materialize.buildTimes
-    assert((0 to 64).forall(d => snapshot.contains(s"memo-spec-nest:$d")))
+    val chain = (0 to 64).map(d => snapshot.get(s"memo-spec-self:$d"))
+    assert(chain.forall(_.nonEmpty))
+    // self times: the leaf's sleep counts once, not once per enclosing build
+    assert(chain.flatten.sum <= wall, s"builds sum to ${chain.flatten.sum} s in $wall s of wall")
     assert(build(64) == 64 && runs == 65, "a memoized build ran again")
     assert(Materialize.buildTimes == snapshot)
   }

@@ -90,19 +90,21 @@ class SessionSpec extends SparkSpec {
     assert(r.swap.exists(_.getMessage == "boom"), r)
   }
 
-  test("metrics: measure returns the body's task deltas, groups count their own jobs") {
+  test("metrics: measure returns the body's wall, task deltas and stage rows") {
     val m = Metrics.install(spark)
     try {
       // a fresh plan per run: a re-run Dataset would reuse its map output
       def shuffled = spark.range(0, 20000, 1, 4).selectExpr("id % 7 AS k").groupBy("k").count()
       val (rows, d) = m.measure(shuffled.collect().length)
       assert(rows == 7)
-      assert(d.cpuNs > 0 && d.shuffleWriteBytes > 0, d)
-      assert(m.measure(())._2.cpuNs == 0L, "no work, no delta")
-      assert(m.group("session-spec-metrics") == Metrics.Totals.Zero)
-      QueryRunner.run(spark, "session-spec-metrics", 60)(shuffled.collect())
-      val g = m.group("session-spec-metrics")
-      assert(g.cpuNs > 0 && g.shuffleWriteBytes > 0, g)
+      assert(d.cpuNs > 0 && d.shuffleWriteBytes > 0 && d.wallSec > 0, d)
+      // the stage rows come from the same task events as the totals
+      assert(d.stages.size >= 2 && d.stages.map(_.cpuNs).sum == d.cpuNs, d)
+      val idle = m.measure(())._2
+      assert(idle.cpuNs == 0L && idle.stages.isEmpty, s"no work, no delta: $idle")
+      // Bench's path: a body measured on the watchdog's worker thread
+      val g = QueryRunner.run(spark, "session-spec-metrics", 60)(m.measure(shuffled.collect())._2)
+      assert(g.exists(t => t.cpuNs > 0 && t.shuffleWriteBytes > 0 && t.stages.size >= 2), g)
     } finally spark.sparkContext.removeSparkListener(m)
   }
 
@@ -185,6 +187,15 @@ class SessionSpec extends SparkSpec {
         "LOG", "STREAM_SHUFFLE", "STREAM_PROFILE").map("GRAFT_" + _).foreach { knob =>
       assert(offenders(knob, "").isEmpty, knob)
     }
+  }
+
+  test("tooling guard: one metrics listener, no job-group reads") {
+    // task metrics come from graft.Metrics; the index memo's eviction
+    // hook is the one other listener
+    val listener = "\\b(?:extends|with|new)\\s+(?:org\\.apache\\.spark\\.scheduler\\.)?SparkListener\\b".r
+    val listeners = sources.flatMap { case (n, s) => Seq.fill(listener.findAllIn(s).length)(n) }
+    assert((listeners.sorted, offenders("\"spark.jobGroup.id\"", "")) ==
+      (Seq("graft/Metrics.scala", "graft/operators/Materialize.scala"), Nil))
   }
 
   test("tooling guard: one AvailableNow replay, stream progress read off the query") {
